@@ -91,7 +91,7 @@ def bloom_position_frame(
     shuffles). Positions are a MERGEABLE SET: the bitset is an OR-fold,
     and OR-folding bitsets ≡ distinct over the position union, which is
     what lets the maintenance store (``streaming/incremental.py::
-    incremental_bloom``) equal a from-scratch build exactly —
+    bloom_store``) equal a from-scratch build exactly —
     position-SET equality, not an approximation."""
     return (
         df.select(
@@ -130,7 +130,7 @@ def bloom_size_bits(
     (2^23 bits = 256k words ≈ 2.6 MB of JSON) — past it this
     driver-inlined representation is the wrong tool and the bitset
     should live in the maintained position store
-    (``streaming/incremental.py::incremental_bloom``) or a broadcast
+    (``streaming/incremental.py::bloom_store``) or a broadcast
     artifact, not a plan literal. Above the cap the filter degrades
     gracefully (higher FP, never false negatives), and the exact
     verify join keeps the composed result bit-identical regardless —

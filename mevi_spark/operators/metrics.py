@@ -117,7 +117,7 @@ def per_query_metrics(
     """The per-``(k, query)`` metric contributions ``(k, q_recall,
     q_mrr, q_hit)`` that :func:`evaluate_run` averages — exposed
     separately so the streaming maintenance twin
-    (``streaming/incremental.py::incremental_eval_metrics``) can fold
+    (``streaming/incremental.py::eval_metrics_store``) can fold
     them into mergeable per-batch partials through the SAME rules
     (gt-denominator recall, min-rank MRR, zero-positive queries count
     in the denominator)."""

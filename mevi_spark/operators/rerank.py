@@ -82,6 +82,14 @@ def coarse_to_fine(
     # (query_id, doc_id) exchange of every candidate row AND a second
     # query_id exchange for the window. Bit-identical results: max is
     # order-independent and the window tie-breaks on doc_id.
+    #
+    # The price: the explicit repartition(query_id) runs BEFORE the
+    # aggregation, so the max is no longer partially aggregated
+    # map-side — every candidate row, duplicates included, crosses the
+    # exchange — and aggregation parallelism is capped at the number
+    # of distinct queries. Re-measure this shape when docs repeat
+    # heavily across predicted clusters or the query set is a few hot
+    # queries; both make the default two-exchange plan cheaper.
     scored = scored.repartition(query_id).groupBy(query_id, doc_id).agg(
         F.max("score").alias("score")
     )

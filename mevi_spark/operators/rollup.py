@@ -8,9 +8,9 @@ same shape (counts and scaled-long sums are associative and
 commutative, so merging is a plain keyed sum). The batch query
 (``plans/temporal_ops.py::events_hypertable_rollup``) computes
 partials over the whole table and finalizes; the incremental refresh
-(``streaming/incremental.py::incremental_rollup``) computes them per
-micro-batch and maintains the merged state — same partials, proven by
-the shared oracle.
+(``streaming/incremental.py::rollup_store``, a ``PartialStore``)
+computes them per micro-batch and maintains the merged state — same
+partials, proven by the shared oracle.
 """
 
 from __future__ import annotations

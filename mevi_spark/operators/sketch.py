@@ -502,7 +502,7 @@ def kmv_merge(sketches: DataFrame, k: int) -> DataFrame:
     already-pruned sketches, across any number of partial dirs) into
     ONE bottom-k sketch: dedup on the hash, take the k smallest. The
     shared kernel behind :func:`kmv_bottom_k` and the maintenance
-    store's merge-on-read (``streaming/incremental.py::kmv_state``) —
+    store's merge-on-read (``streaming/incremental.py::kmv_store``) —
     one definition, so the maintained state cannot drift from the
     batch construction. ``orderBy().limit(k)`` plans as
     TakeOrderedAndProject (per-partition heap + driver merge of k·P
@@ -648,7 +648,7 @@ def kmv_merge_grouped(
     grouped counterpart of :func:`kmv_merge`, and the SHARED kernel
     behind :func:`kmv_bottom_k_grouped` (batch) and the maintenance
     store's merge-on-read (``streaming/incremental.py::
-    grouped_kmv_state``): one definition, so the maintained per-stratum
+    grouped_kmv_store``): one definition, so the maintained per-stratum
     sample cannot drift from the batch construction. Dedup is on
     (group, hh) — the same key may legitimately appear under several
     groups; the rank window sees only the pruned union (≤ k·parts per

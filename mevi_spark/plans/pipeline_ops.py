@@ -2653,7 +2653,7 @@ def rake_cells(
     """Driver-side re-rake of a collected (lang, source, n) cell list
     against the ``_MIX_WEIGHTS`` targets — ONE definition shared by
     the batch query above and the maintenance read
-    (``streaming/incremental.py::mixture_cells_state`` → re-rake), so
+    (``streaming/incremental.py::mixture_cells_store`` state → re-rake), so
     the maintained weights cannot drift from the batch answer (or
     their shared oracle)."""
     from mevi_spark.operators.raking import ipf_weights6
@@ -2689,7 +2689,7 @@ def curriculum_scored(docs: DataFrame) -> DataFrame:
     """``(doc_id, score)`` under the curriculum's quality kernel
     (stopword ratio, rounded 6dp) — ONE definition shared by the batch
     ordering above and the maintenance store's per-batch scoring
-    (``streaming/incremental.py::incremental_curriculum``), so the
+    (``streaming/incremental.py::curriculum_store``), so the
     maintained order cannot drift from the batch answer (or their
     shared oracle)."""
     from mevi_spark.functions.text import norm_tokens
@@ -2745,7 +2745,8 @@ def ranked_with_bounds(
     boundary list — the shared kernel between the one-shot ordering
     (boundaries sketched from the same frame) and the maintenance
     store (boundaries pinned in a sidecar, refined by re-split:
-    ``streaming/incremental.py::curriculum_state``). The output is
+    ``streaming/incremental.py::curriculum_store``, served by
+    ``curriculum_state``). The output is
     invariant to the boundary choice — boundaries only balance the P
     parallel windows; bucket = count of boundaries strictly below the
     score, so every score in bucket b orders before every score in
@@ -2896,23 +2897,22 @@ def append_shuffle_blocks(
 
     State is one dir per batch (``b<batch_id:09>``) holding that
     batch's assignment rows plus a ``_meta.json`` with its ``(start,
-    n)``. Replay-idempotent with no merge step, like the rollup sink:
+    n)``. Replay-idempotent with no merge step, like the partial store:
     a replayed batch recomputes the SAME start (sum of strictly-prior
     batch dirs' counts — its own possibly-half-written dir never
     feeds its offset) and overwrites its own dir with identical rows.
     Per batch: one P-way window over the BATCH plus a P-row collect —
     history is never read, let alone reshuffled. Returns the batch's
     row count."""
-    import glob
     import json
     import os
-    import re
+
+    from mevi_spark.streaming.incremental import PartialStore
 
     bid = int(batch_id)
     start = 0
-    for d in sorted(glob.glob(os.path.join(state_dir, "b*"))):
-        m = re.fullmatch(r"b(\d{9})", os.path.basename(d))
-        if m is None or int(m.group(1)) >= bid:
+    for b, d in PartialStore.batch_dirs(state_dir):
+        if b >= bid:
             continue
         meta_path = os.path.join(d, "_meta.json")
         try:
@@ -2925,7 +2925,7 @@ def append_shuffle_blocks(
                 f" stream from its checkpoint"
             ) from e
     assigned, n = shuffle_block_assign(batch, start, n_buckets, block)
-    out_dir = os.path.join(state_dir, f"b{bid:09d}")
+    out_dir = PartialStore.batch_dir(state_dir, bid)
     assigned.write.mode("overwrite").parquet(out_dir)
     with open(os.path.join(out_dir, "_meta.json"), "w", encoding="utf-8") as fh:
         json.dump({"start": start, "n": int(n)}, fh)
@@ -2934,15 +2934,9 @@ def append_shuffle_blocks(
 
 def read_shuffle_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """The maintained assignment: union of the per-batch dirs."""
-    import glob
-    import os
-    import re
+    from mevi_spark.streaming.incremental import PartialStore
 
-    dirs = sorted(
-        d
-        for d in glob.glob(os.path.join(state_dir, "b*"))
-        if re.fullmatch(r"b(\d{9})", os.path.basename(d))
-    )
+    dirs = [d for _, d in PartialStore.batch_dirs(state_dir)]
     if not dirs:
         raise FileNotFoundError(f"no shuffle-block state under {state_dir}")
     return spark.read.parquet(*dirs)

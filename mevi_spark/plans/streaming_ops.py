@@ -58,6 +58,17 @@ def _drained(df: DataFrame, base: str, sink: str | None = None) -> DataFrame:
     return out
 
 
+def _fold_drained(spark: SparkSession, store, what: str) -> None:
+    """Fold a drained partial store and assert the state-growth bound:
+    at least one batch folded, no live batch dir left."""
+    if store.compact(spark) < 1:
+        raise AssertionError(f"compaction folded no {what}")
+    if store.live():
+        raise AssertionError(
+            f"live batch dirs survived compaction: {store.live()}"
+        )
+
+
 def _stage_time_slices(
     df: DataFrame, ts_col: str, n_slices: int, in_dir: str
 ) -> str:
@@ -414,20 +425,15 @@ def streaming_hypertable_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     next-round #7 — proving ``events_hypertable_rollup``'s "partials
     are mergeable" claim end to end): events arrive in three
     time-ordered slices, each micro-batch materializes its GROUPING
-    SETS partials (replay-idempotent per-batch dirs), then
-    ``compact_rollup`` folds them into one published base — after
+    SETS partials (replay-idempotent per-batch dirs), then the
+    store's compaction folds them into one published base — after
     which the state is buckets×types rows in ONE dir regardless of
     batch count (asserted here: fold count and zero live dirs, the
     eviction bound). The drained, compacted state must equal the batch
     rollup — the identical oracle ``events_hypertable_rollup``
     carries."""
     from mevi_spark.operators.rollup import finalize_rollup
-    from mevi_spark.streaming import incremental_rollup
-    from mevi_spark.streaming.incremental import (
-        _rollup_parts,
-        compact_rollup,
-        rollup_state,
-    )
+    from mevi_spark.streaming import rollup_store
 
     base = _tmp("htref")
     ev = load_table(spark, sf_dir, "events").select(
@@ -437,15 +443,10 @@ def streaming_hypertable_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_parquet_source(
         spark, glob, ev.schema, max_files_per_trigger=1
     )
-    q = incremental_rollup(stream, f"{base}/out", f"{base}/ckpt")
-    q.awaitTermination()
-    folded = compact_rollup(spark, f"{base}/out")
-    if folded < 1:
-        raise AssertionError("compaction folded no batch partials")
-    _, _, live = _rollup_parts(f"{base}/out")
-    if live:
-        raise AssertionError(f"live batch dirs survived compaction: {live}")
-    return _drained(finalize_rollup(rollup_state(spark, f"{base}/out")), base)
+    store = rollup_store(f"{base}/out")
+    store.start(stream, f"{base}/ckpt").awaitTermination()
+    _fold_drained(spark, store, "batch partials")
+    return _drained(finalize_rollup(store.state(spark)), base)
 
 
 def _lexical_oracle() -> str:
@@ -473,9 +474,9 @@ def streaming_lexical_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25/TF-IDF corpus statistics maintained under ingest — the
     lexical tier's streaming twin (VERDICT r10 next-round #4): the
     documents table arrives in three doc-id-interleaved slices,
-    :func:`~mevi_spark.streaming.incremental.incremental_lexical_stats`
+    :func:`~mevi_spark.streaming.incremental.lexical_store`
     materializes each batch's mergeable (df, n_docs, sum_dl) partial,
-    ``compact_lexical`` folds the drained dirs into one published base
+    its compaction folds the drained dirs into one published base
     (asserted: fold count ≥ 1 and zero live dirs — the state-growth
     bound), and the drained stats must equal the one-shot batch
     statistics the ``bm25_search`` oracle scores with — the SAME
@@ -484,12 +485,7 @@ def streaming_lexical_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: top-40 terms by (df DESC, term ASC) with the corpus-level
     (n_docs, avgdl) carried on every row so one hash pins all three
     statistics."""
-    from mevi_spark.streaming.incremental import (
-        _rollup_parts,
-        compact_lexical,
-        incremental_lexical_stats,
-        lexical_state,
-    )
+    from mevi_spark.streaming.incremental import lexical_store
 
     base = _tmp("lexstats")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -500,15 +496,10 @@ def streaming_lexical_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_parquet_source(
         spark, f"{base}/in/s*", docs.schema, max_files_per_trigger=1
     )
-    q = incremental_lexical_stats(stream, f"{base}/out", f"{base}/ckpt")
-    q.awaitTermination()
-    folded = compact_lexical(spark, f"{base}/out")
-    if folded < 1:
-        raise AssertionError("compaction folded no lexical partials")
-    _, _, live = _rollup_parts(f"{base}/out")
-    if live:
-        raise AssertionError(f"live partial dirs survived compaction: {live}")
-    st = lexical_state(spark, f"{base}/out").localCheckpoint(eager=True)
+    store = lexical_store(f"{base}/out")
+    store.start(stream, f"{base}/ckpt").awaitTermination()
+    _fold_drained(spark, store, "lexical partials")
+    st = store.state(spark).localCheckpoint(eager=True)
     sent = st.filter(F.col("term").isNull()).first()
     top = (
         st.filter(F.col("term").isNotNull())
@@ -564,10 +555,7 @@ def streaming_bm25_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     per query batch and touching a GB-scale df table."""
     from mevi_spark.functions.text import norm_tokens
     from mevi_spark.plans.pipeline_ops import bm25_score_with_stats
-    from mevi_spark.streaming.incremental import (
-        incremental_lexical_stats,
-        lexical_state,
-    )
+    from mevi_spark.streaming.incremental import lexical_store
 
     base = _tmp("bm25serve")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -578,9 +566,9 @@ def streaming_bm25_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_parquet_source(
         spark, f"{base}/in/s*", docs.schema, max_files_per_trigger=1
     )
-    q = incremental_lexical_stats(stream, f"{base}/out", f"{base}/ckpt")
-    q.awaitTermination()
-    st = lexical_state(spark, f"{base}/out").localCheckpoint(eager=True)
+    store = lexical_store(f"{base}/out")
+    store.start(stream, f"{base}/ckpt").awaitTermination()
+    st = store.state(spark).localCheckpoint(eager=True)
     sent = st.filter(F.col("term").isNull()).first()
     n, avgdl = float(sent["n_docs"]), float(sent["sum_dl"]) / float(
         sent["n_docs"]
@@ -639,9 +627,9 @@ def streaming_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     contributions through the SHARED rules
     (``operators/metrics.py::per_query_metrics`` — gt-denominator
     recall, min-rank MRR) into a mergeable per-cutoff partial of
-    scaled-long sums, and writes it to the rollup store's
-    replay-idempotent per-batch dir. Drained state folded through
-    ``compact_eval_metrics`` (asserted: ≥1 fold, zero live dirs) then
+    scaled-long sums, and writes it to the partial store's
+    replay-idempotent per-batch dir. Drained state folded through the
+    store's compaction (asserted: ≥1 fold, zero live dirs) then
     finalized must equal the one-shot evaluation of the full query set
     — the decimal-stabilized twin of ``retrieval_eval_metrics``'s own
     oracle. 100 TB shape: per-wave cost is wave × corpus scoring (the
@@ -653,12 +641,7 @@ def streaming_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from mevi_spark.operators.topk import exact_topk_join
     from mevi_spark.plans.retrieval import _docs, _queries
-    from mevi_spark.streaming.incremental import (
-        _rollup_parts,
-        compact_eval_metrics,
-        eval_metrics_state,
-        incremental_eval_metrics,
-    )
+    from mevi_spark.streaming.incremental import eval_metrics_store
 
     base = _tmp("evalm")
     queries = _queries(spark, sf_dir)
@@ -689,19 +672,10 @@ def streaming_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             per_query_metrics(run, gt, cutoffs=(1, 5, 10), query_col="query_id")
         )
 
-    q = incremental_eval_metrics(
-        stream, f"{base}/out", f"{base}/ckpt", partial_fn
-    )
-    q.awaitTermination()
-    folded = compact_eval_metrics(spark, f"{base}/out")
-    if folded < 1:
-        raise AssertionError("compaction folded no eval partials")
-    _, _, live = _rollup_parts(f"{base}/out")
-    if live:
-        raise AssertionError(f"live partial dirs survived compaction: {live}")
-    return _drained(
-        finalize_eval_metrics(eval_metrics_state(spark, f"{base}/out")), base
-    )
+    store = eval_metrics_store(f"{base}/out", partial_fn)
+    store.start(stream, f"{base}/ckpt").awaitTermination()
+    _fold_drained(spark, store, "eval partials")
+    return _drained(finalize_eval_metrics(store.state(spark)), base)
 
 
 def _flavor_safe_ntz(col: str) -> F.Column:
@@ -1172,7 +1146,7 @@ def streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped quantile summaries maintained under ingest (the
     maintenance twin of ``events_value_quantiles``): the events table
     arrives in three event-id-interleaved slices and
-    :func:`~mevi_spark.streaming.incremental.incremental_quantiles`
+    :func:`~mevi_spark.streaming.incremental.quantile_store`
     folds each batch into a deterministic mergeable compactor partial.
     After the drain the merged summary must (a) respect its capacity
     at every level and (b) place every summary item's weighted rank
@@ -1184,10 +1158,7 @@ def streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical oracle as the batch query."""
     from mevi_spark.operators.sketch import mp_certify
     from mevi_spark.plans.pipeline_ops import exact_grouped_quantiles
-    from mevi_spark.streaming.incremental import (
-        incremental_quantiles,
-        quantile_state,
-    )
+    from mevi_spark.streaming.incremental import quantile_store
 
     k = 128
     base = _tmp("mpq")
@@ -1201,9 +1172,9 @@ def streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_parquet_source(
         spark, f"{base}/in/s*", ev.schema, max_files_per_trigger=1
     )
-    q = incremental_quantiles(stream, f"{base}/out", f"{base}/ckpt", k=k)
-    q.awaitTermination()
-    summary = quantile_state(spark, f"{base}/out", k=k)
+    store = quantile_store(f"{base}/out", k=k)
+    store.start(stream, f"{base}/ckpt").awaitTermination()
+    summary = store.state(spark)
     corpus = spark.read.schema(ev.schema).parquet(f"{base}/in/s*")
     mp_certify(summary, corpus, "event_type", "value", k=k)
     return _drained(exact_grouped_quantiles(corpus), base)
@@ -1222,7 +1193,7 @@ def streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bottom-k distinct sketch maintained under document ingest (the
     maintenance twin of ``kmv_shingle_sample``): documents arrive in
     three doc-id-interleaved slices and
-    :func:`~mevi_spark.streaming.incremental.incremental_kmv` prunes
+    :func:`~mevi_spark.streaming.incremental.kmv_store` prunes
     each batch's shingle keys to a per-batch bottom-k partial — ≤ k
     rows per batch, md5-deterministic so crash-replay overwrites
     identical content. The merged state (shared ``kmv_merge`` kernel)
@@ -1239,7 +1210,7 @@ def streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmv_sample_frame,
         shingle_keys,
     )
-    from mevi_spark.streaming.incremental import incremental_kmv, kmv_state
+    from mevi_spark.streaming.incremental import kmv_store
 
     base = _tmp("kmv")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1250,18 +1221,11 @@ def streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_parquet_source(
         spark, f"{base}/in/s*", docs.schema, max_files_per_trigger=1
     )
-    q = incremental_kmv(
-        stream,
-        f"{base}/out",
-        f"{base}/ckpt",
-        "shingle",
-        k=KMV_K,
-        batch_prep=shingle_keys,
+    store = kmv_store(
+        f"{base}/out", "shingle", k=KMV_K, batch_prep=shingle_keys
     )
-    q.awaitTermination()
-    sketch = kmv_state(spark, f"{base}/out", k=KMV_K).localCheckpoint(
-        eager=True
-    )
+    store.start(stream, f"{base}/ckpt").awaitTermination()
+    sketch = store.state(spark).localCheckpoint(eager=True)
     corpus = spark.read.schema(docs.schema).parquet(f"{base}/in/s*")
     kmv_certify(
         sketch.collect(), shingle_keys(corpus).distinct().count(), KMV_K
@@ -1277,22 +1241,18 @@ def streaming_grouped_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-stratum uniform sample maintained under document ingest
     (the maintenance twin of ``grouped_kmv_sample``): documents arrive
     in three doc-id-interleaved slices and
-    :func:`~mevi_spark.streaming.incremental.incremental_grouped_kmv`
+    :func:`~mevi_spark.streaming.incremental.grouped_kmv_store`
     prunes each batch to its own per-(lang, source) bottom-k partial —
     ≤ k rows per stratum per batch, md5-deterministic so crash-replay
-    overwrites identical content. The merged state
-    (:func:`~mevi_spark.streaming.incremental.grouped_kmv_state`,
-    shared ``kmv_merge_grouped`` kernel) equals the one-shot grouped
+    overwrites identical content. The merged state (shared
+    ``kmv_merge_grouped`` kernel) equals the one-shot grouped
     sketch over the accumulated corpus because a stratum's
     globally-bottom-k hash is bottom-k within every batch that carries
     it — returned against the IDENTICAL oracle as the batch query.
     100 TB shape: the "8 random docs from every language×source cell"
     inspection read is answered from (k · strata)-sized state at any
     point of the ingest, never by re-sampling the corpus."""
-    from mevi_spark.streaming.incremental import (
-        grouped_kmv_state,
-        incremental_grouped_kmv,
-    )
+    from mevi_spark.streaming.incremental import grouped_kmv_store
 
     base = _tmp("gkmv")
     docs = load_table(spark, sf_dir, "documents").select(
@@ -1305,19 +1265,11 @@ def streaming_grouped_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_parquet_source(
         spark, f"{base}/in/s*", docs.schema, max_files_per_trigger=1
     )
-    q = incremental_grouped_kmv(
-        stream,
-        f"{base}/out",
-        f"{base}/ckpt",
-        "doc_id",
-        ["lang", "source"],
-        k=8,
-        salt="gsample",
+    store = grouped_kmv_store(
+        f"{base}/out", "doc_id", ["lang", "source"], k=8, salt="gsample"
     )
-    q.awaitTermination()
-    state = grouped_kmv_state(
-        spark, f"{base}/out", ["lang", "source"], k=8
-    )
+    store.start(stream, f"{base}/ckpt").awaitTermination()
+    state = store.state(spark)
     return _drained(
         state.select("lang", "source", "key", "hh", "rnk"), base
     )
@@ -1332,7 +1284,7 @@ def streaming_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance twin of ``curriculum_order`` — the one r11
     materialization without an under-ingest story): documents arrive
     in three doc-id-interleaved slices;
-    :func:`~mevi_spark.streaming.incremental.incremental_curriculum`
+    :func:`~mevi_spark.streaming.incremental.curriculum_store`
     scores each batch ONCE through the shared ``curriculum_scored``
     kernel and lands a narrow (doc_id, score) partial; range
     boundaries are pinned in a sidecar by the first batch. Appending
@@ -1349,7 +1301,7 @@ def streaming_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mevi_spark.plans.pipeline_ops import curriculum_scored
     from mevi_spark.streaming.incremental import (
         curriculum_state,
-        incremental_curriculum,
+        curriculum_store,
         resplit_curriculum,
     )
 
@@ -1362,18 +1314,16 @@ def streaming_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_parquet_source(
         spark, f"{base}/in/s*", docs.schema, max_files_per_trigger=1
     )
-    q = incremental_curriculum(
-        stream, f"{base}/out", f"{base}/ckpt", curriculum_scored
-    )
-    q.awaitTermination()
+    store = curriculum_store(f"{base}/out", curriculum_scored)
+    store.start(stream, f"{base}/ckpt").awaitTermination()
     # exercise the rebalance path: boundaries pinned from batch 1
     # (1/3 of the docs) leave every bucket ~3x its target after the
     # full drain, so a cap at 2x the ideal forces real splits — and
     # the oracle equality below proves the refinement reordered
     # nothing
-    n = spark.read.parquet(f"{base}/out/b*").count()
-    resplit_curriculum(spark, f"{base}/out", bucket_cap=max(2 * n // 32, 1))
-    return _drained(curriculum_state(spark, f"{base}/out"), base)
+    n = store.state(spark).count()
+    resplit_curriculum(spark, store, bucket_cap=max(2 * n // 32, 1))
+    return _drained(curriculum_state(spark, store), base)
 
 
 from mevi_spark.plans.pipeline_ops import DECONTAMINATE_ORACLE
@@ -1386,12 +1336,12 @@ def streaming_bloom_decontaminate(
     """Decontamination served from a Bloom blocklist maintained under
     ingest (the maintenance twin of ``bloom_decontaminate``): the eval
     blocklist arrives in three doc-id-interleaved slices and
-    :func:`~mevi_spark.streaming.incremental.incremental_bloom` writes
+    :func:`~mevi_spark.streaming.incremental.bloom_store` writes
     each batch's distinct set-bit POSITIONS (a mergeable set bounded by
     m — the bitset is an OR-fold, and OR-folding bitsets ≡ distinct
     over the position union) to the partial-dir store; a growing
     blocklist never re-hashes its history. The drained bitset
-    (:func:`~mevi_spark.streaming.incremental.bloom_state`) is
+    (:func:`~mevi_spark.streaming.incremental.bloom_words`) is
     position-set-EQUAL to a from-scratch ``bloom_build`` over the full
     eval set, so the served read — the SAME map-side probe + exact
     verify composition as the batch query — runs against the IDENTICAL
@@ -1402,10 +1352,7 @@ def streaming_bloom_decontaminate(
     from mevi_spark.operators.cache import defer_unpersist
     from mevi_spark.operators import dedup as D
     from mevi_spark.plans.pipeline_ops import _corpus, shingle_keys
-    from mevi_spark.streaming.incremental import (
-        bloom_state,
-        incremental_bloom,
-    )
+    from mevi_spark.streaming.incremental import bloom_store, bloom_words
 
     m, k_h = 1 << 18, 4
     base = _tmp("bloom")
@@ -1420,17 +1367,15 @@ def streaming_bloom_decontaminate(
     stream = stream_parquet_source(
         spark, f"{base}/in/s*", ev_docs.schema, max_files_per_trigger=1
     )
-    q = incremental_bloom(
-        stream,
+    store = bloom_store(
         f"{base}/out",
-        f"{base}/ckpt",
         "shingle",
         m,
         k_h,
         batch_prep=lambda b: shingle_keys(b, shingle_n=5),
     )
-    q.awaitTermination()
-    words = bloom_state(spark, f"{base}/out", m)
+    store.start(stream, f"{base}/ckpt").awaitTermination()
+    words = bloom_words(spark, store, m)
     # the served read: identical probe + exact-verify composition to
     # bloom_decontaminate (the staged slices partition the eval docs,
     # so the corpus-side eval union IS the accumulated blocklist)
@@ -1469,11 +1414,10 @@ def streaming_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IPF mixture weights maintained under document ingest (the
     maintenance twin of ``mixture_raking_weights``): documents arrive
     in three doc-id-interleaved slices and
-    :func:`~mevi_spark.streaming.incremental.incremental_mixture_cells`
+    :func:`~mevi_spark.streaming.incremental.mixture_cells_store`
     lands each batch's own (lang, source) counts — the canonical
     sum-foldable partial, |langs|·|sources| rows per batch, the
-    ``incremental_rollup`` pattern verbatim — so the merged cell table
-    (:func:`~mevi_spark.streaming.incremental.mixture_cells_state`)
+    ``rollup_store`` pattern verbatim — so the merged cell table
     equals the one-shot groupBy over the accumulated corpus exactly.
     The re-rake is the SHARED driver-side ``rake_cells`` kernel over
     the merged k-bounded cells, returned against the IDENTICAL oracle
@@ -1482,10 +1426,7 @@ def streaming_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~|langs|·|sources| cells — never a corpus pass, and the weights
     stay current at any point of the ingest."""
     from mevi_spark.plans.pipeline_ops import rake_cells
-    from mevi_spark.streaming.incremental import (
-        incremental_mixture_cells,
-        mixture_cells_state,
-    )
+    from mevi_spark.streaming.incremental import mixture_cells_store
 
     base = _tmp("rake")
     docs = load_table(spark, sf_dir, "documents").select(
@@ -1498,13 +1439,11 @@ def streaming_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_parquet_source(
         spark, f"{base}/in/s*", docs.schema, max_files_per_trigger=1
     )
-    q = incremental_mixture_cells(
-        stream, f"{base}/out", f"{base}/ckpt"
-    )
-    q.awaitTermination()
+    store = mixture_cells_store(f"{base}/out")
+    store.start(stream, f"{base}/ckpt").awaitTermination()
     cells = [
         (r["lang"], r["source"], int(r["n"]))
-        for r in mixture_cells_state(spark, f"{base}/out").collect()
+        for r in store.state(spark).collect()
     ]
     return _drained(rake_cells(spark, cells), base)
 
@@ -1517,7 +1456,7 @@ def streaming_budget_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget mixture fill served from state maintained under
     document ingest (the maintenance twin of ``token_budget_mixture``):
     documents arrive in three doc-id-interleaved slices;
-    :func:`~mevi_spark.streaming.incremental.incremental_curriculum`
+    :func:`~mevi_spark.streaming.incremental.curriculum_store`
     scores each batch ONCE through the shared ``budget_scored`` kernel
     — the budget store IS the curriculum store with lang and token
     count carried in the (doc_id, lang, score, n_tok) partial — and
@@ -1527,18 +1466,15 @@ def streaming_budget_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SHARED ``budget_fill`` tail — per-lang bucketed prefix sum
     under the pinned bounds, literal allocation map — over the merged
     narrow state, returned against the IDENTICAL oracle as the batch
-    query;
-    :func:`~mevi_spark.streaming.incremental.compact_curriculum`
-    bounds the store's directory growth. 100 TB shape: the tokenizer
-    runs once per doc at ingest; every fill read is three bounded
-    passes over narrow rows with |langs|·P parallel window
-    partitions, never a re-tokenize and never a one-task-per-domain
-    window."""
+    query; the store's compaction bounds its directory growth. 100 TB
+    shape: the tokenizer runs once per doc at ingest; every fill read
+    is three bounded passes over narrow rows with |langs|·P parallel
+    window partitions, never a re-tokenize and never a
+    one-task-per-domain window."""
     from mevi_spark.plans.pipeline_ops import budget_scored
     from mevi_spark.streaming.incremental import (
         budget_fill_state,
-        compact_curriculum,
-        incremental_curriculum,
+        curriculum_store,
     )
 
     base = _tmp("bfill")
@@ -1552,14 +1488,12 @@ def streaming_budget_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_parquet_source(
         spark, f"{base}/in/s*", docs.schema, max_files_per_trigger=1
     )
-    q = incremental_curriculum(
-        stream, f"{base}/out", f"{base}/ckpt", budget_scored
-    )
-    q.awaitTermination()
+    store = curriculum_store(f"{base}/out", budget_scored)
+    store.start(stream, f"{base}/ckpt").awaitTermination()
     # exercise the store's watermark fold on the serving path: the
     # oracle equality below proves the fold changed nothing
-    compact_curriculum(spark, f"{base}/out")
-    return _drained(budget_fill_state(spark, f"{base}/out"), base)
+    store.compact(spark)
+    return _drained(budget_fill_state(spark, store), base)
 
 
 from mevi_spark.plans.pruning_ops import ZORDER_BOX_ORACLE
@@ -1570,11 +1504,11 @@ def streaming_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-ordered layout maintained under event ingest (the maintenance
     twin of ``zorder_box_scan`` — the ``OPTIMIZE ZORDER BY``
     lifecycle): events arrive in three event-id-interleaved slices,
-    :func:`~mevi_spark.streaming.incremental.incremental_zorder`
+    :func:`~mevi_spark.streaming.incremental.zorder_store`
     lands each batch as a z-clustered delta dir under bounds pinned by
     the first batch, and the SHARED box read
     (``pruning_ops.box_scan_agg``) runs over the maintained union —
-    then again after :func:`compact_zorder` folds the deltas into one
+    then again after the store's compaction folds the deltas into one
     re-clustered base, asserting the fold changes nothing. Oracle is
     ``zorder_box_scan``'s own SQL verbatim (the layout loses no rows);
     the pruning property of the per-batch delta files is pinned by
@@ -1583,11 +1517,7 @@ def streaming_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite, scoped per ingest partition at deployment."""
     from mevi_spark.functions.time import epoch_us
     from mevi_spark.plans.pruning_ops import box_scan_agg
-    from mevi_spark.streaming.incremental import (
-        compact_zorder,
-        incremental_zorder,
-        zorder_state,
-    )
+    from mevi_spark.streaming.incremental import zorder_store
 
     base = _tmp("zord")
     ev = load_table(spark, sf_dir, "events")
@@ -1605,16 +1535,13 @@ def streaming_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     def y_of(df):
         return epoch_us(df, "ts")
 
-    q = incremental_zorder(
-        stream, f"{base}/out", f"{base}/ckpt", x_of, y_of,
-        files_per_batch=8,
+    store = zorder_store(
+        f"{base}/out", x_of, y_of, files_per_batch=8, n_files=24
     )
-    q.awaitTermination()
-    pre = sorted(
-        map(tuple, box_scan_agg(zorder_state(spark, f"{base}/out")).collect())
-    )
-    assert compact_zorder(spark, f"{base}/out", x_of, y_of, n_files=24) == 3
-    post_df = box_scan_agg(zorder_state(spark, f"{base}/out"))
+    store.start(stream, f"{base}/ckpt").awaitTermination()
+    pre = sorted(map(tuple, box_scan_agg(store.state(spark)).collect()))
+    assert store.compact(spark) == 3
+    post_df = box_scan_agg(store.state(spark))
     assert sorted(map(tuple, post_df.collect())) == pre, (
         "compaction changed the box aggregate"
     )

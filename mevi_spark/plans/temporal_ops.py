@@ -157,7 +157,7 @@ def events_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-resolution rollup as a single Spark plan. At 100 TB: one
     scan, a 3× Expand, then ordinary partial-aggregated shuffles whose
     state is bounded by buckets×types, and the partials are mergeable —
-    the shape :func:`mevi_spark.streaming.incremental_rollup` maintains
+    the shape :func:`mevi_spark.streaming.rollup_store` maintains
     incrementally (``streaming_hypertable_refresh`` proves the two
     agree against this same oracle). Sums are scaled-long
     (order-independent, bit-equal to the oracle's decimal

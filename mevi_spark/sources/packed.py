@@ -148,24 +148,22 @@ def _write_marker(out_dir: str, fp: str) -> None:
     os.rename(tmp, os.path.join(out_dir, _FP_MARKER))
 
 
-def _committed_subdirs(state_dir: str) -> list[str]:
-    """Batch subdirs that finished BOTH the parquet write (_SUCCESS)
-    and the fingerprint marker — the commit point of an append. A dir
-    missing either is a crashed attempt: invisible to readers, and the
-    next append overwrites it in place."""
+def _committed_subdirs(state_dir: str) -> list[tuple[int, str]]:
+    """``(batch index, path)`` of the batch subdirs that finished BOTH
+    the parquet write (_SUCCESS) and the fingerprint marker — the
+    commit point of an append. A dir missing either is a crashed
+    attempt: invisible to readers, and the next append overwrites it
+    in place."""
     import os
-    import re
 
-    out = []
-    for d in sorted(os.listdir(state_dir)):
-        if not re.fullmatch(r"b\d{9}", d):
-            continue
-        full = os.path.join(state_dir, d)
-        if os.path.exists(os.path.join(full, "_SUCCESS")) and os.path.exists(
-            os.path.join(full, _FP_MARKER)
-        ):
-            out.append(d)
-    return out
+    from mevi_spark.streaming.incremental import PartialStore
+
+    return [
+        (b, full)
+        for b, full in PartialStore.batch_dirs(state_dir)
+        if os.path.exists(os.path.join(full, "_SUCCESS"))
+        and os.path.exists(os.path.join(full, _FP_MARKER))
+    ]
 
 
 def _batch_fingerprint(base) -> str:
@@ -193,18 +191,13 @@ def read_packed_state(spark, state_dir: str) -> DataFrame:
     only possible duplicate). One window over block rows (state-sized,
     not token-sized: the frame carries arrays, the shuffle key is
     seq_id)."""
-    import os
-
     from pyspark.sql import Window, functions as F
 
     subs = _committed_subdirs(state_dir)
     if not subs:
         raise FileNotFoundError(f"no packed state under {state_dir}")
     frames = [
-        spark.read.parquet(os.path.join(state_dir, d)).withColumn(
-            "_b", F.lit(int(d[1:]))
-        )
-        for d in subs
+        spark.read.parquet(d).withColumn("_b", F.lit(b)) for b, d in subs
     ]
     allb = frames[0]
     for fr in frames[1:]:
@@ -259,6 +252,8 @@ def append_packed_sequences(
 
     from pyspark.sql import functions as F
 
+    from mevi_spark.streaming.incremental import PartialStore
+
     os.makedirs(state_dir, exist_ok=True)
     subs = _committed_subdirs(state_dir)
     L = int(seq_len)
@@ -267,15 +262,16 @@ def append_packed_sequences(
     ).filter(F.size("_toks") > 0)
     fp = _batch_fingerprint(base)
     if subs:
-        with open(os.path.join(state_dir, subs[-1], _FP_MARKER)) as fh:
+        last_idx, last_dir = subs[-1]
+        with open(os.path.join(last_dir, _FP_MARKER)) as fh:
             if fh.read().strip() == fp:
-                return int(subs[-1][1:])  # replayed batch: already applied
+                return last_idx  # replayed batch: already applied
     tail_seq, tail_toks = 0, []
     # walk back past empty batch subdirs (an empty append still claims
     # an index for replay-idempotence) to the newest subdir with rows
-    for d in reversed(subs):
+    for _, d in reversed(subs):
         rows = (
-            spark.read.parquet(os.path.join(state_dir, d))
+            spark.read.parquet(d)
             .orderBy(F.col("seq_id").desc())
             .limit(1)
             .collect()
@@ -288,11 +284,11 @@ def append_packed_sequences(
             else:
                 tail_seq, tail_toks = int(tail_row.seq_id) + 1, []
             break
+    batch_idx = len(subs)
+    out_dir = PartialStore.batch_dir(state_dir, batch_idx)
     mn = base.agg(F.min("_id")).first()[0]
     if mn is None and not tail_toks:
         # nothing to pack; still claim a batch index for idempotence
-        batch_idx = len(subs)
-        out_dir = os.path.join(state_dir, f"b{batch_idx:09d}")
         spark.createDataFrame(
             [], "seq_id long, tokens array<string>, n_tokens long"
         ).write.mode("overwrite").parquet(out_dir)
@@ -311,8 +307,6 @@ def append_packed_sequences(
         "tokens",
         "n_tokens",
     )
-    batch_idx = len(subs)
-    out_dir = os.path.join(state_dir, f"b{batch_idx:09d}")
     out.repartitionByRange(1, "seq_id").sortWithinPartitions(
         "seq_id"
     ).write.mode("overwrite").parquet(out_dir)

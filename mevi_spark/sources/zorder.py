@@ -84,27 +84,22 @@ def zkey(
     )
 
 
-def write_zordered_bounded(
+def zorder_clustered(
     df: DataFrame,
-    path: str,
     x_col: Column,
     y_col: Column,
     n_files: int,
     bounds: dict,
     bits: int = Z_BITS,
-) -> None:
-    """Write ``df`` z-clustered under pinned ``bounds`` — the shared
-    writer behind :func:`write_zordered` and the incremental layout
-    maintenance (``streaming/incremental.py::incremental_zorder``).
-    The z expression is recomputed per stage (deterministic), so no
-    helper column reaches the written schema."""
+) -> DataFrame:
+    """``df`` range-partitioned into ``n_files`` and sorted on the
+    Morton key under pinned ``bounds`` — the shared layout behind
+    :func:`write_zordered` and the incremental layout maintenance
+    (``streaming/incremental.py::zorder_store``). The z expression is
+    recomputed per stage (deterministic), so no helper column reaches
+    the written schema."""
     z = zkey(x_col, y_col, bounds, bits)
-    (
-        df.repartitionByRange(n_files, z)
-        .sortWithinPartitions(z)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    return df.repartitionByRange(n_files, z).sortWithinPartitions(z)
 
 
 def write_zordered(
@@ -118,6 +113,6 @@ def write_zordered(
     """Write ``df`` as ``n_files`` parquet files clustered by the
     Morton key of ``(x_col, y_col)`` (numeric column expressions),
     bucketing under the frame's own min/max."""
-    write_zordered_bounded(
-        df, path, x_col, y_col, n_files, scan_bounds(df, x_col, y_col), bits
-    )
+    zorder_clustered(
+        df, x_col, y_col, n_files, scan_bounds(df, x_col, y_col), bits
+    ).write.mode("overwrite").parquet(path)

@@ -25,9 +25,16 @@ arriving corpus/event stream.
   banded signature index and verified pair set stay current as docs
   arrive, new docs probed against the existing corpus (never a full
   re-pair), converging to the batch ``dedup_minhash`` answer;
-* :func:`incremental_rollup` — multi-resolution rollup maintenance:
-  mergeable GROUPING-SETS partials refreshed per micro-batch,
-  converging to the batch hypertable rollup;
+* :class:`PartialStore` — the one partial-dir store behind every
+  mergeable-partial maintainer: per-batch partial dirs written
+  replay-idempotently, merged on read, folded into a crash-safe
+  watermarked base; each family is a small factory returning its
+  store (:func:`rollup_store` — multi-resolution rollup maintenance,
+  mergeable GROUPING-SETS partials converging to the batch hypertable
+  rollup — plus the lexical, eval-metric, quantile, KMV, Bloom,
+  mixture-cell, curriculum and z-order stores in
+  ``streaming/incremental.py`` and the WDS manifest store in
+  ``sources/wds.py``);
 * :func:`incremental_heavy_hitters` — Misra-Gries frequent-items
   summary maintenance (mergeable-summaries merge): the bounded
   candidate set stays complete above the support threshold as the
@@ -35,26 +42,28 @@ arriving corpus/event stream.
 """
 
 from mevi_spark.streaming.incremental import (
+    PartialStore,
     dedup_stream,
     incremental_heavy_hitters,
     incremental_merge,
     incremental_neardup,
     incremental_quantize,
-    incremental_rollup,
     incremental_topk,
+    rollup_store,
     sessionize_stream,
     sessionize_stream_window,
     windowed_event_counts,
 )
 
 __all__ = [
+    "PartialStore",
     "dedup_stream",
     "incremental_heavy_hitters",
     "incremental_merge",
     "incremental_neardup",
     "incremental_quantize",
-    "incremental_rollup",
     "incremental_topk",
+    "rollup_store",
     "sessionize_stream",
     "sessionize_stream_window",
     "windowed_event_counts",

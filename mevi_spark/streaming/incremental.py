@@ -17,6 +17,9 @@ Design constraints at 100 TB/day ingest:
 
 from __future__ import annotations
 
+import os
+import re
+import uuid
 from collections.abc import Iterator
 from typing import Any
 
@@ -43,6 +46,19 @@ def stream_parquet_source(
     )
 
 
+def _drain_batches(stream_df: DataFrame, checkpoint_dir: str, sink):
+    """Start ``sink(batch, batch_id)`` over ``stream_df`` — the one
+    trigger policy of every maintainer here: ``availableNow`` drains
+    what exists, then stops (the bounded-run mode; a production deploy
+    drops the trigger). Returns the started query."""
+    return (
+        stream_df.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def incremental_quantize(
     stream_df: DataFrame,
     centroids: DataFrame,
@@ -59,11 +75,8 @@ def incremental_quantize(
     (broadcast codebook argmin) and appends ``(id, code)`` to a parquet
     index partitioned by ``code`` — the same partitioned layout the
     coarse-to-fine scan prunes on, now maintained as data arrives.
-    Returns the started query (``availableNow`` trigger: drains what
-    exists, then stops — the bounded-run mode; a production deploy
-    drops the trigger).
+    Returns the started query (:func:`_drain_batches`).
     """
-
     entries = centroid_entries(centroids)  # collected once, reused per batch
 
     def sink(batch: DataFrame, _batch_id: int) -> None:
@@ -77,12 +90,7 @@ def incremental_quantize(
             .parquet(output_dir)
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_batches(stream_df, checkpoint_dir, sink)
 
 
 def _link_prefixes(output_dir: str, kind: str) -> tuple[str, str]:
@@ -90,8 +98,6 @@ def _link_prefixes(output_dir: str, kind: str) -> tuple[str, str]:
     streams publishing under one shared parent must never reap each
     other's live version dirs or dangle the other's symlink (ADVICE r6
     — the same scoping compact_partitioned applies to its trash)."""
-    import os
-
     base = os.path.basename(os.path.abspath(output_dir))
     return f".{kind}-v-{base}-", f".{kind}-ln-{base}-"
 
@@ -101,18 +107,15 @@ def _migrate_legacy_dir(output_dir: str, v_prefix: str, ln_prefix: str) -> None:
     non-symlink scheme) becomes version 0 behind the link — one rename;
     without this the publish rename would fail against an existing
     directory and kill the stream."""
-    import os
-    import uuid as _uuid
-
     if os.path.isdir(output_dir) and not os.path.islink(output_dir):
         parent = os.path.dirname(os.path.abspath(output_dir))
-        legacy = os.path.join(parent, f"{v_prefix}{_uuid.uuid4().hex[:8]}")
+        legacy = os.path.join(parent, f"{v_prefix}{uuid.uuid4().hex[:8]}")
         # pre-create the (briefly dangling) link BEFORE renaming the
         # dir away, so the no-table window is exactly the two renames —
         # it cannot be closed entirely with rename(2) alone, but this
         # one-time legacy migration shrinks it to microseconds (the
         # steady-state publish path has no window at all)
-        lnk = os.path.join(parent, f"{ln_prefix}{_uuid.uuid4().hex[:8]}")
+        lnk = os.path.join(parent, f"{ln_prefix}{uuid.uuid4().hex[:8]}")
         os.symlink(legacy, lnk)
         os.rename(output_dir, legacy)
         os.rename(lnk, output_dir)
@@ -123,14 +126,8 @@ def _publish_grace() -> float:
     stale, so a reader that resolved the old target mid-scan finishes
     (VERDICT r6 #5). Published results are artifact-sized, so a few
     graced copies are cheap. ``SPARK_GRAFT_PUBLISH_GRACE`` governs every
-    atomic-publish stream; ``SPARK_GRAFT_TOPK_GRACE`` is honored as the
-    legacy alias (tests and deployments predating incremental_merge)."""
-    import os
-
-    v = os.environ.get("SPARK_GRAFT_PUBLISH_GRACE")
-    if v is None:
-        v = os.environ.get("SPARK_GRAFT_TOPK_GRACE", "60")
-    return float(v)
+    atomic-publish stream and partial-store fold."""
+    return float(os.environ.get("SPARK_GRAFT_PUBLISH_GRACE", "60"))
 
 
 _META_FILE = "_meta.json"  # underscore-prefixed: invisible to parquet scans
@@ -143,7 +140,6 @@ def _check_bucket_meta(table_dir: str, n_buckets: int, what: str) -> None:
     pre-sidecar publish) is tolerated: those tables migrate on their
     next publish."""
     import json
-    import os
 
     meta_path = os.path.join(table_dir, _META_FILE)
     try:
@@ -202,14 +198,12 @@ def _publish_version(
     unchanged: links land in the not-yet-published version dir, and
     the symlink flip stays the single commit point."""
     import json
-    import os
-    import uuid as _uuid
 
     from mevi_spark.plans.staging import reap_stale
 
     parent = os.path.dirname(os.path.abspath(output_dir))
     os.makedirs(parent, exist_ok=True)
-    version = os.path.join(parent, f"{v_prefix}{_uuid.uuid4().hex[:8]}")
+    version = os.path.join(parent, f"{v_prefix}{uuid.uuid4().hex[:8]}")
     writer = out.write.mode("overwrite")
     if partition_by is not None:
         # partition-pruned readers (the near-dup bucket probe) — the
@@ -253,7 +247,7 @@ def _publish_version(
             os.path.join(version, _META_FILE), "w", encoding="utf-8"
         ) as fh:
             json.dump(meta, fh)
-    tmp_link = os.path.join(parent, f"{ln_prefix}{_uuid.uuid4().hex[:8]}")
+    tmp_link = os.path.join(parent, f"{ln_prefix}{uuid.uuid4().hex[:8]}")
     os.symlink(version, tmp_link)
     os.rename(tmp_link, output_dir)  # atomic link replacement
     stale = []
@@ -299,8 +293,6 @@ def incremental_topk(
     The query side must be bounded (the reference's eval shape: ~10³
     queries); the corpus side streams unboundedly.
     """
-    import os
-
     from mevi_spark.functions.vector import dot
     from mevi_spark.operators.topk import topk_per_group
 
@@ -342,12 +334,7 @@ def incremental_topk(
             out, output_dir, v_prefix, ln_prefix, _publish_grace()
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_batches(stream_df, checkpoint_dir, sink)
 
 
 def incremental_merge(
@@ -378,8 +365,6 @@ def incremental_merge(
     as ``op_col != 'D'``. State is the table itself — no state store;
     per batch ONE keyed shuffle over |table|+|batch| rows.
     """
-    import os
-
     from mevi_spark.sources.upsert import apply_changes
 
     v_prefix, ln_prefix = _link_prefixes(output_dir, "merge")
@@ -416,12 +401,7 @@ def incremental_merge(
             out, output_dir, v_prefix, ln_prefix, _publish_grace()
         )
 
-    return (
-        change_stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_batches(change_stream, checkpoint_dir, sink)
 
 
 def band_bucket_expr(n_buckets: int):
@@ -528,7 +508,6 @@ def incremental_neardup(
     pathological corpus makes |pairs| ~ |docs|.
     """
     import json
-    import os
 
     from mevi_spark.operators.dedup import (
         banded_keys,
@@ -753,175 +732,194 @@ def incremental_neardup(
             copy_forward=idx_cf,
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_batches(stream_df, checkpoint_dir, sink)
 
 
-def incremental_rollup(
-    stream_df: DataFrame,
+_BASE_LINK = "base"
+_BASE_V = ".rollbase-v-"
+_BATCH_DIR = re.compile(r"b(\d{9})")
+
+
+class PartialStore:
+    """The partial-dir store behind every mergeable-partial maintainer
+    (rollup, lexical stats, eval metrics, quantiles, KMV, grouped KMV,
+    Bloom, mixture cells, curriculum, z-order and the WDS manifest) —
+    the only owner of its on-disk format: one ``b<batch_id:09d>`` dir
+    per micro-batch, the ``base`` symlink, and the ``-upto<N>-`` fold
+    watermark in the name of the base's target.
+
+    Replay-idempotence WITHOUT a merge step in the sink: the unit of
+    state is the per-batch partial directory, written with
+    deterministic content and ``overwrite`` mode — a crashed batch's
+    replay overwrites its own directory with identical rows, never
+    double-counts. The current state is :meth:`state` = base ⊎
+    unfolded batch dirs, merged on read.
+
+    State growth is bounded by :meth:`compact`: the published BASE
+    (atomic symlink, name-encoded fold watermark) absorbs batch dirs ≤
+    its watermark; readers ignore absorbed dirs even if a crash
+    interrupts their removal — fold-then-delete is crash-safe because
+    the fold watermark, not the deletion, is what excludes a dir.
+
+    A family supplies ``partial(batch, batch_id)`` (one batch's
+    partial frame; ``None`` writes nothing) and ``merge(df)`` (folds
+    any union of partials on read). ``fold(df)`` — the rewrite a
+    compaction publishes — defaults to ``merge``; only stores whose
+    base differs from their read pass it (grouped KMV drops the
+    read-time rank, z-order re-clusters instead of merging).
+    """
+
+    def __init__(self, output_dir: str, partial, merge, fold=None):
+        self.output_dir = output_dir
+        self._partial = partial
+        self._merge = merge
+        self._fold = merge if fold is None else fold
+
+    @staticmethod
+    def batch_dir(output_dir: str, batch_id: int) -> str:
+        """The ``b<batch_id:09d>`` dir of one batch under
+        ``output_dir`` (the shuffle-block and packed-sequence stores
+        name their batch dirs the same way)."""
+        return os.path.join(output_dir, f"b{int(batch_id):09d}")
+
+    @staticmethod
+    def batch_dirs(output_dir: str) -> list[tuple[int, str]]:
+        """Every batch dir under ``output_dir`` as ascending
+        ``(batch_id, path)`` pairs (none when the dir does not exist)."""
+        if not os.path.isdir(output_dir):
+            return []
+        return sorted(
+            (int(m.group(1)), os.path.join(output_dir, d))
+            for d in os.listdir(output_dir)
+            if (m := _BATCH_DIR.fullmatch(d))
+        )
+
+    def start(self, stream_df: DataFrame, checkpoint_dir: str):
+        """Drain ``stream_df`` into the store, one batch dir per
+        micro-batch; returns the started query."""
+        return _drain_batches(stream_df, checkpoint_dir, self.write)
+
+    def write(self, batch: DataFrame, batch_id: int) -> None:
+        """Land one batch's partial in its own dir (overwrite)."""
+        part = self._partial(batch, int(batch_id))
+        if part is not None:
+            part.write.mode("overwrite").parquet(
+                self.batch_dir(self.output_dir, batch_id)
+            )
+
+    def _parts(self) -> tuple[list[str], list[tuple[int, str]]]:
+        """(the dirs a read folds — base version dir first, if any —
+        and the live ``(batch_id, path)`` pairs above the base's fold
+        watermark)."""
+        base_link = os.path.join(self.output_dir, _BASE_LINK)
+        upto = -1
+        base = None
+        if os.path.islink(base_link):
+            # resolve to the TARGET version dir: reading through the
+            # symlink lets a concurrent compaction flip the link between
+            # this listing and the reader's Spark action, pairing an old
+            # watermark with a NEWER base that already folded some live
+            # dirs — double counting. The graced old version dir exists
+            # precisely so this resolved path stays readable.
+            target = os.readlink(base_link)
+            if not os.path.isabs(target):
+                target = os.path.join(self.output_dir, target)
+            m = re.search(r"-upto(\d+)-", os.path.basename(target))
+            if m:
+                upto = int(m.group(1))
+            base = target
+        live = [
+            (b, p) for b, p in self.batch_dirs(self.output_dir) if b > upto
+        ]
+        return ([base] if base else []) + [p for _, p in live], live
+
+    def live(self) -> list[str]:
+        """The batch dirs no fold has absorbed yet, ascending."""
+        return [p for _, p in self._parts()[1]]
+
+    def state(self, spark) -> DataFrame:
+        """Current state: base (if compacted) ⊎ unfolded batch dirs,
+        folded by the store's merge kernel."""
+        paths, _ = self._parts()
+        if not paths:
+            raise FileNotFoundError(
+                f"no partial-dir state under {self.output_dir}"
+            )
+        return self._merge(spark.read.parquet(*paths))
+
+    def compact(self, spark) -> int:
+        """Fold every live batch dir (and the previous base) into a new
+        published base; returns the number of batch dirs folded.
+
+        Crash-safety: the new base's symlink target name carries the
+        fold watermark (``-upto<N>-``), and readers exclude batch dirs
+        ≤ the watermark — so the post-publish removals are garbage
+        collection, not correctness. A crash before the flip leaves an
+        unlinked version dir that no reader resolves; the next fold's
+        sweep reaps it."""
+        from mevi_spark.plans.staging import reap_stale
+
+        out = self.output_dir
+        paths, live = self._parts()
+        if not live:
+            return 0
+        hi = live[-1][0]
+        # fold EXACTLY this listing's parts — re-listing inside state()
+        # could absorb a batch dir committed between the two listings
+        # while the published watermark (hi) predates it, leaving that
+        # batch double-counted by every subsequent read
+        merged = self._fold(spark.read.parquet(*paths))
+        version = os.path.join(
+            out, f"{_BASE_V}upto{hi:09d}-{uuid.uuid4().hex[:8]}"
+        )
+        merged.write.mode("overwrite").parquet(version)
+        tmp = os.path.join(out, f".rollbase-ln-{uuid.uuid4().hex[:8]}")
+        os.symlink(version, tmp)
+        # atomic flip; readers now fold ≤ hi via name
+        os.rename(tmp, os.path.join(out, _BASE_LINK))
+        # GC sweep covers EVERY absorbed artifact, not just this call's
+        # fold set — dirs a crashed or graced earlier sweep left behind
+        # re-enter the candidate list until they are actually gone
+        stale = [p for b, p in self.batch_dirs(out) if b <= hi]
+        stale += [
+            os.path.join(out, e)
+            for e in os.listdir(out)
+            if e.startswith(_BASE_V) and os.path.join(out, e) != version
+        ]
+        reap_stale(stale, grace=_publish_grace())
+        return len(live)
+
+
+def rollup_store(
     output_dir: str,
-    checkpoint_dir: str,
     ts_col: str = "ts",
     type_col: str = "event_type",
     value_col: str = "value",
-):
+) -> PartialStore:
     """Incremental hypertable refresh: maintain the multi-resolution
     rollup under event ingest by materializing each micro-batch's
     MERGEABLE partials (``operators/rollup.py``) — the claim the batch
-    query's docstring makes, operationalized.
-
-    Replay-idempotence WITHOUT a merge step in the sink: the unit of
-    state is the per-batch partial directory ``b<batch_id>``, written
-    with deterministic content and ``overwrite`` mode — a crashed
-    batch's replay overwrites its own directory with identical rows,
-    never double-counts. The current rollup is ``rollup_state`` =
-    base ⊎ unfolded batch dirs, merged on read (one keyed shuffle over
-    partial rows, which are buckets×types-sized, not event-sized).
-
-    State growth is bounded by :func:`compact_rollup`: the published
-    BASE (atomic symlink, name-encoded fold watermark) absorbs batch
-    dirs ≤ its watermark; readers ignore absorbed dirs even if a crash
-    interrupts their removal — fold-then-delete is crash-safe because
-    the fold watermark, not the deletion, is what excludes a dir.
-    """
-    from mevi_spark.operators.rollup import rollup_partials
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        part = rollup_partials(batch, ts_col, type_col, value_col)
-        part.write.mode("overwrite").parquet(
-            f"{output_dir}/b{int(batch_id):09d}"
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-_ROLLUP_BASE = "base"
-_ROLLUP_BASE_V = ".rollbase-v-"
-
-
-def _rollup_parts(output_dir: str) -> tuple[str | None, int, list[str]]:
-    """(base path or None, fold watermark, live batch dirs > watermark)."""
-    import os
-    import re
-
-    base_link = os.path.join(output_dir, _ROLLUP_BASE)
-    upto = -1
-    base = None
-    if os.path.islink(base_link):
-        # resolve to the TARGET version dir: reading through the
-        # symlink lets a concurrent compaction flip the link between
-        # this listing and the reader's Spark action, pairing an old
-        # watermark with a NEWER base that already folded some live
-        # dirs — double counting. The graced old version dir exists
-        # precisely so this resolved path stays readable.
-        target = os.readlink(base_link)
-        if not os.path.isabs(target):
-            target = os.path.join(output_dir, target)
-        m = re.search(r"-upto(\d+)-", os.path.basename(target))
-        if m:
-            upto = int(m.group(1))
-        base = target
-    live = sorted(
-        os.path.join(output_dir, d)
-        for d in os.listdir(output_dir)
-        if re.fullmatch(r"b\d{9}", d) and int(d[1:]) > upto
-    )
-    return base, upto, live
-
-
-def _merged_partials(spark, output_dir: str, merge_fn) -> DataFrame:
-    """Current state of a partial-dir store: base (if compacted) ⊎
-    unfolded batch dirs, folded by the store's merge kernel. The
-    generic core behind :func:`rollup_state` and
-    :func:`lexical_state`."""
-    base, _, live = _rollup_parts(output_dir)
-    paths = ([base] if base else []) + live
-    if not paths:
-        raise FileNotFoundError(f"no partial-dir state under {output_dir}")
-    return merge_fn(spark.read.parquet(*paths))
-
-
-def rollup_state(spark, output_dir: str) -> DataFrame:
-    """The current merged rollup: base (if compacted) ⊎ unfolded batch
-    partial dirs, folded by one keyed sum."""
-    from mevi_spark.operators.rollup import merge_rollup_partials
-
-    return _merged_partials(spark, output_dir, merge_rollup_partials)
-
-
-def compact_rollup(spark, output_dir: str) -> int:
-    """Fold every live batch-partial dir (and the previous base) into
-    a new published base; returns the number of batch dirs folded.
-
-    Crash-safety: the new base's symlink target name carries the fold
-    watermark (``-upto<N>-``), and readers exclude batch dirs ≤ the
-    watermark — so the post-publish removals are garbage collection,
-    not correctness. After compaction the state is one dir of
+    query's docstring makes, operationalized. The current rollup is
+    one keyed sum over partial rows, which are buckets×types-sized,
+    not event-sized; after a compaction the state is one dir of
     buckets×types rows regardless of how many batches arrived."""
-    from mevi_spark.operators.rollup import merge_rollup_partials
-
-    return _compact_partials(spark, output_dir, merge_rollup_partials)
-
-
-def _compact_partials(spark, output_dir: str, merge_fn) -> int:
-    """Generic fold-partial-dirs-into-base (see :func:`compact_rollup`
-    for the crash-safety argument; shared by the rollup, lexical, and
-    WDS-manifest stores)."""
-    import os
-    import re
-    import uuid as _uuid
-
-    base_link = os.path.join(output_dir, _ROLLUP_BASE)
-    base, upto, live = _rollup_parts(output_dir)
-    if not live:
-        return 0
-    hi = max(int(os.path.basename(p)[1:]) for p in live)
-    # fold EXACTLY this listing's parts — re-listing inside
-    # rollup_state could absorb a batch dir committed between the two
-    # listings while the published watermark (hi) predates it, leaving
-    # that batch double-counted by every subsequent read
-    merged = merge_fn(
-        spark.read.parquet(*(([base] if base else []) + live))
+    from mevi_spark.operators.rollup import (
+        merge_rollup_partials,
+        rollup_partials,
     )
-    version = os.path.join(
-        output_dir, f"{_ROLLUP_BASE_V}upto{hi:09d}-{_uuid.uuid4().hex[:8]}"
+
+    return PartialStore(
+        output_dir,
+        lambda batch, _bid: rollup_partials(
+            batch, ts_col, type_col, value_col
+        ),
+        merge_rollup_partials,
     )
-    merged.write.mode("overwrite").parquet(version)
-    tmp = os.path.join(output_dir, f".rollbase-ln-{_uuid.uuid4().hex[:8]}")
-    os.symlink(version, tmp)
-    os.rename(tmp, base_link)  # atomic flip; readers now fold ≤ hi via name
-    # GC sweep covers EVERY absorbed artifact, not just this call's
-    # fold set — dirs a crashed or graced earlier sweep left behind
-    # re-enter the candidate list until they are actually gone
-    from mevi_spark.plans.staging import reap_stale
-
-    stale = []
-    for entry in os.listdir(output_dir):
-        full = os.path.join(output_dir, entry)
-        if re.fullmatch(r"b\d{9}", entry) and int(entry[1:]) <= hi:
-            stale.append(full)
-        elif entry.startswith(_ROLLUP_BASE_V) and full != version:
-            stale.append(full)
-    reap_stale(stale, grace=_publish_grace())
-    return len(live)
 
 
-def incremental_lexical_stats(
-    stream_df: DataFrame,
-    output_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def lexical_store(
+    output_dir: str, text_col: str = "text", id_col: str = "doc_id"
+) -> PartialStore:
     """BM25/TF-IDF corpus statistics maintained under document ingest —
     the streaming twin the lexical tier lacked (every other retrieval
     path has one: dense quantize, near-dup, semantic, chunk, top-k).
@@ -929,57 +927,29 @@ def incremental_lexical_stats(
     Per-term document frequency, document count, and total token
     length are SUMS of per-document contributions
     (``operators/lexical.py``), so the maintenance is the
-    :func:`incremental_rollup` pattern verbatim: each micro-batch
-    writes its mergeable partial to its own ``b<batch_id>`` dir with
-    deterministic content + overwrite mode (a crashed batch's replay
-    overwrites itself — never double-counts), current stats =
-    :func:`lexical_state`'s one keyed sum, and
-    :func:`compact_lexical` folds drained dirs into a published base
-    so state stays vocabulary-sized regardless of batch count.
+    :func:`rollup_store` pattern verbatim. The state is ``(term, df,
+    n_docs, sum_dl)``: term rows carry df, the NULL-term sentinel row
+    carries (n_docs, sum_dl); it must equal the one-shot partial over
+    the full drained corpus — pinned by the shared oracle of
+    ``streaming_lexical_stats`` — and compaction keeps it
+    vocabulary-sized regardless of batch count.
 
     Ingest contract: append-only doc ids (see ``operators/lexical.py``
     — id reuse needs old-term retraction, which needs a per-doc index
     the stats tier deliberately does not carry)."""
-    from mevi_spark.operators.lexical import lexical_partials
+    from mevi_spark.operators.lexical import (
+        lexical_partials,
+        merge_lexical_partials,
+    )
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        part = lexical_partials(batch, text_col, id_col)
-        part.write.mode("overwrite").parquet(
-            f"{output_dir}/b{int(batch_id):09d}"
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return PartialStore(
+        output_dir,
+        lambda batch, _bid: lexical_partials(batch, text_col, id_col),
+        merge_lexical_partials,
     )
 
 
-def lexical_state(spark, output_dir: str) -> DataFrame:
-    """Current lexical stats ``(term, df, n_docs, sum_dl)``: term rows
-    carry df, the NULL-term sentinel row carries (n_docs, sum_dl).
-    Must equal the one-shot partial over the full drained corpus —
-    pinned by the shared oracle of ``streaming_lexical_stats``."""
-    from mevi_spark.operators.lexical import merge_lexical_partials
-
-    return _merged_partials(spark, output_dir, merge_lexical_partials)
-
-
-def compact_lexical(spark, output_dir: str) -> int:
-    """Fold drained lexical partial dirs into one published base (the
-    :func:`compact_rollup` machinery with the lexical merge kernel)."""
-    from mevi_spark.operators.lexical import merge_lexical_partials
-
-    return _compact_partials(spark, output_dir, merge_lexical_partials)
-
-
-def incremental_eval_metrics(
-    stream_df: DataFrame,
-    output_dir: str,
-    checkpoint_dir: str,
-    partial_fn,
-):
+def eval_metrics_store(output_dir: str, partial_fn) -> PartialStore:
     """Retrieval eval metrics maintained as QUERIES arrive in waves —
     the eval tier's maintenance twin (an eval dashboard during a sweep:
     Recall/MRR/HitRate over all queries evaluated so far, without
@@ -987,39 +957,18 @@ def incremental_eval_metrics(
     batch's queries and folds their per-query contributions into the
     mergeable per-cutoff partial
     (``operators/metrics.py::eval_metric_partials`` — scaled-long sums
-    + query count, order-independent), written to the rollup store's
-    per-batch dir: deterministic content, overwrite-on-replay, never a
-    double count. Contract: each query is evaluated in exactly ONE
-    batch (the eval-sweep ingest unit)."""
+    + query count, order-independent). The state is the per-cutoff
+    metric sums; finalize with
+    ``operators/metrics.py::finalize_eval_metrics``. Contract: each
+    query is evaluated in exactly ONE batch (the eval-sweep ingest
+    unit)."""
+    from mevi_spark.operators.metrics import merge_eval_partials
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        partial_fn(batch).write.mode("overwrite").parquet(
-            f"{output_dir}/b{int(batch_id):09d}"
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return PartialStore(
+        output_dir,
+        lambda batch, _bid: partial_fn(batch),
+        merge_eval_partials,
     )
-
-
-def eval_metrics_state(spark, output_dir: str) -> DataFrame:
-    """Current per-cutoff metric sums (base ⊎ live batch dirs through
-    the shared merge kernel); finalize with
-    ``operators/metrics.py::finalize_eval_metrics``."""
-    from mevi_spark.operators.metrics import merge_eval_partials
-
-    return _merged_partials(spark, output_dir, merge_eval_partials)
-
-
-def compact_eval_metrics(spark, output_dir: str) -> int:
-    """Fold drained eval partial dirs into one published base (the
-    :func:`compact_rollup` machinery with the eval merge kernel)."""
-    from mevi_spark.operators.metrics import merge_eval_partials
-
-    return _compact_partials(spark, output_dir, merge_eval_partials)
 
 
 def dedup_stream(
@@ -1307,7 +1256,6 @@ def incremental_heavy_hitters(
     for debuggability and legacy-state compatibility.
     """
     import json
-    import os
 
     v_prefix, ln_prefix = _link_prefixes(output_dir, "hh")
 
@@ -1366,12 +1314,7 @@ def incremental_heavy_hitters(
             meta={"last_bid": int(batch_id)},
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_batches(stream_df, checkpoint_dir, sink)
 
 
 def incremental_shuffle_blocks(
@@ -1397,12 +1340,7 @@ def incremental_shuffle_blocks(
             n_buckets=n_buckets, block=block,
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_batches(stream_df, checkpoint_dir, sink)
 
 
 def code_bucket_expr(n_buckets: int):
@@ -1474,8 +1412,6 @@ def incremental_semdedup(
     Replay-idempotent: deterministic assignment/cosines and id-keyed
     replacement make a replayed batch republish identical rows.
     """
-    import os
-
     from mevi_spark.operators.rq import assign_nearest, centroid_entries
 
     entries = centroid_entries(centroids)
@@ -1643,12 +1579,7 @@ def incremental_semdedup(
             copy_forward=cf_ids,
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_batches(stream_df, checkpoint_dir, sink)
 
 
 def chunk_bucket_expr(n_buckets: int):
@@ -1696,7 +1627,6 @@ def append_chunk_kept(
     all anti-join away against the already-updated index, the touched
     set is empty, and the publish is a pure copy-forward.
     """
-    import os
 
     # the chunk geometry and winner rule are the SHARED kernels
     # (plans/pipeline_ops.py::chunk_grid / chunk_winners) — forking
@@ -1756,12 +1686,7 @@ def incremental_chunk_dedup(
             text_col=text_col, id_col=id_col,
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_batches(stream_df, checkpoint_dir, sink)
 
 
 def component_bucket_expr(n_buckets: int):
@@ -1831,7 +1756,6 @@ def apply_components_batch(
     only switches the fetch source between two tables that agree.
     """
     import json
-    import os
 
     labels_dir = os.path.join(state_dir, "labels")
     ids_dir = os.path.join(state_dir, "ids")
@@ -2033,263 +1957,143 @@ def incremental_components(
             id_a=id_a, id_b=id_b, n_buckets=n_buckets,
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_batches(stream_df, checkpoint_dir, sink)
 
 
-def incremental_quantiles(
-    stream_df: DataFrame,
+def quantile_store(
     output_dir: str,
-    checkpoint_dir: str,
     type_col: str = "event_type",
     value_col: str = "value",
     k: int = 128,
-):
+) -> PartialStore:
     """Grouped quantile summaries maintained under event ingest: each
     micro-batch folds its values into a deterministic mergeable
-    compactor partial (``operators/sketch.py::mp_batch_partials``)
-    written to the rollup store's per-batch dir — replay overwrites
-    identical content, the same no-merge-in-sink idempotence as
-    :func:`incremental_rollup`. The current summary is
-    :func:`quantile_state` (base ⊎ live dirs through the shared merge
-    kernel); :func:`compact_quantiles` bounds directory growth. The
-    summary answers any-quantile queries at any time without a corpus
-    pass, with a TRACKED rank-error bound certified by
-    ``mp_certify``."""
-    from mevi_spark.operators.sketch import mp_batch_partials
+    compactor partial (``operators/sketch.py::mp_batch_partials``) —
+    replay overwrites identical content. The current summary is the
+    partials folded through the shared compactor kernel; it answers
+    any-quantile queries at any time without a corpus pass, with a
+    TRACKED rank-error bound certified by ``mp_certify``."""
+    from mevi_spark.operators.sketch import (
+        mp_batch_partials,
+        mp_merge_summaries,
+    )
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        mp_batch_partials(batch, type_col, value_col, k).write.mode(
-            "overwrite"
-        ).parquet(f"{output_dir}/b{int(batch_id):09d}")
-
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return PartialStore(
+        output_dir,
+        lambda batch, _bid: mp_batch_partials(batch, type_col, value_col, k),
+        lambda df: mp_merge_summaries(df, type_col, k),
     )
 
 
-def quantile_state(
-    spark, output_dir: str, type_col: str = "event_type", k: int = 128
-) -> DataFrame:
-    """The current merged quantile summary: base (if compacted) ⊎
-    unfolded batch partial dirs through the shared compactor kernel."""
-    from mevi_spark.operators.sketch import mp_merge_summaries
-
-    return _merged_partials(
-        spark, output_dir, lambda df: mp_merge_summaries(df, type_col, k)
-    )
-
-
-def compact_quantiles(
-    spark, output_dir: str, type_col: str = "event_type", k: int = 128
-) -> int:
-    """Fold live quantile partial dirs into a published base (the
-    crash-safe watermark fold of :func:`compact_rollup`)."""
-    from mevi_spark.operators.sketch import mp_merge_summaries
-
-    return _compact_partials(
-        spark, output_dir, lambda df: mp_merge_summaries(df, type_col, k)
-    )
-
-
-def incremental_kmv(
-    stream_df: DataFrame,
+def kmv_store(
     output_dir: str,
-    checkpoint_dir: str,
     key_col: str,
     k: int = 256,
     salt: str = "kmv",
     batch_prep=None,
-):
+) -> PartialStore:
     """Bottom-k distinct sketch (KMV) maintained under ingest: each
     micro-batch prunes to ITS OWN bottom-k sketch
-    (``operators/sketch.py::kmv_bottom_k`` — ≤ k rows) written to the
-    rollup store's per-batch dir; md5 determinism makes a replayed
-    batch rebuild identical content, the same no-merge-in-sink
-    idempotence as :func:`incremental_rollup`. The current sketch is
-    :func:`kmv_state` (base ⊎ live dirs through the shared
+    (``operators/sketch.py::kmv_bottom_k`` — ≤ k rows); md5 determinism
+    makes a replayed batch rebuild identical content. The current
+    sketch merges through the shared
     :func:`~mevi_spark.operators.sketch.kmv_merge` kernel — sound
-    because any global bottom-k hash is in its own batch's bottom-k);
-    :func:`compact_kmv` bounds directory growth. The drained sketch
-    answers distinct-cardinality and uniform-sample reads at any time
-    without a corpus pass. ``batch_prep`` (optional) maps the raw
-    batch frame to the keyed frame first (e.g. shingle explosion) so
-    the stream can carry source rows, not pre-exploded keys."""
-    from mevi_spark.operators.sketch import kmv_bottom_k
+    because any global bottom-k hash is in its own batch's bottom-k.
+    The drained sketch answers distinct-cardinality and uniform-sample
+    reads at any time without a corpus pass. ``batch_prep`` (optional)
+    maps the raw batch frame to the keyed frame first (e.g. shingle
+    explosion) so the stream can carry source rows, not pre-exploded
+    keys."""
+    from mevi_spark.operators.sketch import kmv_bottom_k, kmv_merge
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
+    def partial(batch: DataFrame, _bid: int) -> DataFrame:
         keyed = batch_prep(batch) if batch_prep is not None else batch
-        kmv_bottom_k(keyed, key_col, k, salt).write.mode(
-            "overwrite"
-        ).parquet(f"{output_dir}/b{int(batch_id):09d}")
+        return kmv_bottom_k(keyed, key_col, k, salt)
 
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return PartialStore(output_dir, partial, lambda df: kmv_merge(df, k))
 
 
-def kmv_state(spark, output_dir: str, k: int = 256) -> DataFrame:
-    """The current merged bottom-k sketch: base (if compacted) ⊎
-    unfolded batch partial dirs through the shared merge kernel."""
-    from mevi_spark.operators.sketch import kmv_merge
-
-    return _merged_partials(
-        spark, output_dir, lambda df: kmv_merge(df, k)
-    )
-
-
-def compact_kmv(spark, output_dir: str, k: int = 256) -> int:
-    """Fold live KMV partial dirs into a published base (the
-    crash-safe watermark fold of :func:`compact_rollup`)."""
-    from mevi_spark.operators.sketch import kmv_merge
-
-    return _compact_partials(
-        spark, output_dir, lambda df: kmv_merge(df, k)
-    )
-
-
-def incremental_grouped_kmv(
-    stream_df: DataFrame,
+def grouped_kmv_store(
     output_dir: str,
-    checkpoint_dir: str,
     key_col: str,
     group_cols: list[str],
     k: int = 8,
     salt: str = "kmv",
     batch_prep=None,
-):
+) -> PartialStore:
     """Per-stratum bottom-k sample maintained under ingest — the
-    grouped twin of :func:`incremental_kmv`: each micro-batch prunes
-    to ITS OWN per-group bottom-k
+    grouped twin of :func:`kmv_store`: each micro-batch prunes to ITS
+    OWN per-group bottom-k
     (``operators/sketch.py::kmv_bottom_k_grouped``, ≤ k rows per group
-    seen in the batch; the rank column is dropped — ranks are a
-    property of the MERGED state, recomputed on read) written to the
-    rollup store's per-batch dir. md5 determinism makes a replayed
-    batch rebuild identical content (no-merge-in-sink idempotence).
-    Soundness is per-stratum mergeability: a group's globally-bottom-k
-    hash is bottom-k within every batch that carries it, so
-    merge-on-read (:func:`grouped_kmv_state`, shared
-    ``kmv_merge_grouped`` kernel) equals the one-shot grouped sketch
-    over the accumulated corpus. State and every publish are
-    (k · groups-in-batch)-sized — the per-stratum inspection sample
-    stays readable at any time without a corpus pass."""
-    from mevi_spark.operators.sketch import kmv_bottom_k_grouped
+    seen in the batch). Ranks are a property of the MERGED state: the
+    partials and the folded base drop the rank column, and every read
+    recomputes it. md5 determinism makes a replayed batch rebuild
+    identical content. Soundness is per-stratum mergeability: a group's
+    globally-bottom-k hash is bottom-k within every batch that carries
+    it, so merge-on-read (shared ``kmv_merge_grouped`` kernel) equals
+    the one-shot grouped sketch over the accumulated corpus. State and
+    every publish are (k · groups-in-batch)-sized — the per-stratum
+    inspection sample stays readable at any time without a corpus
+    pass."""
+    from mevi_spark.operators.sketch import (
+        kmv_bottom_k_grouped,
+        kmv_merge_grouped,
+    )
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
+    def partial(batch: DataFrame, _bid: int) -> DataFrame:
         keyed = batch_prep(batch) if batch_prep is not None else batch
-        kmv_bottom_k_grouped(keyed, key_col, k, group_cols, salt).drop(
-            "rnk"
-        ).write.mode("overwrite").parquet(
-            f"{output_dir}/b{int(batch_id):09d}"
-        )
+        part = kmv_bottom_k_grouped(keyed, key_col, k, group_cols, salt)
+        return part.drop("rnk")
 
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    def merge(df: DataFrame) -> DataFrame:
+        return kmv_merge_grouped(df, k, group_cols)
+
+    return PartialStore(
+        output_dir, partial, merge, fold=lambda df: merge(df).drop("rnk")
     )
 
 
-def grouped_kmv_state(
-    spark, output_dir: str, group_cols: list[str], k: int = 8
-) -> DataFrame:
-    """The current merged per-group bottom-k (ranked): base (if
-    compacted) ⊎ unfolded batch partial dirs through the shared
-    grouped merge kernel."""
-    from mevi_spark.operators.sketch import kmv_merge_grouped
-
-    return _merged_partials(
-        spark, output_dir, lambda df: kmv_merge_grouped(df, k, group_cols)
-    )
-
-
-def compact_grouped_kmv(
-    spark, output_dir: str, group_cols: list[str], k: int = 8
-) -> int:
-    """Fold live grouped-KMV partial dirs into a published base (the
-    crash-safe watermark fold of :func:`compact_rollup`). The folded
-    base drops the rank column like the per-batch partials — rank is
-    recomputed by every read."""
-    from mevi_spark.operators.sketch import kmv_merge_grouped
-
-    return _compact_partials(
-        spark,
-        output_dir,
-        lambda df: kmv_merge_grouped(df, k, group_cols).drop("rnk"),
-    )
-
-
-def incremental_bloom(
-    stream_df: DataFrame,
+def bloom_store(
     output_dir: str,
-    checkpoint_dir: str,
     key_col: str,
     m: int,
     n_hashes: int,
     salt: str = "bloom",
     batch_prep=None,
-):
+) -> PartialStore:
     """Bloom bitset maintained under blocklist ingest: each micro-batch
     writes ITS OWN distinct set-bit positions
     (``functions/bloom.py::bloom_position_frame`` — ≤ m rows, usually
-    ≪ m) to the partial-dir store. Positions are a mergeable SET
-    bounded by m: the bitset is an OR-fold, and OR-folding bitsets ≡
-    DISTINCT over the position union, so the merged state equals a
-    from-scratch ``bloom_build`` over the accumulated blocklist
-    EXACTLY (position-set equality, not an approximation) — a growing
+    ≪ m). Positions are a mergeable SET bounded by m: the bitset is an
+    OR-fold, and OR-folding bitsets ≡ DISTINCT over the position union,
+    so the merged state (and the folded base) is ≤ m rows and equals a
+    from-scratch ``bloom_build`` over the accumulated blocklist EXACTLY
+    (position-set equality, not an approximation) — a growing
     blocklist never re-hashes its history. xxhash64 determinism makes
-    a replayed batch rebuild identical content (the no-merge-in-sink
-    idempotence of :func:`incremental_rollup`); the no-false-negative
+    a replayed batch rebuild identical content; the no-false-negative
     guarantee is monotone under OR, so serving reads during ingest is
     safe for keys already folded. ``batch_prep`` (optional) maps the
     raw batch frame to the keyed frame first (e.g. 5-gram shingle
-    explosion) so the stream can carry source rows."""
+    explosion) so the stream can carry source rows. Read the bitset
+    words with :func:`bloom_words`."""
     from mevi_spark.functions.bloom import bloom_position_frame
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
+    def partial(batch: DataFrame, _bid: int) -> DataFrame:
         keyed = batch_prep(batch) if batch_prep is not None else batch
-        bloom_position_frame(keyed, key_col, m, n_hashes, salt).write.mode(
-            "overwrite"
-        ).parquet(f"{output_dir}/b{int(batch_id):09d}")
+        return bloom_position_frame(keyed, key_col, m, n_hashes, salt)
 
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return PartialStore(
+        output_dir, partial, lambda df: df.select("p").distinct()
     )
 
 
-def bloom_state(spark, output_dir: str, m: int) -> list[int]:
-    """The current bitset words: base (if compacted) ⊎ unfolded batch
-    position dirs, OR-folded driver-side (the collect is ≤ m rows by
+def bloom_words(spark, store: PartialStore, m: int) -> list[int]:
+    """The current bitset words of a :func:`bloom_store`: its merged
+    positions OR-folded driver-side (the collect is ≤ m rows by
     construction — the same bounded class as ``bloom_build``)."""
     from mevi_spark.functions.bloom import words_from_positions
 
-    rows = _merged_partials(
-        spark, output_dir, lambda df: df.select("p").distinct()
-    ).collect()
-    return words_from_positions(rows, m)
-
-
-def compact_bloom(spark, output_dir: str) -> int:
-    """Fold live position partial dirs into a published base (the
-    crash-safe watermark fold of :func:`compact_rollup`); the base is
-    the distinct position union, still ≤ m rows."""
-    return _compact_partials(
-        spark, output_dir, lambda df: df.select("p").distinct()
-    )
+    return words_from_positions(store.state(spark).collect(), m)
 
 
 def _curriculum_bounds(output_dir: str, scored: DataFrame, n_buckets: int):
@@ -2303,8 +2107,6 @@ def _curriculum_bounds(output_dir: str, scored: DataFrame, n_buckets: int):
     BALANCE of the P parallel rank windows, which
     :func:`resplit_curriculum` restores by refining boundaries."""
     import json
-    import os
-    import uuid as _uuid
 
     p = os.path.join(output_dir, "_cbounds.json")
     if os.path.exists(p):
@@ -2318,20 +2120,16 @@ def _curriculum_bounds(output_dir: str, scored: DataFrame, n_buckets: int):
         ).first()["b"]
     )
     os.makedirs(output_dir, exist_ok=True)
-    tmp = f"{p}.tmp-{_uuid.uuid4().hex[:8]}"
+    tmp = f"{p}.tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w", encoding="utf-8") as fh:
         json.dump(bounds, fh)
     os.rename(tmp, p)
     return bounds
 
 
-def incremental_curriculum(
-    stream_df: DataFrame,
-    output_dir: str,
-    checkpoint_dir: str,
-    score_fn,
-    n_buckets: int = 32,
-):
+def curriculum_store(
+    output_dir: str, score_fn, n_buckets: int = 32
+) -> PartialStore:
     """Curriculum ordering maintained under document ingest — the
     maintenance twin of ``pipeline_ops.curriculum_order``. Appending
     docs shifts every later-ranked doc's global rank, so ranks cannot
@@ -2350,44 +2148,44 @@ def incremental_curriculum(
       re-score.
 
     Replay-idempotent (the score is a pure function of the text, so a
-    replayed batch rewrites identical content)."""
+    replayed batch rewrites identical content). The merge is the
+    IDENTITY (the store's unit is the scored row itself — nothing
+    aggregates), so a fold just rewrites the accumulated union into
+    one base dir; the ``_cbounds.json`` sidecar is untouched (bounds
+    are not batch state). The same store serves the budget-fill read
+    (:func:`budget_fill_state`) when ``score_fn`` is the shared
+    ``budget_scored`` kernel — columns pass through unchanged."""
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
+    def partial(batch: DataFrame, _bid: int) -> DataFrame:
         scored = score_fn(batch)
         _curriculum_bounds(output_dir, scored, n_buckets)
-        scored.write.mode("overwrite").parquet(
-            f"{output_dir}/b{int(batch_id):09d}"
-        )
+        return scored
 
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return PartialStore(output_dir, partial, lambda df: df)
 
 
-def curriculum_state(spark, output_dir: str) -> DataFrame:
+def _pinned_bounds(store: PartialStore) -> list[float]:
+    """The curriculum store's sidecar boundaries."""
+    import json
+
+    p = os.path.join(store.output_dir, "_cbounds.json")
+    with open(p, encoding="utf-8") as fh:
+        return [float(b) for b in json.load(fh)]
+
+
+def curriculum_state(spark, store: PartialStore) -> DataFrame:
     """The current total order ``(doc_id, score, global_rank)``:
     merged (doc_id, score) partials ranked through the SHARED
     ``ranked_with_bounds`` kernel under the sidecar's boundaries."""
-    import json
-    import os
-
     from mevi_spark.plans.pipeline_ops import ranked_with_bounds
 
-    with open(
-        os.path.join(output_dir, "_cbounds.json"), encoding="utf-8"
-    ) as fh:
-        bounds = json.load(fh)
-    merged = _merged_partials(
-        spark, output_dir, lambda df: df.select("doc_id", "score")
-    )
+    merged = store.state(spark).select("doc_id", "score")
+    bounds = _pinned_bounds(store)
     return ranked_with_bounds(merged, "score", ["doc_id"], bounds)
 
 
 def resplit_curriculum(
-    spark, output_dir: str, bucket_cap: int, n_buckets: int = 32
+    spark, store: PartialStore, bucket_cap: int, n_buckets: int = 32
 ) -> int:
     """Re-balance the lazy rank windows after ingest skew: any bucket
     whose row count exceeds ``bucket_cap`` contributes sub-boundaries
@@ -2400,15 +2198,10 @@ def resplit_curriculum(
     data property, not a failure; its window stays large and the cap
     simply cannot bite there."""
     import json
-    import os
-    import uuid as _uuid
 
-    p = os.path.join(output_dir, "_cbounds.json")
-    with open(p, encoding="utf-8") as fh:
-        bounds = [float(b) for b in json.load(fh)]
-    merged = _merged_partials(
-        spark, output_dir, lambda df: df.select("doc_id", "score")
-    )
+    p = os.path.join(store.output_dir, "_cbounds.json")
+    bounds = _pinned_bounds(store)
+    merged = store.state(spark).select("doc_id", "score")
     barr = F.array(*[F.lit(b) for b in bounds])
     bkt = F.aggregate(
         barr,
@@ -2441,115 +2234,50 @@ def resplit_curriculum(
             added.update(float(s) for s in r["q"])
     new = sorted(set(bounds) | added)
     if len(new) != len(bounds):
-        tmp = f"{p}.tmp-{_uuid.uuid4().hex[:8]}"
+        tmp = f"{p}.tmp-{uuid.uuid4().hex[:8]}"
         with open(tmp, "w", encoding="utf-8") as fh:
             json.dump(new, fh)
         os.rename(tmp, p)
     return len(new) - len(bounds)
 
 
-def compact_curriculum(spark, output_dir: str) -> int:
-    """Fold live scored partial dirs into a published base (the
-    crash-safe watermark fold of :func:`compact_rollup`) — the
-    consistency gap every OTHER partial store already closed: without
-    it ``b*`` dirs accumulate forever. The merge is the IDENTITY (the
-    store's unit is the scored row itself — nothing aggregates), so
-    the fold just rewrites the accumulated union into one base dir;
-    the ``_cbounds.json`` sidecar is untouched (boundaries are not
-    batch state). Serves BOTH scored stores — the curriculum rank
-    store's narrow (doc_id, score) partials and the budget-fill
-    store's (doc_id, lang, score, n_tok) partials — columns pass
-    through unchanged."""
-    return _compact_partials(spark, output_dir, lambda df: df)
-
-
-def budget_fill_state(spark, output_dir: str) -> DataFrame:
+def budget_fill_state(spark, store: PartialStore) -> DataFrame:
     """The current token-budget fill served from maintained state —
     the maintenance read of ``pipeline_ops.token_budget_mixture``:
     merged (doc_id, lang, score, n_tok) partials (scored ONCE at
     ingest by the shared ``budget_scored`` kernel through
-    :func:`incremental_curriculum` — the budget store IS the
-    curriculum store with lang and token count carried in the
-    partial) pushed through the shared ``budget_fill`` tail under the
-    sidecar's pinned boundaries. Every read is the bounded
-    three-pass prefix fill over narrow rows — never a re-tokenize."""
-    import json
-    import os
-
+    :func:`curriculum_store` — the budget store IS the curriculum
+    store with lang and token count carried in the partial) pushed
+    through the shared ``budget_fill`` tail under the sidecar's pinned
+    boundaries. Every read is the bounded three-pass prefix fill over
+    narrow rows — never a re-tokenize."""
     from mevi_spark.plans.pipeline_ops import budget_fill
 
-    with open(
-        os.path.join(output_dir, "_cbounds.json"), encoding="utf-8"
-    ) as fh:
-        bounds = [float(b) for b in json.load(fh)]
-    merged = _merged_partials(
-        spark, output_dir,
-        lambda df: df.select("doc_id", "lang", "score", "n_tok"),
-    )
-    return budget_fill(merged, bounds)
+    merged = store.state(spark).select("doc_id", "lang", "score", "n_tok")
+    return budget_fill(merged, _pinned_bounds(store))
 
 
-def incremental_mixture_cells(
-    stream_df: DataFrame,
-    output_dir: str,
-    checkpoint_dir: str,
-    row_col: str = "lang",
-    col_col: str = "source",
-):
+def mixture_cells_store(
+    output_dir: str, row_col: str = "lang", col_col: str = "source"
+) -> PartialStore:
     """(lang, source) cell counts maintained under document ingest —
     the state behind a continuously re-rakeable mixture: each
     micro-batch lands ITS OWN per-cell counts (a batch-bounded
-    groupBy — |langs|·|sources| rows) in the rollup store's per-batch
-    dir; counts are the canonical mergeable partial (sum-foldable),
-    and a replayed batch recomputes identical content
-    (no-merge-in-sink idempotence, :func:`incremental_rollup`
-    verbatim). The corpus is touched exactly once per batch — the
-    IPF sweeps themselves run driver-side on the merged k-bounded
-    cells at read time (``mixture_cells_state`` → ``rake_cells``), so
-    a growing corpus re-rakes without a corpus pass."""
+    groupBy — |langs|·|sources| rows); counts are the canonical
+    mergeable partial (one keyed sum on read, a folded base of
+    |langs|·|sources| rows regardless of batch count), and a replayed
+    batch recomputes identical content. The corpus is touched exactly
+    once per batch — the IPF sweeps themselves run driver-side on the
+    merged k-bounded cells at read time (``rake_cells``), so a growing
+    corpus re-rakes without a corpus pass."""
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        batch.groupBy(row_col, col_col).agg(
-            F.count("*").cast("long").alias("n")
-        ).write.mode("overwrite").parquet(
-            f"{output_dir}/b{int(batch_id):09d}"
-        )
+    def count_cells(df: DataFrame, n) -> DataFrame:
+        return df.groupBy(row_col, col_col).agg(n.cast("long").alias("n"))
 
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def mixture_cells_state(
-    spark, output_dir: str, row_col: str = "lang", col_col: str = "source"
-) -> DataFrame:
-    """The current merged (lang, source, n) cell table: base (if
-    compacted) ⊎ unfolded batch partial dirs, folded by one keyed
-    sum."""
-    return _merged_partials(
-        spark,
+    return PartialStore(
         output_dir,
-        lambda df: df.groupBy(row_col, col_col).agg(
-            F.sum("n").cast("long").alias("n")
-        ),
-    )
-
-
-def compact_mixture_cells(
-    spark, output_dir: str, row_col: str = "lang", col_col: str = "source"
-) -> int:
-    """Fold live cell-count partial dirs into a published base (the
-    crash-safe watermark fold of :func:`compact_rollup`); the base is
-    |langs|·|sources| rows regardless of how many batches arrived."""
-    return _compact_partials(
-        spark,
-        output_dir,
-        lambda df: df.groupBy(row_col, col_col).agg(
-            F.sum("n").cast("long").alias("n")
-        ),
+        lambda batch, _bid: count_cells(batch, F.count("*")),
+        lambda df: count_cells(df, F.sum("n")),
     )
 
 
@@ -2563,8 +2291,6 @@ def _zorder_bounds(output_dir: str, batch: DataFrame, x_of, y_of) -> dict:
     edge buckets; only edge-file pruning selectivity degrades, and a
     compaction after re-pinning (deployment policy) restores it."""
     import json
-    import os
-    import uuid as _uuid
 
     from mevi_spark.sources.zorder import scan_bounds
 
@@ -2574,104 +2300,68 @@ def _zorder_bounds(output_dir: str, batch: DataFrame, x_of, y_of) -> dict:
             return json.load(fh)
     bounds = scan_bounds(batch, x_of(batch), y_of(batch))
     os.makedirs(output_dir, exist_ok=True)
-    tmp = f"{p}.tmp-{_uuid.uuid4().hex[:8]}"
+    tmp = f"{p}.tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w", encoding="utf-8") as fh:
         json.dump(bounds, fh)
     os.rename(tmp, p)
     return bounds
 
 
-def incremental_zorder(
-    stream_df: DataFrame,
+def zorder_store(
     output_dir: str,
-    checkpoint_dir: str,
     x_of,
     y_of,
     files_per_batch: int = 4,
+    n_files: int = 24,
     bits: int | None = None,
-):
+) -> PartialStore:
     """Z-ordered (Morton-clustered) layout maintained under ingest —
     the streaming twin of ``sources/zorder.py::write_zordered`` (the
     Delta/Iceberg ``OPTIMIZE ZORDER BY`` lifecycle: appends land as
     batch-clustered delta dirs, periodic compaction re-clusters).
 
-    Each micro-batch is written z-clustered UNDER THE PINNED BOUNDS to
-    its own ``b<batch_id>`` dir (overwrite mode — a replayed batch
-    rewrites the same row set, never duplicates), so every delta file
-    already carries a bounded min-max range in EACH dimension and the
-    read path (:func:`zorder_state` — base ⊎ deltas) prunes 2-D boxes
-    file-by-file with no reader code. :func:`compact_zorder` folds
-    deltas into a re-clustered base, bounding file count. ``x_of`` /
-    ``y_of`` map the batch frame to its dimension columns (deferred so
-    dtype-dispatching builders like ``epoch_us`` see the live frame).
+    Each micro-batch is written z-clustered UNDER THE PINNED BOUNDS
+    into ``files_per_batch`` files of its own batch dir (a replayed
+    batch rewrites the same row set, never duplicates), so every delta
+    file already carries a bounded min-max range in EACH dimension and
+    the read (base ⊎ deltas, no merge) prunes 2-D boxes file-by-file
+    with no reader code. A fold re-clusters deltas + base into
+    ``n_files`` files under the same pinned bounds — a range shuffle on
+    the z-key instead of an aggregation — bounding file count.
+    ``x_of`` / ``y_of`` map a frame to its dimension columns (deferred
+    so dtype-dispatching builders like ``epoch_us`` see the live
+    frame).
 
     100 TB shape: per batch ONE range shuffle of the batch only;
     compaction is the amortized rewrite every table-maintenance
     service schedules (scope it per ingest partition — e.g. per day —
     at deployment, exactly as the batch writer's docstring says)."""
-    from mevi_spark.sources.zorder import Z_BITS, write_zordered_bounded
+    import json
+
+    from mevi_spark.sources.zorder import Z_BITS, zorder_clustered
 
     zbits = int(bits) if bits is not None else Z_BITS
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
+    def partial(batch: DataFrame, _bid: int) -> DataFrame | None:
         if batch.isEmpty():
             # an empty batch must neither pin degenerate (null)
             # bounds nor publish an empty delta dir
-            return
+            return None
         bounds = _zorder_bounds(output_dir, batch, x_of, y_of)
-        write_zordered_bounded(
-            batch,
-            f"{output_dir}/b{int(batch_id):09d}",
-            x_of(batch),
-            y_of(batch),
-            files_per_batch,
-            bounds,
-            zbits,
+        return zorder_clustered(
+            batch, x_of(batch), y_of(batch), files_per_batch, bounds, zbits
         )
-
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def zorder_state(spark, output_dir: str) -> DataFrame:
-    """The maintained table: compacted base (if any) ⊎ live delta
-    dirs. Every file in every dir is z-clustered, so parquet min-max
-    stats prune multi-dimensional boxes across the whole union."""
-    base, _, live = _rollup_parts(output_dir)
-    paths = ([base] if base else []) + live
-    if not paths:
-        raise FileNotFoundError(f"no z-order state under {output_dir}")
-    return spark.read.parquet(*paths)
-
-
-def compact_zorder(
-    spark, output_dir: str, x_of, y_of, n_files: int = 24,
-    bits: int | None = None,
-) -> int:
-    """Fold live delta dirs (+ current base) into ONE re-clustered
-    base under the layout's pinned bounds — the crash-safe watermark
-    fold of :func:`compact_rollup`, with the merge being a range
-    shuffle on the z-key instead of an aggregation."""
-    import json
-    import os
-
-    from mevi_spark.sources.zorder import Z_BITS, zkey
-
-    zbits = int(bits) if bits is not None else Z_BITS
 
     def recluster(df: DataFrame) -> DataFrame:
         # read lazily: only reached when live delta dirs exist, and a
         # store with delta dirs always has the bounds sidecar (the
-        # sink pins it before the first data write)
+        # partial pins it before the first data write)
         with open(
             os.path.join(output_dir, "_zbounds.json"), encoding="utf-8"
         ) as fh:
             bounds = json.load(fh)
-        z = zkey(x_of(df), y_of(df), bounds, zbits)
-        return df.repartitionByRange(int(n_files), z).sortWithinPartitions(z)
+        return zorder_clustered(
+            df, x_of(df), y_of(df), int(n_files), bounds, zbits
+        )
 
-    return _compact_partials(spark, output_dir, recluster)
+    return PartialStore(output_dir, partial, lambda df: df, fold=recluster)

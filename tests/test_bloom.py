@@ -136,40 +136,6 @@ def test_registered_composition_prunes(spark):
     assert exact <= n_cand < 0.8 * total, (exact, n_cand, total)
 
 
-def test_bloom_store_equals_full_build_and_replays(spark):
-    import shutil
-    import tempfile
-
-    from mevi_spark.functions.bloom import bloom_position_frame
-    from mevi_spark.streaming.incremental import bloom_state, compact_bloom
-
-    keys = [f"blk-{i}" for i in range(3000)]
-    df = spark.createDataFrame([(x,) for x in keys], "g string")
-    base = tempfile.mkdtemp(prefix="bloom_test_")
-    try:
-        # three ingest batches land their own distinct-position partials
-        for i in range(3):
-            part = df.filter(F.crc32(F.col("g")) % 3 == i)
-            bloom_position_frame(part, "g", M, K).write.mode(
-                "overwrite"
-            ).parquet(f"{base}/b{i:09d}")
-        got = bloom_state(spark, base, M)
-        # the maintained bitset equals a from-scratch build EXACTLY
-        # (position-set equality — the OR-fold/distinct equivalence)
-        assert got == bloom_build(df, "g", M, K)
-        # replay: batch 1 rewrites its own dir with identical content
-        part1 = df.filter(F.crc32(F.col("g")) % 3 == 1)
-        bloom_position_frame(part1, "g", M, K).write.mode(
-            "overwrite"
-        ).parquet(f"{base}/b{1:09d}")
-        assert bloom_state(spark, base, M) == got
-        # compaction fold: bitset identical, dirs absorbed
-        assert compact_bloom(spark, base) == 3
-        assert bloom_state(spark, base, M) == got
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
 def test_non_power_of_two_m_rejected():
     # the odd-h2 full-period argument only holds for power-of-two m;
     # _strides must refuse rather than silently degrade the FP rate

@@ -11,7 +11,6 @@ import shutil
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
 
 from mevi_spark.operators.sketch import (
     kmv_bottom_k,
@@ -88,78 +87,20 @@ def test_estimator_within_envelope_and_bound_bites(spark):
 
 
 def test_kmv_store_replay_and_compaction(spark):
-    from mevi_spark.streaming.incremental import compact_kmv, kmv_state
+    """The merged store equals the independent Python replica (replay
+    and the fold: ``test_streaming_maintenance.py::
+    test_partial_store_replay_and_compaction``)."""
+    from mevi_spark.streaming.incremental import kmv_store
 
     k = 32
     keys = [f"s{i}" for i in range(400)]
     base = tempfile.mkdtemp(prefix="kmv_test_")
     try:
+        store = kmv_store(base, "key", k=k)
         for i in range(3):
             part = [x for j, x in enumerate(keys) if j % 3 == i]
-            kmv_bottom_k(_keys_df(spark, part), "key", k).write.mode(
-                "overwrite"
-            ).parquet(f"{base}/b{i:09d}")
-        before = _rows(kmv_state(spark, base, k=k))
-        assert before == _replica(keys, k)
-        # replay: batch 1 rewrites its own dir with identical content
-        part1 = [x for j, x in enumerate(keys) if j % 3 == 1]
-        kmv_bottom_k(_keys_df(spark, part1), "key", k).write.mode(
-            "overwrite"
-        ).parquet(f"{base}/b{1:09d}")
-        assert _rows(kmv_state(spark, base, k=k)) == before
-        # compaction fold: state identical, dirs absorbed
-        assert compact_kmv(spark, base, k=k) == 3
-        assert _rows(kmv_state(spark, base, k=k)) == before
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_grouped_kmv_store_replay_and_compaction(spark):
-    from mevi_spark.operators.sketch import kmv_bottom_k_grouped
-    from mevi_spark.streaming.incremental import (
-        compact_grouped_kmv,
-        grouped_kmv_state,
-    )
-
-    k = 8
-    rows = [(f"g{i % 4}", f"key{i}") for i in range(400)]
-    df = spark.createDataFrame(rows, "grp string, key string")
-    base = tempfile.mkdtemp(prefix="gkmv_test_")
-
-    def _state():
-        return sorted(
-            (r["grp"], r["rnk"], r["key"], r["hh"])
-            for r in grouped_kmv_state(
-                spark, base, ["grp"], k=k
-            ).collect()
-        )
-
-    try:
-        for i in range(3):
-            part = df.filter(F.crc32(F.col("key")) % 3 == i)
-            kmv_bottom_k_grouped(
-                part, "key", k, ["grp"], salt="gsample"
-            ).drop("rnk").write.mode("overwrite").parquet(
-                f"{base}/b{i:09d}"
-            )
-        before = _state()
-        # merged state == one-shot grouped sketch over the whole corpus
-        want = sorted(
-            (r["grp"], r["rnk"], r["key"], r["hh"])
-            for r in kmv_bottom_k_grouped(
-                df, "key", k, ["grp"], salt="gsample"
-            ).collect()
-        )
-        assert before == want
-        # replay: batch 1 rewrites its own dir with identical content
-        part1 = df.filter(F.crc32(F.col("key")) % 3 == 1)
-        kmv_bottom_k_grouped(
-            part1, "key", k, ["grp"], salt="gsample"
-        ).drop("rnk").write.mode("overwrite").parquet(f"{base}/b{1:09d}")
-        assert _state() == before
-        # compaction fold: state identical, dirs absorbed
-        assert compact_grouped_kmv(spark, base, ["grp"], k=k) == 3
-        assert _state() == before
+            store.write(_keys_df(spark, part), i)
+        assert _rows(store.state(spark)) == _replica(keys, k)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 

@@ -345,7 +345,7 @@ def test_incremental_topk_superseded_version_grace(spark, sf_dir, monkeypatch):
     half = docs.filter(F.col("doc_id") % 2 == 0)
     half.write.mode("overwrite").parquet(f"{base}/in")
     schema = docs.schema
-    monkeypatch.setenv("SPARK_GRAFT_TOPK_GRACE", "3600")
+    monkeypatch.setenv("SPARK_GRAFT_PUBLISH_GRACE", "3600")
     stream = stream_parquet_source(spark, f"{base}/in", schema)
     incremental_topk(
         stream, queries, f"{base}/out", f"{base}/ck", k=5
@@ -367,7 +367,7 @@ def test_incremental_topk_superseded_version_grace(spark, sf_dir, monkeypatch):
     assert os.path.isdir(v1)
     assert spark.read.parquet(v1).collect() == rows_v1
     # with grace forced to zero, the next publish reaps the marked dir
-    monkeypatch.setenv("SPARK_GRAFT_TOPK_GRACE", "0")
+    monkeypatch.setenv("SPARK_GRAFT_PUBLISH_GRACE", "0")
     docs.limit(1).write.mode("append").parquet(f"{base}/in")
     stream = stream_parquet_source(spark, f"{base}/in", schema)
     incremental_topk(

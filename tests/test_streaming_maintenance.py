@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from mevi_spark.operators.rollup import (
@@ -15,11 +16,7 @@ from mevi_spark.operators.rollup import (
     merge_rollup_partials,
     rollup_partials,
 )
-from mevi_spark.streaming.incremental import (
-    _rollup_parts,
-    compact_rollup,
-    rollup_state,
-)
+from mevi_spark.streaming.incremental import rollup_store
 
 
 def _events(spark):
@@ -53,53 +50,389 @@ def test_rollup_partials_merge_equals_whole(spark):
 
 
 def test_rollup_state_compaction_bound_and_idempotent_replay(spark):
+    """The rollup store's family-specific bounds (replay and the fold
+    itself: ``test_partial_store_replay_and_compaction``): after the
+    fold the base holds exactly buckets×types rows, and the state
+    finalizes to the rollup shape."""
     ev = _events(spark)
     base = tempfile.mkdtemp(prefix="mevi_test_rollup_")
     out = f"{base}/out"
-    os.makedirs(out)
-    # three "micro-batches" as per-batch partial dirs
+    store = rollup_store(out)
     for i in range(3):
-        part = rollup_partials(
-            ev.filter(F.col("event_id") % 3 == i)
-        )
-        part.write.mode("overwrite").parquet(f"{out}/b{i:09d}")
-    want = {
-        (r.resolution, r.bucket_us, r.event_type): (r.n_events, r.sum_e6)
-        for r in rollup_partials(ev).collect()
-    }
-
-    def state():
-        return {
-            (r.resolution, r.bucket_us, r.event_type): (r.n_events, r.sum_e6)
-            for r in rollup_state(spark, out).collect()
-        }
-
-    assert state() == want
-    # replay-idempotence: a crashed batch re-writes ITS OWN dir with
-    # identical content — state unchanged (no double counting)
-    rollup_partials(ev.filter(F.col("event_id") % 3 == 1)).write.mode(
-        "overwrite"
-    ).parquet(f"{out}/b{1:09d}")
-    assert state() == want
-    # compaction folds all three, state identical, live dirs gone
-    assert compact_rollup(spark, out) == 3
-    _, upto, live = _rollup_parts(out)
-    assert upto == 2 and live == []
-    assert state() == want
+        store.write(ev.filter(F.col("event_id") % 3 == i), i)
+    assert store.compact(spark) == 3
     # the eviction bound: the base holds exactly buckets×types rows
-    n_combo = len(want)
+    n_combo = rollup_partials(ev).count()
     assert spark.read.parquet(f"{out}/base").count() == n_combo
-    # a late batch after compaction: only dirs > watermark are live
-    rollup_partials(ev.filter(F.col("event_id") < 6)).write.mode(
-        "overwrite"
-    ).parquet(f"{out}/b{3:09d}")
-    _, _, live = _rollup_parts(out)
-    assert [os.path.basename(p) for p in live] == ["b000000003"]
-    # finalize shape
-    fin = finalize_rollup(rollup_state(spark, out))
+    fin = finalize_rollup(store.state(spark))
     assert set(fin.columns) == {
         "resolution", "bucket_us", "event_type", "n_events", "sum_value",
     }
+
+
+# ---------------------------------------------------------------------------
+# the partial store, parametrized over every family that keeps one
+
+
+def _rows(df, cols):
+    return sorted((tuple(r) for r in df.select(*cols).collect()), key=repr)
+
+
+def _equal_check(read, want):
+    """A store check that asserts the read equals the family's one-shot
+    answer over ``whole`` and returns it as the comparison snapshot."""
+
+    def check(spark, store, whole):
+        got = read(spark, store)
+        assert got == want(spark, whole)
+        return got
+
+    return check
+
+
+def _split4(df, col):
+    return [df.filter(F.col(col) % 4 == i) for i in range(4)]
+
+
+def _rollup_case(spark, root):
+    from mevi_spark.streaming.incremental import rollup_store
+
+    cols = ["resolution", "bucket_us", "event_type", "n_events", "sum_e6"]
+    return (
+        rollup_store(f"{root}/out"),
+        _split4(_events(spark), "event_id"),
+        _equal_check(
+            lambda spark, s: _rows(s.state(spark), cols),
+            lambda spark, w: _rows(rollup_partials(w), cols),
+        ),
+    )
+
+
+def _lexical_case(spark, root):
+    from mevi_spark.operators.lexical import lexical_partials
+    from mevi_spark.streaming.incremental import lexical_store
+
+    texts = [
+        "the cat sat", "the dog sat down", "a cat ran", "the the the",
+        "", "dog park", "cat and dog", "late arrival text",
+    ]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    cols = ["term", "df", "n_docs", "sum_dl"]
+    return (
+        lexical_store(f"{root}/out"),
+        _split4(docs, "doc_id"),
+        _equal_check(
+            lambda spark, s: _rows(s.state(spark), cols),
+            lambda spark, w: _rows(lexical_partials(w), cols),
+        ),
+    )
+
+
+def _eval_case(spark, root):
+    from mevi_spark.operators.metrics import (
+        eval_metric_partials,
+        finalize_eval_metrics,
+        per_query_metrics,
+    )
+    from mevi_spark.streaming.incremental import eval_metrics_store
+
+    runs = spark.createDataFrame(
+        [
+            (q, [10 * q + j for j in range(q % 3 + 1)], [10 * q + q % 2])
+            for q in range(8)
+        ],
+        "query long, preds array<long>, gt_ids array<long>",
+    )
+
+    def partial_fn(b):
+        return eval_metric_partials(
+            per_query_metrics(
+                b.select("query", "preds"), b.select("query", "gt_ids"),
+                cutoffs=(1, 3),
+            )
+        )
+
+    cols = ["k", "recall", "mrr", "hitrate", "n_queries"]
+    return (
+        eval_metrics_store(f"{root}/out", partial_fn),
+        _split4(runs, "query"),
+        _equal_check(
+            lambda spark, s: _rows(
+                finalize_eval_metrics(s.state(spark)), cols
+            ),
+            lambda spark, w: _rows(finalize_eval_metrics(partial_fn(w)), cols),
+        ),
+    )
+
+
+def _quantile_case(spark, root):
+    from mevi_spark.operators.sketch import mp_certify
+    from mevi_spark.streaming.incremental import quantile_store
+
+    n = 400
+    vals = spark.createDataFrame(
+        [(i, "t", float((i * 37) % n)) for i in range(n)],
+        "i long, event_type string, value double",
+    )
+
+    def check(spark, store, whole):
+        # a compactor summary is not merge-order-invariant: the one-shot
+        # answer is the certificate against the accumulated corpus
+        mp_certify(store.state(spark), whole, k=16)
+        return _rows(store.state(spark), ["event_type", "level", "value"])
+
+    return quantile_store(f"{root}/out", k=16), _split4(vals, "i"), check
+
+
+def _kmv_case(spark, root):
+    from mevi_spark.operators.sketch import kmv_bottom_k
+    from mevi_spark.streaming.incremental import kmv_store
+
+    keys = spark.createDataFrame(
+        [(i, f"s{i}") for i in range(200)], "i long, key string"
+    )
+    return (
+        kmv_store(f"{root}/out", "key", k=16),
+        _split4(keys, "i"),
+        _equal_check(
+            lambda spark, s: _rows(s.state(spark), ["key", "hh"]),
+            lambda spark, w: _rows(kmv_bottom_k(w, "key", 16), ["key", "hh"]),
+        ),
+    )
+
+
+def _grouped_kmv_case(spark, root):
+    from mevi_spark.operators.sketch import kmv_bottom_k_grouped
+    from mevi_spark.streaming.incremental import grouped_kmv_store
+
+    rows = spark.createDataFrame(
+        [(i, f"g{i % 3}", f"key{i}") for i in range(200)],
+        "i long, grp string, key string",
+    )
+    cols = ["grp", "rnk", "key", "hh"]
+    return (
+        grouped_kmv_store(f"{root}/out", "key", ["grp"], k=4, salt="gsample"),
+        _split4(rows, "i"),
+        _equal_check(
+            lambda spark, s: _rows(s.state(spark), cols),
+            lambda spark, w: _rows(
+                kmv_bottom_k_grouped(w, "key", 4, ["grp"], salt="gsample"),
+                cols,
+            ),
+        ),
+    )
+
+
+def _bloom_case(spark, root):
+    from mevi_spark.functions.bloom import bloom_build
+    from mevi_spark.streaming.incremental import bloom_store, bloom_words
+
+    m, k = 1 << 12, 3
+    keys = spark.createDataFrame(
+        [(i, f"blk-{i}") for i in range(400)], "i long, g string"
+    )
+    return (
+        bloom_store(f"{root}/out", "g", m, k),
+        _split4(keys, "i"),
+        _equal_check(
+            lambda spark, s: bloom_words(spark, s, m),
+            lambda spark, w: bloom_build(w, "g", m, k),
+        ),
+    )
+
+
+def _mixture_cells_case(spark, root):
+    from mevi_spark.streaming.incremental import mixture_cells_store
+
+    docs = spark.createDataFrame(
+        [
+            (i, ["en", "fr", "de"][i % 3], ["web", "books"][i % 5 % 2])
+            for i in range(120)
+        ],
+        "doc_id long, lang string, source string",
+    )
+    cols = ["lang", "source", "n"]
+    return (
+        mixture_cells_store(f"{root}/out"),
+        _split4(docs, "doc_id"),
+        _equal_check(
+            lambda spark, s: _rows(s.state(spark), cols),
+            lambda spark, w: _rows(
+                w.groupBy("lang", "source").agg(
+                    F.count("*").cast("long").alias("n")
+                ),
+                cols,
+            ),
+        ),
+    )
+
+
+def _curriculum_case(spark, root):
+    from mevi_spark.streaming.incremental import (
+        curriculum_state,
+        curriculum_store,
+    )
+
+    # tied scores across batches: the served order breaks ties by id
+    scored = spark.createDataFrame(
+        [(i, float(i % 7) / 7.0) for i in range(120)],
+        "doc_id long, score double",
+    )
+
+    def want(spark, whole):
+        ranked = sorted((r.score, r.doc_id) for r in whole.collect())
+        return {d: i + 1 for i, (_, d) in enumerate(ranked)}
+
+    return (
+        curriculum_store(f"{root}/out", lambda b: b, n_buckets=4),
+        _split4(scored, "doc_id"),
+        _equal_check(
+            lambda spark, s: {
+                r.doc_id: r.global_rank
+                for r in curriculum_state(spark, s).collect()
+            },
+            want,
+        ),
+    )
+
+
+def _zorder_case(spark, root):
+    from mevi_spark.streaming.incremental import zorder_store
+
+    ev = spark.createDataFrame(
+        [(i, i * 7 % 50, 1_000_000 + i * 3_600) for i in range(160)],
+        "event_id long, user_id long, ts_us long",
+    )
+    cols = ["event_id", "user_id", "ts_us"]
+    return (
+        zorder_store(
+            f"{root}/out",
+            lambda df: F.col("user_id"),
+            lambda df: F.col("ts_us"),
+            files_per_batch=2,
+            n_files=3,
+        ),
+        _split4(ev, "event_id"),
+        _equal_check(
+            lambda spark, s: _rows(s.state(spark), cols),
+            lambda spark, w: _rows(w, cols),
+        ),
+    )
+
+
+def _wds_case(spark, root):
+    from collections import Counter
+
+    from mevi_spark.sources.wds import SAMPLE_SCHEMA, _BATCH_STRIDE, wds_store
+
+    samples = spark.createDataFrame(
+        [(i, "image", bytes([i]) * (i + 1), 4, 2, 1) for i in range(24)],
+        SAMPLE_SCHEMA,
+    )
+    # batch i holds doc_ids 6i..6i+5, spread over two shards per batch
+    batches = [
+        samples.filter(F.col("doc_id").between(6 * i, 6 * i + 5))
+        for i in range(4)
+    ]
+
+    def want(spark, whole):
+        c = Counter(
+            (r.doc_id // 6) * _BATCH_STRIDE + r.doc_id % 2
+            for r in whole.select("doc_id").collect()
+        )
+        return sorted(c.items())
+
+    return (
+        wds_store(root, shards_per_batch=2),
+        batches,
+        _equal_check(
+            lambda spark, s: sorted(
+                (r.shard_id, r.n_samples) for r in s.state(spark).collect()
+            ),
+            want,
+        ),
+    )
+
+
+_STORE_CASES = {
+    "rollup": _rollup_case,
+    "lexical": _lexical_case,
+    "eval_metrics": _eval_case,
+    "quantiles": _quantile_case,
+    "kmv": _kmv_case,
+    "grouped_kmv": _grouped_kmv_case,
+    "bloom": _bloom_case,
+    "mixture_cells": _mixture_cells_case,
+    "curriculum": _curriculum_case,
+    "zorder": _zorder_case,
+    "wds": _wds_case,
+}
+
+
+@pytest.mark.parametrize("family", sorted(_STORE_CASES))
+def test_partial_store_replay_and_compaction(spark, family, monkeypatch):
+    """Every partial store, driven only through its own ``write``: the
+    merged state equals the family's one-shot answer; a replayed batch
+    changes nothing before or after the fold; the fold absorbs every
+    live dir; a crash between writing the new base and flipping the
+    symlink changes no read, and the next fold reaps the orphan; late
+    batches stay live until the next fold."""
+    import functools
+    import shutil
+
+    from mevi_spark.plans.staging import _STALE_MARK
+
+    root = tempfile.mkdtemp(prefix=f"mevi_test_store_{family}_")
+    try:
+        store, batches, check = _STORE_CASES[family](spark, root)
+
+        def whole(n):
+            return functools.reduce(
+                lambda a, b: a.unionByName(b), batches[:n]
+            )
+
+        for i in range(3):
+            store.write(batches[i], i)
+        snap = check(spark, store, whole(3))
+        # a crashed batch replays into its own dir: nothing changes
+        store.write(batches[1], 1)
+        assert check(spark, store, whole(3)) == snap
+        assert store.compact(spark) == 3
+        assert store.live() == []
+        assert check(spark, store, whole(3)) == snap
+        # an absorbed batch replayed after the fold is excluded by the
+        # base's watermark
+        store.write(batches[1], 1)
+        assert store.live() == []
+        assert check(spark, store, whole(3)) == snap
+        # a late batch stays live until the next fold
+        store.write(batches[3], 3)
+        assert len(store.live()) == 1
+        snap = check(spark, store, whole(4))
+        # crash window: the fold wrote its version dir, then died before
+        # the symlink flip — readers never see the orphan
+        orphans = []
+
+        def crash(src, dst):
+            orphans.append(src)
+            raise OSError("crash before the base flip")
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "symlink", crash)
+            with pytest.raises(OSError, match="crash before the base flip"):
+                store.compact(spark)
+        assert len(orphans) == 1 and os.path.isdir(orphans[0])
+        assert len(store.live()) == 1
+        assert check(spark, store, whole(4)) == snap
+        # the next fold absorbs the late batch and marks the orphan stale
+        assert store.compact(spark) == 1
+        assert os.path.exists(os.path.join(orphans[0], _STALE_MARK))
+        assert check(spark, store, whole(4)) == snap
+        assert store.compact(spark) == 0
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def test_incremental_neardup_converges_to_batch(spark):
@@ -1052,19 +1385,13 @@ def test_chunk_kept_incremental_first_owner_wins_and_copy_forward(spark):
 
 def test_incremental_lexical_stats_converges_and_replays(spark):
     """Lexical (BM25/TF-IDF) corpus stats as mergeable partials: the
-    merged state over three batch dirs equals an independently computed
-    batch answer; a crashed batch's replay (its dir rewritten) changes
-    nothing; compaction folds everything into one vocabulary-sized base
-    with identical state."""
-    import os
+    merged state over three batches equals an answer computed
+    independently in Python, and the fold leaves one vocabulary-sized
+    base (replay and the fold's state invariance:
+    ``test_partial_store_replay_and_compaction``)."""
     import shutil
 
-    from mevi_spark.operators.lexical import lexical_partials
-    from mevi_spark.streaming.incremental import (
-        _rollup_parts,
-        compact_lexical,
-        lexical_state,
-    )
+    from mevi_spark.streaming.incremental import lexical_store
 
     texts = {
         1: "the cat sat",
@@ -1088,33 +1415,18 @@ def test_incremental_lexical_stats_converges_and_replays(spark):
 
     base = tempfile.mkdtemp(prefix="mevi_test_lex_")
     out = f"{base}/out"
-    os.makedirs(out)
+    store = lexical_store(out)
     try:
         for i in range(3):
-            lexical_partials(
-                docs.filter(F.col("doc_id") % 3 == i)
-            ).write.mode("overwrite").parquet(f"{out}/b{i:09d}")
-
-        def state():
-            rows = lexical_state(spark, out).collect()
-            dfs = {r.term: r.df for r in rows if r.term is not None}
-            sent = [r for r in rows if r.term is None]
-            assert len(sent) == 1
-            return dfs, sent[0].n_docs, sent[0].sum_dl
-
-        dfs, n, dl = state()
-        assert dfs == want_df and n == want_n and dl == want_dl
-        # replay-idempotence: batch 1 rewrites ITS OWN dir identically
-        lexical_partials(
-            docs.filter(F.col("doc_id") % 3 == 1)
-        ).write.mode("overwrite").parquet(f"{out}/b{1:09d}")
-        assert state() == (want_df, want_n, want_dl)
-        # compaction: all three folded, no live dirs, state identical,
-        # base bounded at vocabulary + sentinel rows
-        assert compact_lexical(spark, out) == 3
-        _, upto, live = _rollup_parts(out)
-        assert upto == 2 and live == []
-        assert state() == (want_df, want_n, want_dl)
+            store.write(docs.filter(F.col("doc_id") % 3 == i), i)
+        rows = store.state(spark).collect()
+        dfs = {r.term: r.df for r in rows if r.term is not None}
+        sent = [r for r in rows if r.term is None]
+        assert len(sent) == 1
+        assert dfs == want_df
+        assert (sent[0].n_docs, sent[0].sum_dl) == (want_n, want_dl)
+        # the fold's base is bounded at vocabulary + sentinel rows
+        assert store.compact(spark) == 3
         assert (
             spark.read.parquet(f"{out}/base").count() == len(want_df) + 1
         )
@@ -1238,7 +1550,7 @@ def test_components_monotone_ingest_touches_batch_buckets_only(spark):
 
 
 # ---------------------------------------------------------------------------
-# incremental quantile summaries (mp_batch_partials / quantile_state)
+# incremental quantile summaries (mp_batch_partials / quantile_store)
 
 
 def test_quantile_summary_small_is_exact_and_certifies(spark):
@@ -1264,17 +1576,14 @@ def test_quantile_summary_small_is_exact_and_certifies(spark):
 
 def test_quantile_store_batches_compact_and_certify(spark):
     """Three batch partials merged on read: capacity respected at every
-    level, tracked bound certifies against the accumulated corpus,
-    compaction fold leaves the drained state identical, and a replayed
-    batch dir rewrites identical content."""
+    level and the tracked bound certifies small against the accumulated
+    corpus (replay and the fold:
+    ``test_partial_store_replay_and_compaction``)."""
     import shutil
     import tempfile
 
-    from mevi_spark.operators.sketch import mp_batch_partials, mp_certify
-    from mevi_spark.streaming.incremental import (
-        compact_quantiles,
-        quantile_state,
-    )
+    from mevi_spark.operators.sketch import mp_certify
+    from mevi_spark.streaming.incremental import quantile_store
 
     k = 16
     base = tempfile.mkdtemp(prefix="mpq_test_")
@@ -1284,29 +1593,11 @@ def test_quantile_store_batches_compact_and_certify(spark):
             [("t", float((i * 37) % n)) for i in range(n)],
             "event_type string, value double",
         )
+        store = quantile_store(base, k=k)
         for i in range(3):
-            mp_batch_partials(
-                df.filter(F.col("value").cast("long") % 3 == i), k=k
-            ).write.mode("overwrite").parquet(f"{base}/b{i:09d}")
-
-        def state_rows():
-            return sorted(
-                (r["event_type"], r["level"], r["value"])
-                for r in quantile_state(spark, base, k=k).collect()
-            )
-
-        before = state_rows()
-        rel = mp_certify(quantile_state(spark, base, k=k), df, k=k)
+            store.write(df.filter(F.col("value").cast("long") % 3 == i), i)
+        rel = mp_certify(store.state(spark), df, k=k)
         assert 0.0 < rel["t"] < 0.25  # compactions fired, bound small
-        # replay: batch 1 rewrites its own dir with identical content
-        mp_batch_partials(
-            df.filter(F.col("value").cast("long") % 3 == 1), k=k
-        ).write.mode("overwrite").parquet(f"{base}/b{1:09d}")
-        assert state_rows() == before
-        # compaction fold: state identical, dirs absorbed
-        assert compact_quantiles(spark, base, k=k) == 3
-        assert state_rows() == before
-        mp_certify(quantile_state(spark, base, k=k), df, k=k)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -1434,16 +1725,14 @@ def test_components_empty_batches(spark):
 
 
 # ---------------------------------------------------------------------------
-# incremental eval metrics (eval_metric_partials / eval_metrics_state)
+# incremental eval metrics (eval_metric_partials / eval_metrics_store)
 
 
 def test_incremental_eval_metrics_converges_and_replays(spark):
     """Eval metrics as mergeable partials: per-query contributions
     split across three waves fold to EXACTLY the one-shot evaluate_run
-    answer (decimal-stabilized means); a replayed wave rewrites its own
-    dir and changes nothing; compaction folds to one |cutoffs|-row base
-    with identical finalized metrics."""
-    import os
+    answer (decimal-stabilized means; replay and the fold:
+    ``test_partial_store_replay_and_compaction``)."""
     import shutil
     import tempfile
 
@@ -1453,11 +1742,7 @@ def test_incremental_eval_metrics_converges_and_replays(spark):
         finalize_eval_metrics,
         per_query_metrics,
     )
-    from mevi_spark.streaming.incremental import (
-        _rollup_parts,
-        compact_eval_metrics,
-        eval_metrics_state,
-    )
+    from mevi_spark.streaming.incremental import eval_metrics_store
 
     run = spark.createDataFrame(
         [
@@ -1491,38 +1776,25 @@ def test_incremental_eval_metrics_converges_and_replays(spark):
     }
 
     base = tempfile.mkdtemp(prefix="mevi_test_evalm_")
-    out = f"{base}/out"
-    os.makedirs(out)
     try:
-
-        def wave(i):
-            return eval_metric_partials(
+        # each wave carries its queries' run and ground truth
+        store = eval_metrics_store(
+            f"{base}/out",
+            lambda b: eval_metric_partials(
                 per_query_metrics(
-                    run.filter(F.col("query") % 3 == i),
-                    gt.filter(F.col("query") % 3 == i),
+                    b.select("query", "preds"),
+                    b.select("query", "gt_ids"),
                     cutoffs=cutoffs,
                 )
-            )
-
+            ),
+        )
+        waves = run.join(gt, "query")
         for i in range(3):
-            wave(i).write.mode("overwrite").parquet(f"{out}/b{i:09d}")
-
-        def state():
-            return {
-                r["k"]: (r["recall"], r["mrr"], r["hitrate"], r["n_queries"])
-                for r in finalize_eval_metrics(
-                    eval_metrics_state(spark, out)
-                ).collect()
-            }
-
-        assert state() == want
-        # replay-idempotence: wave 1 rewrites its own dir identically
-        wave(1).write.mode("overwrite").parquet(f"{out}/b{1:09d}")
-        assert state() == want
-        assert compact_eval_metrics(spark, out) == 3
-        _, upto, live = _rollup_parts(out)
-        assert upto == 2 and live == []
-        assert state() == want
+            store.write(waves.filter(F.col("query") % 3 == i), i)
+        assert {
+            r["k"]: (r["recall"], r["mrr"], r["hitrate"], r["n_queries"])
+            for r in finalize_eval_metrics(store.state(spark)).collect()
+        } == want
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -1540,21 +1812,20 @@ def test_curriculum_state_serves_exact_total_order(spark):
     import tempfile
 
     from mevi_spark.streaming.incremental import (
-        _curriculum_bounds,
         curriculum_state,
+        curriculum_store,
     )
 
     base = tempfile.mkdtemp(prefix="curr_test_")
     try:
         rows = [(i, float((i * 37) % 100) / 100.0) for i in range(300)]
         parts = [rows[0::3], rows[1::3], rows[2::3]]
+        store = curriculum_store(base, lambda b: b, n_buckets=8)
         for i, part in enumerate(parts):
-            scored = _curr_scored(spark, part)
-            _curriculum_bounds(base, scored, 8)
-            scored.write.mode("overwrite").parquet(f"{base}/b{i:09d}")
+            store.write(_curr_scored(spark, part), i)
         got = {
             r["doc_id"]: r["global_rank"]
-            for r in curriculum_state(spark, base).collect()
+            for r in curriculum_state(spark, store).collect()
         }
         want = {
             d: i + 1
@@ -1573,8 +1844,8 @@ def test_curriculum_resplit_is_order_invariant_and_rebalances(spark):
     import tempfile
 
     from mevi_spark.streaming.incremental import (
-        _curriculum_bounds,
         curriculum_state,
+        curriculum_store,
         resplit_curriculum,
     )
 
@@ -1585,29 +1856,28 @@ def test_curriculum_resplit_is_order_invariant_and_rebalances(spark):
         b1 = [(i, i / 1000.0) for i in range(100)]
         b2 = [(1000 + i, 0.9 + (i % 50) / 1000.0) for i in range(200)]
         b3 = [(2000 + i, 0.95 + (i % 50) / 1000.0) for i in range(200)]
+        store = curriculum_store(base, lambda b: b, n_buckets=4)
         for i, part in enumerate([b1, b2, b3]):
-            scored = _curr_scored(spark, part)
-            _curriculum_bounds(base, scored, 4)
-            scored.write.mode("overwrite").parquet(f"{base}/b{i:09d}")
+            store.write(_curr_scored(spark, part), i)
         before = sorted(
             (r["doc_id"], r["score"], r["global_rank"])
-            for r in curriculum_state(spark, base).collect()
+            for r in curriculum_state(spark, store).collect()
         )
         with open(f"{base}/_cbounds.json", encoding="utf-8") as fh:
             n_bounds0 = len(json.load(fh))
-        added = resplit_curriculum(spark, base, bucket_cap=120, n_buckets=4)
+        added = resplit_curriculum(spark, store, bucket_cap=120, n_buckets=4)
         assert added > 0
         with open(f"{base}/_cbounds.json", encoding="utf-8") as fh:
             assert len(json.load(fh)) == n_bounds0 + added
         # served order is EXACTLY unchanged by boundary refinement
         after = sorted(
             (r["doc_id"], r["score"], r["global_rank"])
-            for r in curriculum_state(spark, base).collect()
+            for r in curriculum_state(spark, store).collect()
         )
         assert after == before
         # a second resplit at the same cap finds nothing new to split
         # beyond ties (idempotent once balanced at this granularity)
-        again = resplit_curriculum(spark, base, bucket_cap=120, n_buckets=4)
+        again = resplit_curriculum(spark, store, bucket_cap=120, n_buckets=4)
         assert again <= added
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -1618,27 +1888,24 @@ def test_curriculum_replay_rewrites_identical_partial(spark):
     import tempfile
 
     from mevi_spark.streaming.incremental import (
-        _curriculum_bounds,
         curriculum_state,
+        curriculum_store,
     )
 
     base = tempfile.mkdtemp(prefix="curr_test_")
     try:
         rows = [(i, float(i % 7) / 7.0) for i in range(120)]
         parts = [rows[0::2], rows[1::2]]
+        store = curriculum_store(base, lambda b: b, n_buckets=4)
         for i, part in enumerate(parts):
-            scored = _curr_scored(spark, part)
-            _curriculum_bounds(base, scored, 4)
-            scored.write.mode("overwrite").parquet(f"{base}/b{i:09d}")
+            store.write(_curr_scored(spark, part), i)
         before = sorted(
-            tuple(r) for r in curriculum_state(spark, base).collect()
+            tuple(r) for r in curriculum_state(spark, store).collect()
         )
         # crash-replay: batch 1 rewrites its own dir (same pure score)
-        _curr_scored(spark, parts[1]).write.mode("overwrite").parquet(
-            f"{base}/b{1:09d}"
-        )
+        store.write(_curr_scored(spark, parts[1]), 1)
         assert (
-            sorted(tuple(r) for r in curriculum_state(spark, base).collect())
+            sorted(tuple(r) for r in curriculum_state(spark, store).collect())
             == before
         )
     finally:
@@ -1646,47 +1913,39 @@ def test_curriculum_replay_rewrites_identical_partial(spark):
 
 
 def test_compact_curriculum_folds_and_replays(spark):
-    import os
     import shutil
     import tempfile
 
     from mevi_spark.streaming.incremental import (
-        _curriculum_bounds,
-        _rollup_parts,
-        compact_curriculum,
         curriculum_state,
+        curriculum_store,
     )
 
     base = tempfile.mkdtemp(prefix="curr_compact_")
     try:
         rows = [(i, float((i * 37) % 100) / 100.0) for i in range(300)]
         parts = [rows[0::3], rows[1::3], rows[2::3]]
+        store = curriculum_store(base, lambda b: b, n_buckets=8)
         for i, part in enumerate(parts):
-            scored = _curr_scored(spark, part)
-            _curriculum_bounds(base, scored, 8)
-            scored.write.mode("overwrite").parquet(f"{base}/b{i:09d}")
+            store.write(_curr_scored(spark, part), i)
 
         def state():
             return sorted(
-                tuple(r) for r in curriculum_state(spark, base).collect()
+                tuple(r) for r in curriculum_state(spark, store).collect()
             )
 
         want = state()
         # replay before the fold: a crashed batch rewrites its own dir
-        _curr_scored(spark, parts[1]).write.mode("overwrite").parquet(
-            f"{base}/b{1:09d}"
-        )
+        store.write(_curr_scored(spark, parts[1]), 1)
         assert state() == want
         # the fold: served order identical, live dirs absorbed
-        assert compact_curriculum(spark, base) == 3
-        _, upto, live = _rollup_parts(base)
-        assert upto == 2 and live == []
+        assert store.compact(spark) == 3
+        assert store.live() == []
         assert state() == want
         # a late batch after the fold stays live and serves
         late = [(9000 + i, 0.5 + i / 1000.0) for i in range(10)]
-        _curr_scored(spark, late).write.mode("overwrite").parquet(
-            f"{base}/b{3:09d}"
-        )
+        store.write(_curr_scored(spark, late), 3)
+        assert [os.path.basename(p) for p in store.live()] == ["b000000003"]
         all_rows = rows + late
         want_rank = {
             d: i + 1
@@ -1696,30 +1955,27 @@ def test_compact_curriculum_folds_and_replays(spark):
         }
         got = {
             r["doc_id"]: r["global_rank"]
-            for r in curriculum_state(spark, base).collect()
+            for r in curriculum_state(spark, store).collect()
         }
         assert got == want_rank
         # a second fold absorbs the late dir too
-        assert compact_curriculum(spark, base) == 1
+        assert store.compact(spark) == 1
         assert {
             r["doc_id"]: r["global_rank"]
-            for r in curriculum_state(spark, base).collect()
+            for r in curriculum_state(spark, store).collect()
         } == want_rank
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
 
 def test_mixture_cells_state_merges_compacts_and_replays(spark):
+    """The folded cell-count base is bounded at |langs|·|sources| rows
+    (the merge, replay and fold themselves:
+    ``test_partial_store_replay_and_compaction``)."""
     import shutil
     import tempfile
 
-    import pyspark.sql.functions as F
-
-    from mevi_spark.streaming.incremental import (
-        _rollup_parts,
-        compact_mixture_cells,
-        mixture_cells_state,
-    )
+    from mevi_spark.streaming.incremental import mixture_cells_store
 
     base = tempfile.mkdtemp(prefix="cells_")
     try:
@@ -1730,38 +1986,11 @@ def test_mixture_cells_state_merges_compacts_and_replays(spark):
         docs = spark.createDataFrame(
             rows, "doc_id long, lang string, source string"
         )
+        store = mixture_cells_store(base)
         for i in range(3):
-            docs.filter(F.col("doc_id") % 3 == i).groupBy(
-                "lang", "source"
-            ).agg(F.count("*").cast("long").alias("n")).write.mode(
-                "overwrite"
-            ).parquet(f"{base}/b{i:09d}")
-        want = {
-            (r["lang"], r["source"]): r["n"]
-            for r in docs.groupBy("lang", "source")
-            .agg(F.count("*").cast("long").alias("n"))
-            .collect()
-        }
-
-        def state():
-            return {
-                (r["lang"], r["source"]): r["n"]
-                for r in mixture_cells_state(spark, base).collect()
-            }
-
-        assert state() == want
-        # replay-idempotence: re-writing one batch dir changes nothing
-        docs.filter(F.col("doc_id") % 3 == 1).groupBy(
-            "lang", "source"
-        ).agg(F.count("*").cast("long").alias("n")).write.mode(
-            "overwrite"
-        ).parquet(f"{base}/b{1:09d}")
-        assert state() == want
-        # the fold: state identical, base bounded at |langs|*|sources|
-        assert compact_mixture_cells(spark, base) == 3
-        _, upto, live = _rollup_parts(base)
-        assert upto == 2 and live == []
-        assert state() == want
-        assert spark.read.parquet(f"{base}/base").count() == len(want)
+            store.write(docs.filter(F.col("doc_id") % 3 == i), i)
+        assert store.compact(spark) == 3
+        n_cells = len({(lang, src) for _, lang, src in rows})
+        assert spark.read.parquet(f"{base}/base").count() == n_cells
     finally:
         shutil.rmtree(base, ignore_errors=True)

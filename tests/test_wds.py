@@ -154,7 +154,7 @@ def test_wds_incremental_stream_equals_one_shot(spark):
     """The streaming wrapper drained over file-sliced input yields a
     shard set whose samples equal the one-shot write_wds_shards of the
     same corpus, and the manifest union accounts for every sample."""
-    from mevi_spark.sources.wds import incremental_wds, read_wds_manifest
+    from mevi_spark.sources.wds import wds_store
 
     df = _mk_samples(spark, 30)
     root = tempfile.mkdtemp(prefix="mevi_wds_inc_")
@@ -168,10 +168,8 @@ def test_wds_incremental_stream_equals_one_shot(spark):
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{root}/in/s*")
         )
-        q = incremental_wds(
-            stream, f"{root}/out", f"{root}/ckpt", shards_per_batch=3
-        )
-        q.awaitTermination()
+        store = wds_store(f"{root}/out", shards_per_batch=3)
+        store.start(stream, f"{root}/ckpt").awaitTermination()
         one_shot = os.path.join(root, "oneshot")
         write_wds_shards(df, one_shot, n_shards=3).collect()
         got = sorted(
@@ -185,61 +183,7 @@ def test_wds_incremental_stream_equals_one_shot(spark):
             for r in read_wds_shards(spark, one_shot).collect()
         )
         assert got == want
-        man = read_wds_manifest(spark, f"{root}/out")
+        man = store.state(spark)
         assert sum(r.n_samples for r in man.collect()) == 30
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def test_wds_manifest_compaction_bounds_dirs_and_preserves_reads(spark):
-    """compact_wds_manifest folds per-batch manifest dirs into one
-    published base: read equivalence before/after, zero live dirs
-    after, and a replayed pre-watermark batch is ignored by readers."""
-    from mevi_spark.sources.wds import (
-        compact_wds_manifest,
-        incremental_wds,
-        read_wds_manifest,
-    )
-    from mevi_spark.streaming.incremental import _rollup_parts
-
-    df = _mk_samples(spark, 30)
-    root = tempfile.mkdtemp(prefix="mevi_wds_cmp_")
-    try:
-        for i, pred in enumerate(
-            ("doc_id < 10", "doc_id >= 10 AND doc_id < 20", "doc_id >= 20")
-        ):
-            df.filter(pred).coalesce(1).write.mode("overwrite").parquet(
-                f"{root}/in/s{i:02d}"
-            )
-        stream = (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/in/s*")
-        )
-        q = incremental_wds(
-            stream, f"{root}/out", f"{root}/ckpt", shards_per_batch=3
-        )
-        q.awaitTermination()
-
-        def manifest():
-            return sorted(
-                (r.shard_id, r.path, r.n_samples)
-                for r in read_wds_manifest(spark, f"{root}/out").collect()
-            )
-
-        before = manifest()
-        assert compact_wds_manifest(spark, f"{root}/out") == 3
-        _, upto, live = _rollup_parts(f"{root}/out/manifest")
-        assert upto == 2 and live == []
-        assert manifest() == before
-        # replay of an absorbed batch: its dir reappears ≤ watermark —
-        # readers must ignore it (no duplicated manifest rows)
-        spark.createDataFrame(
-            [r for r in spark.read.parquet(f"{root}/out/manifest/base")
-             .collect() if r.shard_id // 1_000_000 == 1]
-        ).write.mode("overwrite").parquet(f"{root}/out/manifest/b000000001")
-        assert manifest() == before
-        # compacting again with nothing live is a no-op
-        assert compact_wds_manifest(spark, f"{root}/out") == 0
     finally:
         shutil.rmtree(root, ignore_errors=True)

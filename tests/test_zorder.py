@@ -114,18 +114,15 @@ def test_zorder_scan_pushes_filters(layouts):
 def test_incremental_zorder_deltas_prune_replay_and_compact(
     spark, tmp_path_factory
 ):
-    """Maintenance twin invariants: (a) each delta dir's files carry
-    bounded per-dimension ranges (prune-able before any compaction),
-    (b) a replayed batch rewrites the same row set (no duplicates),
-    (c) compaction preserves the table exactly and absorbs the dirs,
-    (d) bounds pinned by batch 0 CLAMP batch 1's out-of-range rows
-    into edge buckets without losing them."""
-    from mevi_spark.sources.zorder import write_zordered_bounded
-    from mevi_spark.streaming.incremental import (
-        _zorder_bounds,
-        compact_zorder,
-        zorder_state,
-    )
+    """Maintenance twin invariants (replay and the fold itself:
+    ``test_streaming_maintenance.py::
+    test_partial_store_replay_and_compaction``): (a) bounds pinned by
+    batch 0 are not re-derived by batch 1, (b) each delta dir's files
+    carry bounded per-dimension ranges (prune-able before any
+    compaction), (c) batch 1's rows outside the pinned bounds CLAMP
+    into edge buckets — in its delta and through the fold's
+    re-cluster — without being lost."""
+    from mevi_spark.streaming.incremental import _zorder_bounds, zorder_store
 
     base = str(tmp_path_factory.mktemp("inc_zorder"))
     ev = load_table(spark, SF, "events").withColumn(
@@ -141,32 +138,23 @@ def test_incremental_zorder_deltas_prune_replay_and_compact(
     # batch 0 pins bounds over HALF the user range; batch 1 exceeds it
     b0 = ev.filter(F.col("user_id") < 75)
     b1 = ev.filter(F.col("user_id") >= 75)
-    bounds = _zorder_bounds(base, b0, x_of, y_of)
-    assert bounds["xmx"] < 75
-    for i, b in enumerate((b0, b1)):
-        got = _zorder_bounds(base, b, x_of, y_of)
-        assert got == bounds  # pinned: batch 1 does NOT re-derive
-        write_zordered_bounded(
-            b, f"{base}/b{i:09d}", x_of(b), y_of(b), 12, bounds
-        )
+    store = zorder_store(base, x_of, y_of, files_per_batch=12, n_files=12)
+    store.write(b0, 0)
+    store.write(b1, 1)
+    # (a) the sidecar still holds batch 0's bounds
+    assert _zorder_bounds(base, b1, x_of, y_of)["xmx"] < 75
 
-    # (a) delta files bound BOTH dimensions: a ~40%-of-range user
+    # (b) delta files bound BOTH dimensions: a ~40%-of-range user
     # slice must skip files in the un-compacted delta itself
-    zr = _file_ranges(f"{base}/b{0:09d}", ["user_id", "ts_us"])
+    zr = _file_ranges(store.live()[0], ["user_id", "ts_us"])
     assert _overlap(zr, "user_id", 40, 70) <= 0.8 * len(zr)
 
+    # (c) out-of-range rows clamped into edge buckets, never dropped
     want = sorted(map(tuple, ev.collect()))
 
     def state_rows():
-        return sorted(map(tuple, zorder_state(spark, base).collect()))
+        return sorted(map(tuple, store.state(spark).collect()))
 
     assert state_rows() == want
-    # (b) replay batch 1: same rows, no duplicates
-    write_zordered_bounded(
-        b1, f"{base}/b{1:09d}", x_of(b1), y_of(b1), 6, bounds
-    )
-    assert state_rows() == want
-    # (c)+(d) compaction folds both dirs, table unchanged (out-of-range
-    # rows clamped into edge buckets, never dropped)
-    assert compact_zorder(spark, base, x_of, y_of, n_files=12) == 2
+    assert store.compact(spark) == 2
     assert state_rows() == want
