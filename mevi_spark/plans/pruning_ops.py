@@ -14,8 +14,8 @@ partition directories —
 * **dynamic partition pruning (DPP)** when they arrive from the coarse
   join (``dynamicpruningexpression`` on the scan's partition filters).
 
-:func:`scan_file_counts` reads the *planned* file listing off the
-``FileSourceScan`` node (Spark 4's ``ScanFileListing``:
+:func:`~mevi_spark.plans.plan_facts.plan_facts` reads the *planned*
+file listing off each scan (Spark 4's ``ScanFileListing``:
 ``partitionCount``/``totalNumberOfFiles``), so the registered query
 asserts files-read < total-files from the same machinery the scheduler
 uses — not from a re-listing of the directory.
@@ -26,41 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mevi_spark.operators.rerank import write_partitioned_embeddings
+from mevi_spark.plans.plan_facts import plan_facts
 from mevi_spark.plans.registry import register
 from mevi_spark.plans.staging import ensure_staged
 from mevi_spark.sources.io import load_table
-
-
-def scan_file_counts(df: DataFrame) -> tuple[int, int]:
-    """(partitions, files) the first parquet scan of ``df``'s physical
-    plan will actually read, after partition pruning. Walks the
-    pre-adaptive plan (``sparkPlan``), so the ``FileSourceScan`` node is
-    directly visible, and reads its pruned ``ScanFileListing``."""
-
-    def walk(n):
-        if "FileSourceScan" in n.getClass().getSimpleName():
-            yield n
-        for i in range(n.children().size()):
-            yield from walk(n.children().apply(i))
-
-    node = next(walk(df._jdf.queryExecution().sparkPlan()), None)
-    if node is None:
-        raise ValueError(
-            "scan_file_counts: plan has no FileSourceScan leaf (a "
-            "cached frame hides the scan under InMemoryTableScan — "
-            "pass the uncached scan frame)"
-        )
-    listing = node.selectedPartitions()
-    return int(listing.partitionCount()), int(listing.totalNumberOfFiles())
-
-
-def has_dpp(df: DataFrame) -> bool:
-    """True if the physical plan applies dynamic partition pruning to
-    some scan (``dynamicpruningexpression`` in the partition filters)."""
-    return (
-        "dynamicpruning"
-        in df._jdf.queryExecution().executedPlan().toString().lower()
-    )
 
 
 def write_label_partitioned(
@@ -113,9 +82,9 @@ def partition_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_staged("prune_idx", sf_dir, write)
     part = spark.read.parquet(path)
 
-    total_parts, total_files = scan_file_counts(part)
+    (total,) = plan_facts(part).scans
     pruned_df = part.filter(F.col("code_prefix").isin([1, 2, 3]))
-    pruned_parts, pruned_files = scan_file_counts(pruned_df)
+    (pruned,) = plan_facts(pruned_df).scans
 
     coarse = (
         load_table(spark, sf_dir, "embeddings")
@@ -123,13 +92,14 @@ def partition_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("label").cast("long").alias("code_prefix"))
         .distinct()
     )
-    dpp = has_dpp(part.join(F.broadcast(coarse), "code_prefix"))
+    dpp = plan_facts(part.join(F.broadcast(coarse), "code_prefix")).dpp
 
     n_rows = pruned_df.count()
     row = (
-        int(total_parts),
-        int(pruned_parts),
-        1 if (pruned_parts < total_parts and pruned_files < total_files) else 0,
+        total.partitions,
+        pruned.partitions,
+        1 if (pruned.partitions < total.partitions
+              and pruned.files < total.files) else 0,
         1 if dpp else 0,
         int(n_rows),
     )

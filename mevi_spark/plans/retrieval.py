@@ -736,7 +736,7 @@ def _fine_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     VERDICT r3 #6)."""
 
     def build() -> DataFrame:
-        from mevi_spark.plans.pruning_ops import has_dpp
+        from mevi_spark.plans.plan_facts import plan_facts
 
         path = stage_fine_layout(spark, sf_dir)
         from mevi_spark.sources.io import scan_parquet
@@ -753,7 +753,7 @@ def _fine_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         # planner conf — assert it once per (layout, conf) instead of
         # re-analyzing the physical plan (≈0.2 s of py4j) per rebuild
         key = (path, _dpp_conf_key(spark))
-        if key not in _DPP_OK and not has_dpp(fine):
+        if key not in _DPP_OK and not plan_facts(fine).dpp:
             raise RuntimeError(
                 "coarse-to-fine expansion join did not plan dynamic "
                 "partition pruning over the staged cluster-keyed layout"

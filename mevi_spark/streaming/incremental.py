@@ -30,6 +30,7 @@ from pyspark.sql.types import StructType
 
 from mevi_spark.functions.agg import scaled_long
 from mevi_spark.functions.time import epoch_us
+from mevi_spark.operators.cache import release
 from mevi_spark.operators.rq import assign_nearest, centroid_entries
 
 
@@ -50,9 +51,21 @@ def _drain_batches(stream_df: DataFrame, checkpoint_dir: str, sink):
     """Start ``sink(batch, batch_id)`` over ``stream_df`` — the one
     trigger policy of every maintainer here: ``availableNow`` drains
     what exists, then stops (the bounded-run mode; a production deploy
-    drops the trigger). Returns the started query."""
+    drops the trigger). Returns the started query.
+
+    Each micro-batch arrives on its own Python session object, so the
+    frames a sink parks with ``defer_unpersist`` are released when its
+    batch ends — no later ``release`` of the caller's session can
+    reach them."""
+
+    def run(batch: DataFrame, batch_id: int) -> None:
+        try:
+            sink(batch, batch_id)
+        finally:
+            release(batch.sparkSession)
+
     return (
-        stream_df.writeStream.foreachBatch(sink)
+        stream_df.writeStream.foreachBatch(run)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

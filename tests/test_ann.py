@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from mevi_spark.operators.ann import lsh_topk_join
 from mevi_spark.operators.topk import exact_topk_join
+from mevi_spark.plans.plan_facts import plan_facts
 
 
 def _sides(spark, sf_dir):
@@ -253,14 +254,13 @@ def test_adc_scans_only_codes_and_matches_reconstruction(spark, sf_dir, tmp_path
         F.col("embedding").alias("query_vec"),
     )
     out = adc_topk_join(qs, stored, codebook, k=10, nprobe=3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    import re as _re
-    scan_schemas = _re.findall(r"ReadSchema: (\S+)", plan)
-    mapping_scans = [s for s in scan_schemas if "code_0" in s]
-    assert mapping_scans, plan
-    assert all("vec" not in s and "embedding" not in s for s in mapping_scans), (
-        f"ADC scan reads vector columns: {mapping_scans}"
-    )
+    mapping_scans = [
+        s.read_schema for s in plan_facts(out).scans if "code_0" in s.read_schema
+    ]
+    assert mapping_scans
+    assert all(
+        not {"vec", "doc_vec", "embedding"} & set(cols) for cols in mapping_scans
+    ), f"ADC scan reads vector columns: {mapping_scans}"
 
     # brute-force reconstruction parity on the same probes
     cents = {

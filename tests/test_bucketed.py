@@ -9,12 +9,9 @@ import uuid
 
 from pyspark.sql import functions as F
 
+from mevi_spark.plans.plan_facts import plan_facts
 from mevi_spark.sources.bucketed import bucketed_join, write_bucketed
 from mevi_spark.sources.io import load_table
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_bucketed_join_is_exchange_free(spark, sf_dir, tmp_path):
@@ -36,13 +33,13 @@ def test_bucketed_join_is_exchange_free(spark, sf_dir, tmp_path):
             spark.table(t_c),
             F.col("o_custkey") == F.col("c_custkey"),
         )
-        plan = _plan(j)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
+        facts = plan_facts(j)
+        assert facts.joins == ("SortMergeJoin",)
+        assert not facts.shuffles and not facts.broadcasts, facts
         # (a per-task Sort remains: Spark only elides it for
         # one-file-per-bucket sorted scans; the shuffle elimination is
         # the property that matters — Sort is partition-local)
-        assert "Bucketed: true" in plan and "SelectedBucketsCount" in plan
+        assert [s.bucketed for s in facts.scans] == [True, True]
 
         got = sorted(
             (r.o_orderkey, r.c_mktsegment, float(r.o_totalprice))
@@ -80,8 +77,8 @@ def test_bucketed_groupby_is_exchange_free(spark, sf_dir, tmp_path):
             .groupBy("o_custkey")
             .agg(F.count("*").alias("n"))
         )
-        plan = _plan(agg)
-        assert "Exchange" not in plan, plan
+        facts = plan_facts(agg)
+        assert not facts.shuffles and not facts.broadcasts, facts
         assert agg.count() == orders.select("o_custkey").distinct().count()
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {t_o}")

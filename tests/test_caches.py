@@ -93,3 +93,32 @@ def test_dpp_conf_key_works_on_default_confs(spark):
             pass
     key = R._dpp_conf_key(fresh)
     assert len(key) == 3 and all(v for v in key)
+
+
+def test_drained_batches_leave_cache_manager_as_found(spark, tmp_path):
+    """Each micro-batch arrives on its own Python session object, out of
+    reach of the caller's ``clear_session_caches``: ``_drain_batches``
+    must release what its sink parked with ``defer_unpersist``."""
+    from mevi_spark.operators.cache import defer_unpersist
+    from mevi_spark.streaming.incremental import (
+        _drain_batches,
+        stream_parquet_source,
+    )
+
+    src, seen = str(tmp_path / "in"), []
+    for i in range(3):
+        spark.range(10 * i, 10 * i + 10).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    R.clear_session_caches(spark)
+    before = cache_manager.numCachedEntries()
+
+    def sink(batch, _batch_id):
+        seen.append(defer_unpersist(batch.persist()).count())
+
+    stream = stream_parquet_source(spark, src, "id long")
+    _drain_batches(stream, str(tmp_path / "ckpt"), sink).awaitTermination()
+    R.clear_session_caches(spark)
+    assert seen == [10, 10, 10]
+    assert cache_manager.numCachedEntries() == before

@@ -10,6 +10,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from mevi_spark.plans.plan_facts import plan_facts
 from mevi_spark.sources.packed import pack_sequences, write_packed_sequences
 
 L = 7  # deliberately not a divisor of the fixture's token count
@@ -120,15 +121,11 @@ def test_pack_sequences_single_shuffle(spark):
     on top of the prefix-sum's bucket window exchange — no join, no
     cartesian (the span fan-out is an explode, not a join)."""
     docs = _docs(spark)
-    plan = (
-        pack_sequences(docs, L)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "CartesianProduct" not in plan and "Join" not in plan
+    facts = plan_facts(pack_sequences(docs, L))
+    assert not facts.joins
     # exchanges: one for the per-bucket window sort, one for groupBy
-    assert plan.count("Exchange hashpartitioning") <= 2
+    assert len(facts.shuffles) <= 2
+    assert {s.partitioning for s in facts.shuffles} <= {"HashPartitioning"}
 
 
 def test_append_packed_equals_batch_and_blocks_immutable(spark):

@@ -22,6 +22,7 @@ from mevi_spark.plans.pipeline_ops import (
     text_tfidf_topterms,
 )
 from mevi_spark.functions.text import normalize_text, tokens
+from mevi_spark.plans.plan_facts import plan_facts
 from mevi_spark.sources.io import load_table
 
 
@@ -188,24 +189,15 @@ def test_round7_plan_shapes(spark, sf_dir):
         text_repetition_stats,
     )
 
-    rep = (
-        text_repetition_stats(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
     # The ONLY allowed exchange is the spread's round-robin one: no
-    # hash/range partitioning (no keyed shuffle), and at most one
-    # Exchange node total.
-    assert rep.count("Exchange") <= 1
-    assert "hashpartitioning" not in rep and "rangepartitioning" not in rep
-
-    dec = (
-        decontaminate_eval(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    # keyed shuffle, no broadcast, at most one exchange total.
+    rep = plan_facts(text_repetition_stats(spark, sf_dir))
+    assert rep.broadcasts == 0
+    assert [s.partitioning for s in rep.shuffles] in (
+        [], ["RoundRobinPartitioning"]
     )
+
+    dec = plan_facts(decontaminate_eval(spark, sf_dir)).joins
     assert "SortMergeJoin" not in dec and "BroadcastHashJoin" in dec
 
 
@@ -220,11 +212,11 @@ def test_bm25_query_side_broadcast_is_pinned(spark, sf_dir):
 
     df = bm25_search(spark, sf_dir)
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
-    executed = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in executed
+    joins = plan_facts(df).joins
+    assert "BroadcastHashJoin" in joins
     # the broadcast must be the HINTED query side, visible pre-stats
     assert "broadcast" in optimized.lower()
-    assert "SortMergeJoin" not in executed
+    assert "SortMergeJoin" not in joins
 
 
 def test_domain_mix_rates_and_determinism(spark, sf_dir):

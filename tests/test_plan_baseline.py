@@ -1,7 +1,7 @@
 """Exchange-count regression gate (VERDICT r8 next-round #6): the hot
-queries' shuffle counts are pinned in ``tools/plan_baseline.json`` and
-an unexplained increase fails here, the same way DPP and broadcast
-shapes are already pinned. The FULL registry is checked by
+queries' shuffle counts are pinned exactly in ``tools/plan_baseline.json``
+and any change fails here, the same way DPP and broadcast shapes are
+already pinned. The FULL registry is checked by
 ``python tools/plan_audit.py --check`` (this subset keeps the pytest
 fast: bench queries + the r9-new plans, none of which execute drains
 at construction)."""
@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import os
 import sys
+
+import pytest
 
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "tools")
@@ -45,16 +47,6 @@ SUBSET = [
 def test_exchange_counts_match_baseline(spark, sf_dir):
     import plan_audit
 
-    # The baseline pins the FRESH-BUILD plan of each query. Under the
-    # shared session, earlier tests leave persisted frames in the
-    # CacheManager; Catalyst then substitutes those cached relations
-    # into new builds, and the substituted InMemoryRelation's *stored
-    # child plan text* still shows its own upstream exchanges — nodes
-    # that never re-execute (the relation is materialized) but that
-    # the regex count sees, inflating e.g. dedup_minhash_pairs 5 → 9
-    # purely by test order. Clear the cache so the audited plan is the
-    # same fresh-build plan `tools/plan_audit.py` pins standalone.
-    spark.catalog.clearCache()
     report = [
         e
         for e in plan_audit.audit(spark, sf_dir, filters=tuple(SUBSET))
@@ -64,6 +56,25 @@ def test_exchange_counts_match_baseline(spark, sf_dir):
         e["query"] for e in report
     }.symmetric_difference(SUBSET)
     assert not plan_audit.flagged(report)
-    baseline = plan_audit.load_baseline()
-    violations, _improvements = plan_audit.check_exchanges(report, baseline)
+    violations = plan_audit.check_exchanges(report, plan_audit.load_baseline())
     assert not violations, violations
+
+
+@pytest.mark.parametrize(
+    "first, audited",
+    [
+        ("bloom_decontaminate", "decontaminate_eval"),
+        ("dedup_canonicalize", "dedup_minhash_pairs"),
+    ],
+)
+def test_audit_is_independent_of_build_order(spark, sf_dir, first, audited):
+    """Frames ``first`` persists must not change ``audited``'s count
+    (the regex count once read 7 and 9 against pins of 5)."""
+    import plan_audit
+    from mevi_spark.plans.registry import get_queries
+
+    get_queries()[first](spark, sf_dir)
+    report = plan_audit.audit(spark, sf_dir, filters=(audited,))
+    (entry,) = [e for e in report if e["query"] == audited]
+    assert entry["exchanges"] == plan_audit.load_baseline()["exchanges"][audited]
+    assert not plan_audit.flagged([entry])

@@ -7,6 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from mevi_spark.plans.plan_facts import plan_facts
 from mevi_spark.operators.pq import (
     adc_lut,
     adc_scan_scores,
@@ -86,9 +87,9 @@ def test_adc_scores_equal_lut_sum(fixture):
 
 def test_pq_encode_plan_broadcasts_codebook(fixture):
     *_, codes = fixture
-    plan = codes._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan and "Cartesian" not in plan
+    joins = plan_facts(codes).joins
+    assert "BroadcastHashJoin" in joins
+    assert not {"SortMergeJoin", "CartesianProduct"} & set(joins)
 
 
 def test_ivf_pq_full_probe_equals_exhaustive_adc(fixture):

@@ -11,11 +11,8 @@ import tempfile
 from pyspark.sql import functions as F
 
 from mevi_spark.operators.rerank import coarse_to_fine
-from mevi_spark.plans.pruning_ops import (
-    has_dpp,
-    scan_file_counts,
-    write_label_partitioned,
-)
+from mevi_spark.plans.plan_facts import plan_facts
+from mevi_spark.plans.pruning_ops import write_label_partitioned
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -32,13 +29,11 @@ def _queries(spark):
 def test_static_pruning_reads_fewer_files(spark):
     path = tempfile.mkdtemp(prefix="prune_static_") + "/emb"
     part = write_label_partitioned(spark, SF_DIR, path)
-    total_parts, total_files = scan_file_counts(part)
-    pruned_parts, pruned_files = scan_file_counts(
-        part.filter(F.col("code_prefix").isin([0, 1]))
-    )
-    assert total_parts == 10  # one dir per label
-    assert pruned_parts == 2
-    assert pruned_files < total_files
+    (total,) = plan_facts(part).scans
+    (pruned,) = plan_facts(part.filter(F.col("code_prefix").isin([0, 1]))).scans
+    assert total.partitions == 10  # one dir per label
+    assert pruned.partitions == 2
+    assert pruned.files < total.files
 
 
 def test_fine_path_on_partitioned_table_prunes_and_matches(spark):
@@ -69,4 +64,4 @@ def test_fine_path_on_partitioned_table_prunes_and_matches(spark):
     joined = part.join(
         F.broadcast(coarse.select("code_flat").distinct()), "code_flat"
     )
-    assert has_dpp(joined)
+    assert plan_facts(joined).dpp

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mevi_spark.operators.sq import sq8_encode, sq8_reconstruct, sq8_train
+from mevi_spark.plans.plan_facts import plan_facts
 from mevi_spark.sources.io import load_table
 
 
@@ -54,10 +55,5 @@ def test_sq8_encode_is_map_only(spark, sf_dir, trained):
     """Encode/reconstruct must stay shuffle-free — the 100 TB contract:
     no Exchange in the physical plan (the train agg runs separately)."""
     emb, mins, maxs = trained
-    plan = (
-        sq8_reconstruct(sq8_encode(emb, mins, maxs), mins, maxs)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan
+    facts = plan_facts(sq8_reconstruct(sq8_encode(emb, mins, maxs), mins, maxs))
+    assert not facts.shuffles and not facts.broadcasts

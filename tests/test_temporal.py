@@ -8,6 +8,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from mevi_spark.operators.temporal import asof_join, range_join_binned
+from mevi_spark.plans.plan_facts import plan_facts
 from mevi_spark.plans.temporal_ops import (
     _HOUR_US,
     events_asof_attribution,
@@ -68,24 +69,12 @@ def test_temporal_plan_shapes(spark):
     """The reason these operators exist: the as-of is ONE keyed shuffle
     (no join node at all), and the range join is an equi-join — no
     cartesian product, no broadcast-nested-loop."""
-    asof_plan = (
-        events_asof_attribution(spark, SF)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    # union+window, not a join
+    assert not plan_facts(events_asof_attribution(spark, SF)).joins
+    range_joins = plan_facts(events_range_pairs(spark, SF)).joins
+    assert range_joins
     for bad in ("CartesianProduct", "BroadcastNestedLoopJoin"):
-        assert bad not in asof_plan
-    assert "SortMergeJoin" not in asof_plan  # union+window, not a join
-
-    range_plan = (
-        events_range_pairs(spark, SF)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    for bad in ("CartesianProduct", "BroadcastNestedLoopJoin"):
-        assert bad not in range_plan
+        assert bad not in range_joins
 
 
 def test_asof_tolerance_and_tiebreak(spark):
@@ -144,14 +133,9 @@ def test_hypertable_rollup_is_single_scan(spark):
     resolutions — not three scans unioned."""
     from mevi_spark.plans.temporal_ops import events_hypertable_rollup
 
-    plan = (
-        events_hypertable_rollup(spark, SF)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Scan parquet") == 1
-    assert plan.count("Expand") >= 1
+    facts = plan_facts(events_hypertable_rollup(spark, SF))
+    assert len(facts.scans) == 1
+    assert facts.nodes["Expand"] >= 1
 
 
 def test_funnel_stages_match_python(spark):

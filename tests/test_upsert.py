@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from mevi_spark.plans.plan_facts import plan_facts
 from mevi_spark.sources.upsert import apply_changes
 
 
@@ -61,14 +62,9 @@ def test_merge_plan_is_single_keyed_shuffle(spark):
         F.lit("U").alias("_op"),
         F.lit(2).cast("long").alias("_version"),
     )
-    plan = (
-        apply_changes(base, changes, ["k"])
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
+    facts = plan_facts(apply_changes(base, changes, ["k"]))
+    assert [s.partitioning for s in facts.shuffles] == ["HashPartitioning"]
+    assert not {"SortMergeJoin", "CartesianProduct"} & set(facts.joins)
 
 
 from hypothesis import HealthCheck, given, settings, strategies as st
@@ -214,8 +210,8 @@ def test_merge_into_partitioned_prunes_and_rewrites_only_touched(spark):
     assert got == want
     # the pruned scan carries partition filters (physical-plan property)
     pruned = spark.read.parquet(path).filter(F.col("p").isin([0, 1]))
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "p#" in plan
+    (scan,) = plan_facts(pruned).scans
+    assert scan.partition_filters and scan.partitions == 2
 
     import shutil
 

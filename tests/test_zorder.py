@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mevi_spark.functions.time import epoch_us
+from mevi_spark.plans.plan_facts import plan_facts
 from mevi_spark.sources.io import load_table
 from mevi_spark.sources.zorder import write_zordered
 
@@ -101,14 +102,8 @@ def test_zorder_scan_pushes_filters(layouts):
     reader's row-group pruning)."""
     spark, ev, zpath, tpath = layouts
     z = spark.read.parquet(zpath)
-    plan = (
-        z.filter(F.col("user_id").between(40, 70))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters: [" in plan
-    assert "GreaterThanOrEqual(user_id,40)" in plan
+    (scan,) = plan_facts(z.filter(F.col("user_id").between(40, 70))).scans
+    assert "GreaterThanOrEqual(user_id,40)" in scan.pushed_filters
 
 
 def test_incremental_zorder_deltas_prune_replay_and_compact(

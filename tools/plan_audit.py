@@ -4,36 +4,42 @@
 regressions; this tool audits the WHOLE registry so a scale-killer in a
 rarely-benched query can't hide. For each query it builds the DataFrame
 (no execution beyond what the query's own construction does) and
-inspects the physical plan for:
+reads the physical plan's facts (:func:`mevi_spark.plans.plan_facts.
+plan_facts`) for:
 
 * ``CartesianProduct`` / ``BroadcastNestedLoopJoin`` — unbounded join
   strategies. Queries whose lineage contains a SANCTIONED bounded
   crossJoin (K-row codebook fan-outs, the beam's per-level expansion,
   diagnostic all-code enumeration, grid configs) are listed in
   ``BOUNDED_CROSS_OK`` with the bounding argument;
-* Exchange count — PINNED against ``tools/plan_baseline.json``
-  (VERDICT r8 next-round #6): ``--check`` fails on any INCREASE over
-  the committed count (a silent extra shuffle is exactly the
-  regression class the DPP/broadcast shape pins already catch for
-  their queries), and on queries missing from the baseline. Decreases
-  are improvements — reported, and ``--update`` re-pins them;
-* whole-stage codegen presence — informational.
+* shuffle-exchange count — PINNED EXACTLY against
+  ``tools/plan_baseline.json`` (VERDICT r8 next-round #6): ``--check``
+  fails on any count that differs from the committed one (an extra
+  shuffle is the regression the DPP/broadcast shape pins catch for
+  their queries; a removed one must be re-pinned with ``--update`` so
+  the pin stays true), and on queries missing from the baseline;
+* cache leaks — every build starts from ``clear_session_caches``, and
+  a query that leaves a new CacheManager entry behind after the next
+  ``clear_session_caches`` is flagged: its cached relation would leak
+  into every later query's plan, so with none flagged the counts are
+  independent of build order;
+* whole-stage codegen stages — informational.
 
 Usage::
 
     python tools/plan_audit.py [sf_dir] [name...]   # report (default sf0.001)
-    python tools/plan_audit.py --check [sf_dir]     # fail on exchange regressions
+    python tools/plan_audit.py --check [sf_dir]     # fail on any pin mismatch
     python tools/plan_audit.py --update [sf_dir]    # re-pin plan_baseline.json
 
-Exit code 1 if any UNsanctioned unbounded join appears (any mode), or
-in ``--check`` mode on any exchange-count increase / unpinned query.
+Exit code 1 if any UNsanctioned unbounded join, build error or cache
+leak appears (any mode), or in ``--check`` mode on any exchange-count
+mismatch / unpinned query.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -66,26 +72,32 @@ BOUNDED_CROSS_OK = {
 
 def audit(spark, sf_dir: str, filters: tuple[str, ...] = ()) -> list[dict]:
     """Build every (filtered) registered query's plan and report the
-    join-shape / exchange-count / codegen facts."""
+    join-shape / exchange-count / codegen / cache-leak facts. Each
+    build starts from cleared session caches, so no query's plan
+    depends on which queries were built before it."""
     from mevi_spark.plans import registry
+    from mevi_spark.plans.plan_facts import plan_facts
+    from mevi_spark.plans.retrieval import clear_session_caches
 
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
     qs = registry.get_queries()
     report = []
     for name, fn in qs.items():
         if filters and not any(f in name for f in filters):
             continue
+        clear_session_caches(spark)
+        cached_before = cache_manager.numCachedEntries()
         try:
-            df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            facts = plan_facts(fn(spark, sf_dir))
         except Exception as exc:  # noqa: BLE001
             report.append({"query": name, "error": str(exc)[:200]})
             continue
-        cart = "CartesianProduct" in plan
-        bnlj = "BroadcastNestedLoopJoin" in plan
+        cart = "CartesianProduct" in facts.joins
+        bnlj = "BroadcastNestedLoopJoin" in facts.joins
         entry = {
             "query": name,
-            "exchanges": len(re.findall(r"\bExchange\b", plan)),
-            "codegen": "WholeStageCodegen" in plan,
+            "exchanges": len(facts.shuffles),
+            "codegen_stages": facts.codegen_stages,
             "cartesian": cart,
             "bnlj": bnlj,
         }
@@ -93,16 +105,24 @@ def audit(spark, sf_dir: str, filters: tuple[str, ...] = ()) -> list[dict]:
             entry["verdict"] = "UNBOUNDED-JOIN"
         elif cart or bnlj:
             entry["verdict"] = f"bounded: {BOUNDED_CROSS_OK[name]}"
+        clear_session_caches(spark)
+        leaked = cache_manager.numCachedEntries() - cached_before
+        if leaked:
+            entry["leaked_cache_entries"] = leaked
+            spark.catalog.clearCache()  # keep later builds independent
         report.append(entry)
     return report
 
 
 def flagged(report: list[dict]) -> list[str]:
-    """Names with an unsanctioned unbounded join or a build error."""
+    """Names with an unsanctioned unbounded join, a build error, or a
+    cache entry left behind after ``clear_session_caches``."""
     return [
         e["query"]
         for e in report
-        if e.get("verdict") == "UNBOUNDED-JOIN" or "error" in e
+        if e.get("verdict") == "UNBOUNDED-JOIN"
+        or "error" in e
+        or "leaked_cache_entries" in e
     ]
 
 
@@ -111,16 +131,12 @@ def load_baseline() -> dict:
         return json.load(fh)
 
 
-def check_exchanges(
-    report: list[dict], baseline: dict
-) -> tuple[list[str], list[str]]:
-    """(violations, improvements) of exchange counts vs the baseline.
-
-    A count INCREASE or an unpinned query is a violation; a decrease is
-    an improvement to re-pin with ``--update``. Queries in the baseline
-    but absent from the report (filtered runs) are ignored."""
+def check_exchanges(report: list[dict], baseline: dict) -> list[str]:
+    """Violations of the exact exchange-count pins: a count that
+    differs from the baseline, or an unpinned query. Queries in the
+    baseline but absent from the report (filtered runs) are ignored."""
     pinned = baseline["exchanges"]
-    violations, improvements = [], []
+    violations = []
     for e in report:
         name = e["query"]
         if "error" in e:
@@ -130,17 +146,13 @@ def check_exchanges(
                 f"{name}: not pinned in plan_baseline.json — run "
                 f"`python tools/plan_audit.py --update` and review the diff"
             )
-        elif e["exchanges"] > pinned[name]:
+        elif e["exchanges"] != pinned[name]:
             violations.append(
-                f"{name}: {e['exchanges']} exchanges > pinned "
-                f"{pinned[name]} — an extra shuffle crept in; fix the "
-                f"plan or justify + re-pin with --update"
+                f"{name}: {e['exchanges']} exchanges != pinned "
+                f"{pinned[name]} — fix the plan, or review the change "
+                f"and re-pin with --update"
             )
-        elif e["exchanges"] < pinned[name]:
-            improvements.append(
-                f"{name}: {e['exchanges']} < pinned {pinned[name]}"
-            )
-    return violations, improvements
+    return violations
 
 
 def main() -> None:
@@ -187,11 +199,9 @@ def main() -> None:
                 f"alias as regressions",
                 file=sys.stderr,
             )
-        violations, improvements = check_exchanges(report, baseline)
+        violations = check_exchanges(report, baseline)
         for v in violations:
             print(f"VIOLATION {v}", file=sys.stderr)
-        for i in improvements:
-            print(f"improved  {i}", file=sys.stderr)
         bad.extend(violations)
 
     print(json.dumps(report, indent=1))
