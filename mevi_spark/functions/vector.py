@@ -1,6 +1,7 @@
 """Vector scalar functions as pure column expressions (SURVEY.md §2.8).
 
-All of these stay JVM-side inside whole-stage codegen — no Python UDFs.
+All of these stay JVM-side inside whole-stage codegen — no Python UDFs;
+:func:`dot_fold` is the NumPy twin of :func:`dot` for Python kernels.
 Arithmetic is done in float64 regardless of the storage type (embeddings
 are ``array<float>`` on disk) so results are deterministic and match the
 DuckDB oracle bit-for-bit: both engines fold the array left-to-right in
@@ -12,7 +13,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, functions as F
 
 
@@ -225,66 +225,27 @@ def code_unflat(flat: Column | str, k: int, m: int) -> Column:
     return F.array(*parts)
 
 
-def dot_seq_arrow(a: Column | str, b: Column | str) -> Column:
-    """Arrow-vectorized dot product, BIT-IDENTICAL to :func:`dot`.
+def dot_fold(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """NumPy twin of :func:`dot`, BIT-IDENTICAL to it: the products
+    ``a[..., j]·b[..., j]`` summed left to right from a 0.0 seed over
+    the last axis, with the leading axes broadcast — ``dot_fold(x, x)``
+    is every row's squared norm, ``dot_fold(x[:, None], y[None])`` the
+    Gram matrix of two row sets, built by rank-1 updates in dimension
+    order::
 
-    :func:`dot`'s ``F.aggregate(zip_with(...))`` is a higher-order
-    expression Spark evaluates with the interpreted expression
-    evaluator, per row, outside whole-stage codegen — ~20-30 µs per
-    64-dim pair, which dominates every pair-verify join (SemDeDup's
-    tournament evaluates it once per candidate pair). This variant
-    ships the two vector columns through ONE Arrow batch to a
-    vectorized kernel that accumulates IN DIMENSION ORDER across the
-    whole batch::
+        acc = 0.0 + a0·b0; acc += a1·b1; ...
 
-        acc = A[:,0]*B[:,0]; acc += A[:,1]*B[:,1]; ...
-
-    Per pair that is exactly the left-to-right float64 fold
-    ``(0.0 + a0·b0) + a1·b1 + a2·b2 …`` of the interpreted form — IEEE
-    ops applied in the same order give the same bits, so oracle
-    hash-equality is preserved (pinned by
-    ``tests/test_property.py::test_dot_seq_arrow_bit_identical``).
-
-    Measured (sf1 scale run, SemDeDup guarded tournament, dim=64): NO
-    net win over the interpreted fold there — extracting the UDF loses
-    the ``beats``-first And short-circuit (the UDF evaluates for ALL
-    join-output pairs, the fold only for the surviving half), and the
-    2× evaluation count cancels the ~2× per-eval vectorization gain
-    (medians 23.7 s vs 21.8 s, inside the box's noise band). It wins
-    only where the dot is UNCONDITIONAL per candidate row and dim is
-    large enough for the Arrow batch to amortize (≳256 at the measured
-    per-eval ratio); below that, or wherever a cheap predicate can
-    gate the fold, keep :func:`dot`. For bulk many-to-many scoring use
-    the blocked kernel in ``operators/topk.py`` instead — it ships
-    each vector once per block, not once per pair.
-
-    Precondition: non-null inputs whose partial products and running
-    sums stay FINITE. An overflowing pair produces ±inf/NaN identically
-    in both kernels, but the Arrow return path then diverges — pandas'
-    NaN is the null sentinel, so the UDF yields NULL where the fold
-    yields NaN. Real embedding dots sit far below DBL_MAX, so the
-    bit-identity contract is scoped to finite results.
-    """
-    # module-level np/pd imports exist so pyspark can resolve the
-    # stringified type hints (PEP 563 is active in this module)
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _dot_seq(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if len(va) == 0:
-            return pd.Series(np.zeros(0, dtype=np.float64))
-        A = np.stack([np.asarray(x, dtype=np.float64) for x in va])
-        B = np.stack([np.asarray(x, dtype=np.float64) for x in vb])
-        if A.shape[1] == 0:  # dot([]) == the fold's 0.0 seed
-            return pd.Series(np.zeros(len(va), dtype=np.float64))
-        # `+ 0.0` replicates the fold's 0.0 seed: it normalizes a -0.0
-        # first product to +0.0 exactly as `0.0 + (-0.0)` does (IEEE
-        # addition is commutative bitwise), and is an identity for
-        # every other finite value — without it a pair whose running
-        # sum stays -0.0 would hash-differ from dot()'s +0.0.
-        acc = A[:, 0] * B[:, 0] + 0.0
-        for d in range(1, A.shape[1]):
-            acc = acc + A[:, d] * B[:, d]
-        return pd.Series(acc)
-
-    return _dot_seq(_d(a), _d(b))
+    Per entry that is exactly the interpreted ``F.aggregate`` fold —
+    IEEE ops applied in the same order give the same bits (the 0.0
+    seed turns a ``-0.0`` sum into ``+0.0`` in both), so results
+    computed here hash-match the Spark expression and the oracles
+    (pinned by ``tests/test_property.py::test_dot_fold_bit_identical``).
+    A BLAS matmul would not: it reassociates the sum."""
+    a = np.ascontiguousarray(np.moveaxis(np.asarray(a, np.float64), -1, 0))
+    b = np.ascontiguousarray(np.moveaxis(np.asarray(b, np.float64), -1, 0))
+    acc = np.zeros(np.broadcast_shapes(a.shape[1:], b.shape[1:]))
+    term = np.empty_like(acc)
+    for aj, bj in zip(a, b, strict=True):
+        np.multiply(aj, bj, out=term)
+        acc += term
+    return acc

@@ -12,7 +12,9 @@ standard web-scale recipes):
   are reproducible run-to-run and checkable against a DuckDB oracle;
 * candidate verification (Jaccard / Hamming / cosine) happens on the
   joined pair rows — a shuffle whose size is the candidate count, not
-  n².
+  n². SemDeDup is the exception: its candidates are a whole cluster,
+  verified by one grouped NumPy Gram kernel (the rows shuffle once,
+  no pair rows exist).
 
 Connected components uses min-label propagation with pointer jumping
 (driver loop, converges in O(log graph-diameter) rounds — the jump
@@ -23,10 +25,12 @@ without convergence is a loud error, never a silently-split cluster.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from mevi_spark.functions.text import norm_text, word_shingles
-from mevi_spark.functions.vector import lit_vec
+from mevi_spark.functions.vector import dot_fold, lit_vec
 from mevi_spark.functions.text_analysis import simhash_bits_long
 
 
@@ -854,27 +858,27 @@ def semantic_dedup(
 
     Composition of existing pieces: nearest-centroid assignment is
     :func:`mevi_spark.operators.rq.assign_nearest` (map-only literal-
-    codebook argmin, zero shuffle); the within-cluster comparison is a
-    cluster-keyed self-join — never all-pairs. Precisely: a row x is
-    PRUNED iff some same-cluster y has ``cos(x, y) >= threshold`` and
-    higher keep-priority, where priority is (centroid-cosine ASC,
-    id ASC) — so the max-priority member of every duplicate group
-    always survives, deterministically.
+    codebook argmin, zero shuffle); the within-cluster comparison is
+    the per-cluster Gram kernel of :func:`semdedup_tournament` — never
+    all-pairs. Precisely: a row x is PRUNED iff some same-cluster y has
+    ``cos(x, y) >= threshold`` and higher keep-priority, where priority
+    is (centroid-cosine ASC, id ASC) — so the max-priority member of
+    every duplicate group always survives, deterministically. Ids must
+    be unique.
 
     Returns ``(id_col, code, cent_cosine, kept)`` — one row per input
     vector, ``kept`` ∈ {0, 1}, ``cent_cosine`` rounded to 6dp for
     exposure (comparisons use the unrounded bit-stable fold).
 
     100 TB shape: the assignment and centroid-cosine are map-only
-    (broadcast codebook); the only corpus shuffles are the self-join
-    and the prune aggregation, both keyed on the cluster code. Cost is
-    Σ|cluster|² pair rows — bounded by choosing k proportional to
-    corpus size so clusters stay ~10⁴-10⁵ rows (the paper runs k=50k
-    over 1.3B examples for exactly this reason) AND, because k is
-    fixed before the data is seen and one degenerate cluster can
-    swallow the corpus, by ``giant_cluster_cap``: any cluster above
-    the cap switches from the full self-join to sign-LSH banded
-    candidates with the identical cosine + priority verify (see
+    (broadcast codebook); the only corpus shuffle is the kernel's
+    group-by on the cluster code. Cost is Σ|cluster|²·dim in the
+    kernel — bounded by choosing k proportional to corpus size so
+    clusters stay ~10⁴-10⁵ rows (the paper runs k=50k over 1.3B
+    examples for exactly this reason) AND, because k is fixed before
+    the data is seen and one degenerate cluster can swallow the
+    corpus, by ``giant_cluster_cap``: any cluster above the cap is
+    compared only within its sign-LSH buckets (see
     :func:`semdedup_tournament`).
     """
     from mevi_spark.functions.vector import cosine
@@ -885,28 +889,14 @@ def semantic_dedup(
     assigned = assign_nearest(
         df, centroids, id_col=id_col, vec_col=vec_col, entries=entries
     )
-    with_cent = assigned.join(
+    scored = assigned.join(
         F.broadcast(centroids.select("code", "centroid")), "code"
+    ).select(
+        F.col(id_col).alias("_id"),
+        "code",
+        F.col(vec_col).cast("array<double>").alias("_v"),
+        cosine(vec_col, "centroid").alias("_cc"),
     )
-    from mevi_spark.operators.cache import defer_unpersist
-
-    scored = defer_unpersist(
-        with_cent.select(
-            F.col(id_col).alias("_id"),
-            "code",
-            F.col(vec_col).cast("array<double>").alias("_v"),
-            cosine(vec_col, "centroid").alias("_cc"),
-        ).persist()
-    )
-    # three consumers (both self-join sides + the output rows) would
-    # otherwise each re-run the scan + assignment + centroid-cosine
-    # subtree — Spark does not exchange-reuse across self-join sides
-    # here (the inlined literal codebook defeats canonicalization), so
-    # the clustered/scored table is materialized once, exactly the
-    # staging table the paper's pipeline writes between its cluster
-    # and dedup stages; at deployment scale this persist is that
-    # intermediate table (MEMORY_AND_DISK, spills, never recomputes
-    # the corpus 3×).
     return semdedup_tournament(
         scored,
         threshold,
@@ -929,7 +919,8 @@ def semdedup_tournament(
     dim: int | None = None,
 ) -> DataFrame:
     """The SemDeDup within-cluster keep/prune rule on a scored frame
-    ``(_id, code, _v, _cc)`` → the same columns plus ``kept`` ∈ {0, 1}.
+    ``(_id, code, _v, _cc)`` (unique ``_id``) → the same columns plus
+    ``kept`` ∈ {0, 1}.
 
     ONE definition shared by the batch operator above and the
     streaming maintenance (``streaming/incremental.py::
@@ -938,175 +929,122 @@ def semdedup_tournament(
     between the two or the maintained state silently diverges from
     the batch answer (and from their shared DuckDB oracle).
 
-    Giant-cluster guard (the 100 TB skew path): the cluster-keyed
-    self-join generates Σ|cluster|² pair rows. k is chosen BEFORE the
-    data is seen, so one degenerate cluster (boilerplate mass,
-    embedding collapse) of 10⁷ rows is 10¹⁴ pairs on a single join key
-    — a straggler that never finishes. Clusters whose size exceeds
-    ``giant_cluster_cap`` therefore run their within-cluster
-    comparison through the deterministic sign-LSH banding already used
-    by :func:`embedding_near_dup`: candidates = same-cluster pairs
-    sharing at least one of ``lsh_bands`` bands of
-    ``lsh_planes/lsh_bands`` sign bits, verified by the SAME exact
-    cosine + (centroid-cosine ASC, id ASC) priority rule. Above the
-    cap the result is approximate in one direction only (a true dup
-    pair whose vectors disagree on every band is missed, so its loser
-    survives) — at the 0.95-cosine thresholds SemDeDup runs, per-bit
-    collision probability is ``1 - θ/π ≈ 0.90`` and the per-pair miss
+    One ``groupBy("code").applyInPandas`` kernel: each cluster arrives
+    whole in one Python task, which builds its Gram matrix with
+    :func:`~mevi_spark.functions.vector.dot_fold` (rank-1 updates in
+    dimension order, so every dot, ``‖v‖ = sqrt(diag)`` and cosine is
+    bit-identical to :func:`~mevi_spark.functions.vector.cosine`) and
+    applies ``beats & (cos >= threshold)`` as a boolean mask. The
+    cosine rows are built ``_TILE`` at a time, so a cluster of n rows
+    holds ``_TILE·n`` doubles, not n². One shuffle, no pair rows.
+
+    Giant-cluster guard (the 100 TB skew path): the exact kernel is
+    Σ|cluster|²·dim work, and k is chosen BEFORE the data is seen, so
+    one degenerate cluster (boilerplate mass, embedding collapse) of
+    10⁷ rows is 10¹⁴ pairs in a single task — a straggler that never
+    finishes. Clusters whose size exceeds ``giant_cluster_cap``
+    therefore compare only within the buckets of the deterministic
+    sign-LSH banding :func:`embedding_near_dup` uses: candidates =
+    pairs sharing at least one of ``lsh_bands`` bands of
+    ``lsh_planes/lsh_bands`` sign bits (:func:`sign_band_keys`),
+    verified by the SAME cosine + priority mask. Above the cap the
+    result is approximate in one direction only (a true dup pair whose
+    vectors disagree on every band is missed, so its loser survives)
+    — at the 0.95-cosine thresholds SemDeDup runs, per-bit collision
+    probability is ``1 - θ/π ≈ 0.90`` and the per-pair miss
     probability ``(1 - 0.9^4)^4 ≈ 0.04`` at the defaults; the paper's
     own cluster-then-compare step is already a sampling of the true
-    pair set. Below the cap the result is bit-identical to the
-    unguarded tournament.
+    pair set. Below the cap the result is exact.
 
-    The routing is DECLARATIVE, not driver-side: every row is tagged
-    with its cluster size via a broadcast join against the k-row size
-    frame and filtered into the exact / banded branch by ``_csz``, so
-    no plan-build-time job runs and no cluster-size snapshot is baked
-    into the plan — skew is handled per run, the same way AQE handles
-    it, and with no giant cluster the banded branch is runtime-empty.
-    ``dim`` (the embedding width, known to both callers from their
-    codebook) is required for the guard because the ±1 hyperplanes are
-    plan-time literals; ``dim=None`` keeps the legacy unguarded
-    tournament for callers without a codebook at hand.
+    The routing happens per cluster inside the kernel, from the size
+    of the group it received: no size frame, no plan-build job and no
+    cluster-size snapshot baked into the plan. ``dim`` (the embedding
+    width, known to both callers from their codebook) fixes the ±1
+    hyperplanes; ``dim=None`` turns the guard off. Vectors must be
+    finite and ``dim`` wide.
     """
-    from mevi_spark.functions.vector import dot, l2_norm
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    # the pair verify needs cosine(a._v, b._v): staging ‖v‖ ONCE PER
-    # ROW before the self-join (instead of twice per pair inside
-    # cosine()) cuts the per-pair interpreted-fold work 3× — bit-
-    # identical, it is the same fold over the same array, and the
-    # division + zero-norm guard below replicate functions/vector.py::
-    # cosine exactly (den==0 → 0.0, the ANSI divide-by-zero guard)
-    if dim is None:
-        small, giant = scored.withColumn("_nv", l2_norm("_v")), None
-    else:
-        from mevi_spark.operators.cache import defer_unpersist
-
-        # the k-row size frame is consumed by all four join sides
-        # (small a/b, giant a/b) — persist it so the corpus-wide count
-        # aggregation runs ONCE; without this each side re-aggregates
-        # (self-join sides defeat exchange reuse here, same finding as
-        # the scored persist in semantic_dedup)
-        sizes = defer_unpersist(
-            scored.groupBy("code")
-            .agg(F.count(F.lit(1)).alias("_csz"))
-            .persist()
-        )
-        tagged = scored.join(F.broadcast(sizes), "code").withColumn(
-            "_nv", l2_norm("_v")
-        )
-        cap = F.lit(int(giant_cluster_cap))
-        small = tagged.filter(F.col("_csz") <= cap).drop("_csz")
-        giant = tagged.filter(F.col("_csz") > cap).drop("_csz")
-
-    beats = (F.col("b._cc") < F.col("a._cc")) | (
-        (F.col("b._cc") == F.col("a._cc"))
-        & (F.col("b._id") < F.col("a._id"))
-    )
-    den = F.col("a._nv") * F.col("b._nv")
-    pair_cos = F.when(den == 0.0, F.lit(0.0)).otherwise(
-        dot(F.col("a._v"), F.col("b._v")) / den
-    )
-    # `beats` FIRST in the verify conjunction: Catalyst pushes the
-    # post-join filter into the join condition with the filter's And
-    # order preserved AHEAD of the original condition, and codegen
-    # short-circuits left-to-right — beats is two scalar compares,
-    # antisymmetric (true for exactly one orientation of every
-    # unordered pair, and never for a self-pair), so the 2·dim-op
-    # interpreted cosine fold runs once per unordered pair. Measured
-    # at sf1 (guarded path): beats-first ~25-30 s warm vs cos-first
-    # ~32-38 s — the And order IS the optimization, don't "simplify"
-    # it into the join condition (that re-merges cos-first).
-    verify = beats & (pair_cos >= threshold)
-    a, b = small.alias("a"), small.alias("b")
-    pruned = (
-        a.join(
-            b,
-            (F.col("a.code") == F.col("b.code"))
-            & (F.col("a._id") != F.col("b._id")),
-        )
-        .filter(verify)
-        .select(F.col("a._id").alias("_id"))
-    )
-    if giant is not None:
-        banded = _semdedup_lsh_banded(giant, lsh_planes, lsh_bands, dim)
-        ga, gb = banded.alias("a"), banded.alias("b")
-        pruned_giant = (
-            ga.join(
-                gb,
-                (F.col("a.code") == F.col("b.code"))
-                & (F.col("a._band") == F.col("b._band"))
-                & (F.col("a._key") == F.col("b._key"))
-                & (F.col("a._id") != F.col("b._id")),
-            )
-            .filter(verify)
-            .select(F.col("a._id").alias("_id"))
-        )
-        pruned = pruned.unionByName(pruned_giant)
-    # ONE distinct AFTER the union (not per branch): keeps the pruned
-    # side provably unique on the join key so Catalyst can still
-    # eliminate the outer join for aggregates that don't touch `kept`
-    # (a union of two distincts loses that proof), and dedups the
-    # multi-band giant candidates in the same exchange
-    pruned = pruned.distinct()
-    return scored.join(
-        pruned.withColumn("_p", F.lit(1)), "_id", "left"
-    ).select(
-        "_id",
-        "code",
-        "_v",
-        "_cc",
-        F.col("_p").isNull().cast("long").alias("kept"),
-    )
-
-
-def _semdedup_lsh_banded(
-    giant: DataFrame, lsh_planes: int, lsh_bands: int, dim: int
-) -> DataFrame:
-    """Explode a giant-cluster scored frame ``(_id, code, _v, _cc)``
-    into one row per sign-LSH band: ``(_id, code, _v, _cc, _band,
-    _key)``. The tournament joins on ``(code, _band, _key)`` instead of
-    ``code`` alone, bounding pair fan-out to same-bucket rows. Planes
-    are the deterministic ±1 md5 hyperplanes of
-    :func:`deterministic_planes` — reproducible across batch and
-    streaming so the two paths cannot diverge on candidates. ``dim``
-    comes from the caller's codebook (plan-time literal; no data
-    probe)."""
     if lsh_planes % lsh_bands:
         raise ValueError(
             f"lsh_planes {lsh_planes} not divisible by bands="
             f"{lsh_bands}: the trailing bits would silently join no band"
         )
-    planes = deterministic_planes(int(dim), lsh_planes)
-    per_band = lsh_planes // lsh_bands
-
-    # ONE selectExpr of SQL text, not per-plane Column churn — the
-    # Column-API form cost >1 s of py4j round trips per plan build
-    # (the same finding banded_keys documents). Plane weights are ±1,
-    # so each projection folds to a flat signed sum ±_v[d] — the same
-    # left-to-right association (and therefore the same bits) as
-    # _sign_key's sequential aggregate of x·w, with no lambda
-    # interpretation at runtime.
-    def _proj(plane: list[int]) -> str:
-        s = "".join(
-            ("+" if w > 0 else "-") + f"_v[{d}]"
-            for d, w in enumerate(plane)
-        )
-        return s[1:] if s.startswith("+") else s
-
-    def _key(bb: int) -> str:
-        bits = " + ".join(
-            f"IF(({_proj(planes[bb * per_band + p])}) > 0D, {1 << p}, 0)"
-            for p in range(per_band)
-        )
-        return f"CAST({bits} AS BIGINT)"
-
-    structs = ", ".join(
-        f"named_struct('_band', {bb}, '_key', {_key(bb)})"
-        for bb in range(lsh_bands)
+    planes = (
+        None
+        if dim is None
+        else np.array(deterministic_planes(int(dim), lsh_planes), np.float64)
     )
-    passthrough = [c for c in giant.columns]
-    return giant.selectExpr(
-        *passthrough,
-        f"explode(array({structs})) AS _bk",
-    ).select(*passthrough, "_bk._band", "_bk._key")
+    tau, cap = float(threshold), int(giant_cluster_cap)
+
+    def cluster(pdf: pd.DataFrame) -> pd.DataFrame:
+        x = np.stack(pdf["_v"].to_numpy())
+        ids = pdf["_id"].to_numpy()
+        cc = pdf["_cc"].to_numpy(np.float64)
+        if planes is None or len(pdf) <= cap:
+            pruned = _beaten(x, ids, cc, tau)
+        else:
+            pruned = np.zeros(len(pdf), dtype=bool)
+            for keys in sign_band_keys(x, planes, lsh_bands).T:
+                for m in _buckets(keys):
+                    pruned[m] |= _beaten(x[m], ids[m], cc[m], tau)
+        return pdf.assign(kept=(~pruned).astype(np.int64))
+
+    cols = scored.select("_id", "code", "_v", "_cc")
+    schema = StructType(
+        cols.schema.fields + [StructField("kept", LongType(), False)]
+    )
+    return cols.groupBy("code").applyInPandas(cluster, schema)
+
+
+# rows of the cosine matrix built at once: bounds a cluster's working
+# set to _TILE·n doubles however large n gets
+_TILE = 512
+
+
+def _beaten(
+    x: np.ndarray, ids: np.ndarray, cc: np.ndarray, tau: float
+) -> np.ndarray:
+    """Per row of one compare unit: does some other row beat it
+    (lower ``_cc``, then lower ``_id``) at cosine ``>= tau``? The
+    cosine is :func:`~mevi_spark.functions.vector.cosine`'s, bit for
+    bit: ``dot / (‖a‖·‖b‖)`` over the left-fold dots, 0.0 where the
+    denominator is 0."""
+    nrm = np.sqrt(dot_fold(x, x))
+    out = np.zeros(len(x), dtype=bool)
+    for i in range(0, len(x), _TILE):
+        a = slice(i, i + _TILE)
+        den = nrm[a, None] * nrm[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = np.where(
+                den == 0.0, 0.0, dot_fold(x[a, None], x[None]) / den
+            )
+        beats = (cc[None, :] < cc[a, None]) | (
+            (cc[None, :] == cc[a, None]) & (ids[None, :] < ids[a, None])
+        )
+        out[a] = (beats & (cos >= tau)).any(axis=1)
+    return out
+
+
+def sign_band_keys(
+    x: np.ndarray, planes: np.ndarray, bands: int
+) -> np.ndarray:
+    """``(n, bands)`` sign-LSH keys of the rows of ``x``: bit p of band
+    b is whether the projection onto ±1 plane ``b·per_band + p`` is
+    positive — the keys :func:`_sign_key` computes in Spark (the same
+    0.0-seeded fold of ``x·w``). The planes are
+    :func:`deterministic_planes`, so batch and streaming cannot
+    diverge on candidates."""
+    per_band = len(planes) // bands
+    bits = dot_fold(x[:, None], planes[None]) > 0.0
+    return (bits.reshape(len(x), bands, per_band) << np.arange(per_band)).sum(
+        axis=-1
+    )
+
+
+def _buckets(keys: np.ndarray) -> list[np.ndarray]:
+    """Row indices sharing each key, singletons dropped (a lone row has
+    nothing to compare against)."""
+    order = np.argsort(keys, kind="stable")
+    groups = np.split(order, np.flatnonzero(np.diff(keys[order])) + 1)
+    return [g for g in groups if len(g) > 1]

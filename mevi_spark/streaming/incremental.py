@@ -1405,16 +1405,21 @@ def incremental_semdedup(
     1. assign + centroid-score the BATCH (map-only literal-codebook
        argmin — zero shuffle, never the index);
     2. touched clusters = the batch's codes ∪ the OLD codes of
-       re-ingested ids (fetched id-bucket-pruned from ``ids``) — a
+       re-ingested ids (fetched id-bucket-pruned from ``ids``; two
+       driver collects, each carrying its codes' index bucket) — a
        vector that moved clusters must disappear from its old group,
        whose tournament then RE-RUNS (its departure can promote a
        previously-pruned member: removal is a state transition too);
     3. re-run the within-cluster tournament over (touched clusters'
-       current rows, minus re-ingested ids, ∪ batch rows). The
-       tournament is cluster-LOCAL, so rows outside touched clusters
-       cannot change — recomputing whole touched clusters is exactly
-       the convergence unit, and the drained state equals the one-shot
-       operator over the full corpus (pinned by test);
+       current rows, minus re-ingested ids, ∪ batch rows) — the batch
+       operator's per-cluster Gram kernel
+       (:func:`~mevi_spark.operators.dedup.semdedup_tournament`: one
+       group-by on the code, each touched cluster scored whole in one
+       task, no pair join). The tournament is cluster-LOCAL, so rows
+       outside touched clusters cannot change — recomputing whole
+       touched clusters is exactly the convergence unit, and the
+       drained state equals the one-shot operator over the full corpus
+       (pinned by test);
     4. publish both tables: touched buckets rewritten, untouched
        bucket dirs hardlink-forward (``_publish_version``'s
        ``copy_forward`` — the crash-atomic flip contract of every
@@ -1496,10 +1501,13 @@ def incremental_semdedup(
             .localCheckpoint(eager=True)
         )
         batch_ids = F.broadcast(new.select("_id"))
-        codes = {r[0] for r in new.select("code").distinct().collect()}
-        dbkts = sorted(
-            r[0] for r in new.select("_dbkt").distinct().collect()
-        )
+        # ONE collect of the batch's (code, id bucket, code bucket)
+        # triples; the old-code lookup below projects the same code
+        # bucket, so no job ever runs just to hash codes
+        kb = code_bucket_expr(n_buckets).alias("_kbkt")
+        keys = new.select("code", "_dbkt", kb).distinct().collect()
+        touched = {(r.code, r._kbkt) for r in keys}
+        dbkts = sorted({r._dbkt for r in keys})
         published = os.path.exists(os.path.join(scored_dir, "_SUCCESS"))
         # the ids table is guarded by ITS OWN _SUCCESS: a crash between
         # the first batch's scored publish and ids publish would
@@ -1516,30 +1524,16 @@ def incremental_semdedup(
             # OLD codes of re-ingested ids (id-bucket-pruned lookup;
             # collected BEFORE any publish flips a symlink)
             ids_tbl = spark.read.parquet(ids_dir)
-            old_codes = {
-                r[0]
+            touched |= {
+                (r.code, r._kbkt)
                 for r in ids_tbl.filter(F.col("_dbkt").isin(dbkts))
                 .join(batch_ids, "_id")
-                .select("code")
+                .select("code", kb)
                 .distinct()
                 .collect()
             }
-            codes = codes | old_codes
-        touched_codes = sorted(codes)
-        kb = F.pmod(
-            F.xxhash64(F.col("code")), F.lit(int(n_buckets))
-        ).cast("int")
-        kbkts = sorted(
-            {
-                r[0]
-                for r in new.sparkSession.createDataFrame(
-                    [(c,) for c in touched_codes], "code long"
-                )
-                .select(kb.alias("b"))
-                .distinct()
-                .collect()
-            }
-        )
+        touched_codes = sorted({c for c, _ in touched})
+        kbkts = sorted({b for _, b in touched})
         if published:
             idx = spark.read.parquet(scored_dir)
             in_touched = F.col("code").isin(touched_codes)

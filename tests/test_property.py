@@ -143,9 +143,9 @@ def test_ivf_full_probe_equals_exact(spark, corpus, qvecs):
     assert ivf == exact
 
 
-# magnitudes bounded so partial products / running sums stay finite —
-# the kernel's documented precondition (an overflow yields NaN from the
-# fold but NULL from the Arrow path; see dot_seq_arrow's docstring)
+# magnitudes bounded so partial products / running sums stay finite:
+# an overflow ends in inf/NaN, and NaN payload bits are not part of the
+# bit-identity contract
 _finite = st.floats(
     allow_nan=False,
     allow_infinity=False,
@@ -172,54 +172,48 @@ def _bits(v: float) -> bytes:
     return struct.pack("<d", v)
 
 
+def _spark_vs_gram(spark, va: list, vb: list):
+    """``(Spark dot, dot_fold Gram entry)`` for every (a, b) row pair,
+    the Gram built as the SemDeDup kernel builds it."""
+    import numpy as np
+
+    from mevi_spark.functions.vector import dot, dot_fold
+
+    gram = dot_fold(np.array(va)[:, None], np.array(vb)[None])
+    df = spark.createDataFrame(
+        [(i, k, a, b) for i, a in enumerate(va) for k, b in enumerate(vb)],
+        "i long, k long, va array<double>, vb array<double>",
+    )
+    rows = df.select("i", "k", dot("va", "vb").alias("d")).collect()
+    assert len(rows) == len(va) * len(vb)
+    return [(r.d, gram[r.i, r.k]) for r in rows]
+
+
 @settings(
     max_examples=12,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
 @given(_pairs)
-def test_dot_seq_arrow_bit_identical(spark, pairs):
-    """The Arrow-vectorized dot kernel must be BIT-identical to the
+def test_dot_fold_bit_identical(spark, pairs):
+    """The SemDeDup kernel's Gram fold must be BIT-identical to the
     interpreted ``F.aggregate(zip_with(...))`` fold on arbitrary finite
     doubles (subnormals, signed zeros, magnitude extremes included) —
-    the contract ``functions/vector.py::dot_seq_arrow`` documents."""
-    from mevi_spark.functions.vector import dot, dot_seq_arrow
-
-    df = spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(pairs)],
-        "id long, va array<double>, vb array<double>",
-    )
-    rows = df.select(
-        "id",
-        dot("va", "vb").alias("d_fold"),
-        dot_seq_arrow("va", "vb").alias("d_arrow"),
-    ).collect()
-    assert len(rows) == len(pairs)
-    for r in rows:
-        assert _bits(r.d_fold) == _bits(r.d_arrow), (
-            r.id,
-            r.d_fold,
-            r.d_arrow,
-        )
+    the contract ``functions/vector.py::dot_fold`` documents."""
+    va, vb = [a for a, _ in pairs], [b for _, b in pairs]
+    for d_spark, d_fold in _spark_vs_gram(spark, va, vb):
+        assert _bits(d_spark) == _bits(d_fold), (d_spark, d_fold)
 
 
-def test_dot_seq_arrow_negative_zero_seed(spark):
+def test_dot_fold_negative_zero_seed(spark):
     """Regression pin for the fold-seed edge: a pair whose running sum
-    stays ``-0.0`` must come back ``+0.0`` from BOTH paths (``dot``'s
-    0.0 seed normalizes it; the Arrow kernel's ``+ 0.0`` must too)."""
-    from mevi_spark.functions.vector import dot, dot_seq_arrow
-
-    df = spark.createDataFrame(
-        [(0, [-1.0, -2.0], [0.0, 0.0]), (1, [0.0], [-3.5])],
-        "id long, va array<double>, vb array<double>",
-    )
-    rows = df.select(
-        dot("va", "vb").alias("d_fold"),
-        dot_seq_arrow("va", "vb").alias("d_arrow"),
-    ).collect()
-    for r in rows:
-        assert _bits(r.d_fold) == _bits(0.0)
-        assert _bits(r.d_arrow) == _bits(0.0)
+    stays ``-0.0`` must come back ``+0.0`` from BOTH folds (``dot``'s
+    0.0 seed normalizes it; ``dot_fold``'s zero-initialised Gram must
+    too)."""
+    for va, vb in (([[-1.0, -2.0]], [[0.0, 0.0]]), ([[0.0]], [[-3.5]])):
+        for d_spark, d_fold in _spark_vs_gram(spark, va, vb):
+            assert _bits(d_spark) == _bits(0.0)
+            assert _bits(d_fold) == _bits(0.0)
 
 
 # ---------------------------------------------------------------------------

@@ -3,6 +3,8 @@ far-from-centroid keep-policy, pinned on hand-built vectors."""
 
 from __future__ import annotations
 
+import pytest
+
 from mevi_spark.operators.dedup import semantic_dedup
 
 
@@ -98,11 +100,11 @@ def test_giant_cluster_guard_bounds_pairs_and_matches_exact(spark):
     n·(n-1)."""
     import numpy as np
 
-    import pyspark.sql.functions as F
-    from mevi_spark.functions.vector import cosine
     from mevi_spark.operators.dedup import (
-        _semdedup_lsh_banded,
+        _buckets,
+        deterministic_planes,
         semantic_dedup,
+        sign_band_keys,
     )
 
     rng = np.random.RandomState(7)
@@ -143,26 +145,14 @@ def test_giant_cluster_guard_bounds_pairs_and_matches_exact(spark):
     }
 
     # the bound itself: banded candidates ≪ the full self-join fan-out
-    scored = vecs.select(
-        F.col("vec_id").alias("_id"),
-        F.lit(0).alias("code"),
-        F.col("embedding").alias("_v"),
-        F.lit(0.0).alias("_cc"),
+    # (ordered same-bucket pairs over every band, as the kernel verifies)
+    keys = sign_band_keys(
+        np.array([v for _, v in rows]),
+        np.array(deterministic_planes(dim, 16), np.float64),
+        4,
     )
-    banded = _semdedup_lsh_banded(scored, 16, 4, dim)
-    a, b = banded.alias("a"), banded.alias("b")
     n_total = n + 3
-    cand = (
-        a.join(
-            b,
-            (F.col("a.code") == F.col("b.code"))
-            & (F.col("a._band") == F.col("b._band"))
-            & (F.col("a._key") == F.col("b._key"))
-            & (F.col("a._id") != F.col("b._id")),
-        )
-        .select("a._id", "b._id")
-        .count()
-    )
+    cand = sum(len(g) * (len(g) - 1) for band in keys.T for g in _buckets(band))
     assert cand < 0.5 * n_total * (n_total - 1), cand
 
 
@@ -205,3 +195,37 @@ def test_giant_cluster_guard_leaves_small_clusters_exact(spark):
     # 100 vs 101: cosine ~0.99999 ≥ τ; 101 has lower centroid cosine
     # (tilted off +y) → 101 kept, 100 pruned — by the EXACT rule
     assert out[101].kept == 1 and out[100].kept == 0
+
+
+@pytest.mark.parametrize("cap", [10**9, 1], ids=["exact", "banded"])
+def test_threshold_cut_is_inclusive_at_the_spark_cosine(spark, cap):
+    """The prune cut is ``cos >= τ`` on the cosine Spark's ``cosine``
+    computes, bit for bit: τ = c prunes the pair, the next double above
+    c keeps it — in an exact cluster and in a banded one (cap below
+    the cluster size)."""
+    import numpy as np
+
+    from mevi_spark.functions.vector import cosine
+    from mevi_spark.operators.dedup import deterministic_planes, sign_band_keys
+
+    a, b = [1.0, 0.1, 0.3], [1.0, 0.12, 0.29]
+    c = spark.createDataFrame(
+        [(a, b)], "a array<double>, b array<double>"
+    ).select(cosine("a", "b")).first()[0]
+    assert c < 1.0
+    # the banded case compares only same-bucket rows: assert the pair
+    # shares a band so the cut, not the banding, decides
+    keys = sign_band_keys(
+        np.array([a, b]), np.array(deterministic_planes(3, 16), np.float64), 4
+    )
+    assert (keys[0] == keys[1]).any()
+    cents = _centroids(spark, {0: [1.0, 0.0, 0.0]})
+    vecs = _vecs(spark, [(1, a), (2, b)])
+
+    def kept(tau):
+        return {r.vec_id: r.kept for r in semantic_dedup(
+            vecs, cents, threshold=tau, giant_cluster_cap=cap
+        ).collect()}
+
+    assert sorted(kept(c).values()) == [0, 1]
+    assert kept(float(np.nextafter(c, np.inf))) == {1: 1, 2: 1}
