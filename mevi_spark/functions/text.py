@@ -23,19 +23,6 @@ def clean_text(c: Column | str) -> Column:
     return F.trim(F.regexp_replace(_c(c), r"[\n`'\"]+", " "))
 
 
-def title_content(title: Column | str, content: Column | str, style: str = "ance") -> Column:
-    """P1: document text projection.
-
-    ``ance`` → ``'Title: ' + title + ' Text: ' + content``
-    (``MEVI/main_utils.py:199-212``); ``sep`` → ``title + ' [SEP] ' + content``
-    (``prepare_passage_tokenized.py:63-70``).
-    """
-    t, c = _c(title), _c(content)
-    if style == "ance":
-        return F.concat(F.lit("Title: "), t, F.lit(" Text: "), c)
-    return F.concat(t, F.lit(" [SEP] "), c)
-
-
 def normalize_text(c: Column | str) -> Column:
     """Lowercase, strip punctuation, collapse whitespace — the canonical
     form used by fingerprinting and near-dup shingling."""

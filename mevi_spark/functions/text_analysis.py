@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-from mevi_spark.functions.text import norm_tokens, normalize_text, tokens
+from mevi_spark.functions.text import norm_tokens, normalize_text
 
 
 def _c(c: Column | str) -> Column:
@@ -44,11 +44,6 @@ def hash60(c: Column | str, seed: str = "") -> Column:
 # pre-tokenizer shape, shared verbatim with the DuckDB oracles (RE2/Java
 # compatible subset)
 BPE_PATTERN = r"[a-z]+|[0-9]|[^a-z0-9\s]"
-
-
-def ws_token_count(c: Column | str) -> Column:
-    """Whitespace token count of the raw text."""
-    return F.size(tokens(_c(c)))
 
 
 def bpe_token_count(c: Column | str) -> Column:
@@ -134,17 +129,6 @@ def stopword_ratio(
     n_sw = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
     return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(
         n_sw.cast("double") / F.size(toks)
-    )
-
-
-def punct_ratio(c: Column | str) -> Column:
-    """Fraction of non-space characters that are neither letters nor
-    digits — high values flag boilerplate/markup."""
-    x = F.lower(_c(c))
-    n_all = F.length(F.regexp_replace(x, r"\s+", ""))
-    n_punct = F.length(F.regexp_replace(x, r"[a-z0-9\s]+", ""))
-    return F.when(n_all == 0, F.lit(0.0)).otherwise(
-        n_punct.cast("double") / n_all
     )
 
 

@@ -147,28 +147,6 @@ def iptol2_query(v: Column | str) -> Column:
     return F.concat(_d(v), F.array(F.lit(0.0)))
 
 
-def softmax_arr(a: Column | str) -> Column:
-    """F4: softmax over an ``array<double>`` (``MEVI/main_models.py:139-142``).
-
-    Max-shifted for numerical stability, all JVM expressions.
-    """
-    x = _d(a)
-    mx = F.array_max(x)
-    ex = F.transform(x, lambda v: F.exp(v - mx))
-    s = F.aggregate(ex, F.lit(0.0), lambda acc, v: acc + v)
-    return F.transform(ex, lambda v: v / s)
-
-
-def log_softmax_arr(a: Column | str) -> Column:
-    """F4: log-softmax over an ``array<double>``."""
-    x = _d(a)
-    mx = F.array_max(x)
-    lse = F.log(
-        F.aggregate(x, F.lit(0.0), lambda acc, v: acc + F.exp(v - mx))
-    )
-    return F.transform(x, lambda v: v - mx - lse)
-
-
 def code_flat(code: Column | str, k: int) -> Column:
     """Flat cluster index (F8): ``idx = Σ code_i · K^(M−1−i)``, the
     radix-K fold of ``MEVI/main_models.py:1046-1051`` / ``3355-3358``.

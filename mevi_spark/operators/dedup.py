@@ -29,7 +29,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
-from mevi_spark.functions.text import norm_text, word_shingles
+from mevi_spark.functions.text import norm_text
 from mevi_spark.functions.vector import dot_fold, lit_vec
 from mevi_spark.functions.text_analysis import simhash_bits_long
 
@@ -71,49 +71,6 @@ def dedup_exact(
 #: ``num_hashes ≤ 64``; beyond that the sum also nears long overflow),
 #: so empty docs never collide with content
 MINHASH_SENTINEL = 1 << 62
-
-
-def _km_pair(md5_hex: Column) -> Column:
-    """Kirsch-Mitzenmacher base pair from one md5: ``h1`` = first 14 hex
-    chars (56 bits), ``h2`` = next 14 hex chars forced odd. Slot ``i``'s
-    hash is ``h1 + i·h2`` — one md5 per shingle for ALL slots, the rest
-    is codegen long arithmetic (max value ≈ num_hashes·2^56; keep
-    ``num_hashes ≤ 64`` so values stay below the ``2^62`` sentinel and
-    well inside long range)."""
-    h1 = F.conv(F.substring(md5_hex, 1, 14), 16, 10).cast("long")
-    h2 = F.conv(F.substring(md5_hex, 15, 14), 16, 10).cast("long").bitwiseOR(
-        F.lit(1)
-    )
-    return F.struct(h1.alias("h1"), h2.alias("h2"))
-
-
-def _km_slots(hs_col: Column | str, num_hashes: int) -> list[Column]:
-    """Per-slot min over the staged ``array<struct<h1,h2>>`` column."""
-    sentinel = F.lit(MINHASH_SENTINEL).cast("long")
-
-    def _slot(i: int):
-        return lambda h: h.h1 + F.lit(i).cast("long") * h.h2
-
-    return [
-        F.coalesce(F.array_min(F.transform(hs_col, _slot(i))), sentinel)
-        for i in range(num_hashes)
-    ]
-
-
-def minhash_signature(
-    c: Column | str, num_hashes: int = 12, shingle_n: int = 3
-) -> Column:
-    """MinHash signature ``array<long>`` of the word-shingle set: one
-    md5 per shingle, slot i = min of ``h1 + i·h2`` (double hashing).
-    Empty docs get sentinel ``2^62`` per slot.
-
-    NB: as a single nested expression this recomputes the shingle set
-    per slot if Catalyst collapses projections — prefer
-    :func:`dedup_minhash`, which stages shingles and hash pairs as real
-    columns."""
-    sh = word_shingles(c, shingle_n)
-    hs = F.transform(sh, lambda s: _km_pair(F.md5(s)))
-    return F.array(*_km_slots(hs, num_hashes))
 
 
 def banded_keys(
@@ -256,10 +213,11 @@ def shingle_frame(
     """``(doc_id, shingles)`` staged through *attribute* projections.
 
     Building the shingle set as one nested column expression (the
-    composed :func:`word_shingles`) lets Catalyst's CollapseProject
-    inline the normalize+split chain into every downstream lambda — the
-    split then re-executes PER ARRAY ELEMENT (and per MinHash seed),
-    which turned the sf0.1 bench run of dedup_minhash into 783 s.
+    composed :func:`~mevi_spark.functions.text.word_shingles`) lets
+    Catalyst's CollapseProject inline the normalize+split chain into
+    every downstream lambda — the split then re-executes PER ARRAY
+    ELEMENT (and per MinHash seed), which turned the sf0.1 bench run of
+    dedup_minhash into 783 s.
     Staging token/shingle arrays as real columns blocks the collapse
     (non-cheap expression referenced >1×), so the regex+split runs once
     per row and every lambda reads an attribute.
@@ -306,10 +264,12 @@ def minhash_frame(
     # plans wide
     df = spread_small_scan(df.sparkSession, df)
     shingled = shingle_frame(df, text_col, id_col, shingle_n)
-    # SQL-text forms of _km_pair/_km_slots: identical expressions, ONE
-    # py4j call per stage instead of one per slot×sub-expression (the
-    # Column-API form cost ~0.6 s of round trips per build — profiled
-    # r8, same class as the r7 beam fix)
+    # Kirsch-Mitzenmacher double hashing: h1 = first 14 hex chars of the
+    # shingle's md5 (56 bits), h2 = next 14 forced odd, slot i = min of
+    # h1 + i·h2 (max ≈ num_hashes·2^56, below the sentinel for
+    # num_hashes ≤ 64). SQL text, ONE py4j call per stage instead of one
+    # per slot×sub-expression (the Column-API form cost ~0.6 s of round
+    # trips per build — profiled r8, same class as the r7 beam fix)
     pair_sql = (
         "transform(shingles, s -> named_struct("
         "'h1', CAST(conv(substring(md5(s), 1, 14), 16, 10) AS BIGINT),"

@@ -565,20 +565,6 @@ def train_rq_kmeans(
     return mapping, codebook
 
 
-def build_doc_cluster(
-    mapping: DataFrame,
-    code_col: str = "code_flat",
-    id_col: str = "id",
-) -> DataFrame:
-    """A1: cluster table ``code → (n_docs, member list)``
-    (``MEVI/pq.py:236-247``). Kept as a normalized mapping join at scale;
-    the collected-list form exists for run-file parity and small dims."""
-    return mapping.groupBy(code_col).agg(
-        F.count("*").alias("n_docs"),
-        F.sort_array(F.collect_list(id_col)).alias("doc_ids"),
-    )
-
-
 def reconstruct(
     mapping: DataFrame,
     codebook: DataFrame,

@@ -82,7 +82,8 @@ _STALE_MARK = ".stale_since"
 
 def reap_stale(candidates: list[str], grace: float | None = None) -> None:
     """Mark-then-reap for superseded artifact versions (shared by the
-    staged layouts here and ``incremental_topk``'s publish path).
+    staged layouts here and by every ``streaming/incremental.py``
+    ``VersionedTable`` publish and ``PartialStore`` fold).
 
     Each candidate directory gets a ``.stale_since`` mark on first
     sight — the grace clock anchors at when it *became* stale, not when

@@ -38,11 +38,19 @@ arriving corpus/event stream.
 * :func:`incremental_heavy_hitters` — Misra-Gries frequent-items
   summary maintenance (mergeable-summaries merge): the bounded
   candidate set stays complete above the support threshold as the
-  corpus arrives; the exact recount runs on demand.
+  corpus arrives; the exact recount runs on demand;
+* :class:`VersionedTable` — the one symlink-published table behind
+  every maintainer whose state is a table rather than partial dirs
+  (top-k, CDC merge, heavy hitters, near-dup, SemDeDup, the chunk
+  index and components): crash-atomic version-dir + link flip, the
+  ``_meta.json`` sidecar with its ``n_buckets`` guard, hardlink
+  copy-forward of untouched buckets, and the graced reap of
+  superseded versions.
 """
 
 from mevi_spark.streaming.incremental import (
     PartialStore,
+    VersionedTable,
     dedup_stream,
     incremental_heavy_hitters,
     incremental_merge,
@@ -57,6 +65,7 @@ from mevi_spark.streaming.incremental import (
 
 __all__ = [
     "PartialStore",
+    "VersionedTable",
     "dedup_stream",
     "incremental_heavy_hitters",
     "incremental_merge",

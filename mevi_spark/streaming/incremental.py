@@ -106,176 +106,6 @@ def incremental_quantize(
     return _drain_batches(stream_df, checkpoint_dir, sink)
 
 
-def _link_prefixes(output_dir: str, kind: str) -> tuple[str, str]:
-    """Version/link prefixes NAMESPACED by the output's basename: two
-    streams publishing under one shared parent must never reap each
-    other's live version dirs or dangle the other's symlink (ADVICE r6
-    — the same scoping compact_partitioned applies to its trash)."""
-    base = os.path.basename(os.path.abspath(output_dir))
-    return f".{kind}-v-{base}-", f".{kind}-ln-{base}-"
-
-
-def _migrate_legacy_dir(output_dir: str, v_prefix: str, ln_prefix: str) -> None:
-    """A REAL directory at ``output_dir`` (published by an earlier
-    non-symlink scheme) becomes version 0 behind the link — one rename;
-    without this the publish rename would fail against an existing
-    directory and kill the stream."""
-    if os.path.isdir(output_dir) and not os.path.islink(output_dir):
-        parent = os.path.dirname(os.path.abspath(output_dir))
-        legacy = os.path.join(parent, f"{v_prefix}{uuid.uuid4().hex[:8]}")
-        # pre-create the (briefly dangling) link BEFORE renaming the
-        # dir away, so the no-table window is exactly the two renames —
-        # it cannot be closed entirely with rename(2) alone, but this
-        # one-time legacy migration shrinks it to microseconds (the
-        # steady-state publish path has no window at all)
-        lnk = os.path.join(parent, f"{ln_prefix}{uuid.uuid4().hex[:8]}")
-        os.symlink(legacy, lnk)
-        os.rename(output_dir, legacy)
-        os.rename(lnk, output_dir)
-
-
-def _publish_grace() -> float:
-    """Seconds a superseded published version lingers after being MARKED
-    stale, so a reader that resolved the old target mid-scan finishes
-    (VERDICT r6 #5). Published results are artifact-sized, so a few
-    graced copies are cheap. ``SPARK_GRAFT_PUBLISH_GRACE`` governs every
-    atomic-publish stream and partial-store fold."""
-    return float(os.environ.get("SPARK_GRAFT_PUBLISH_GRACE", "60"))
-
-
-_META_FILE = "_meta.json"  # underscore-prefixed: invisible to parquet scans
-
-
-def _check_bucket_meta(table_dir: str, n_buckets: int, what: str) -> None:
-    """Fail loudly when a bucketed table is reopened with a different
-    ``n_buckets`` — the existing rows' bucket assignment would silently
-    mis-route probes/pruning otherwise. Missing/unreadable meta (a
-    pre-sidecar publish) is tolerated: those tables migrate on their
-    next publish."""
-    import json
-
-    meta_path = os.path.join(table_dir, _META_FILE)
-    try:
-        with open(meta_path, encoding="utf-8") as fh:
-            stored = json.load(fh).get("n_buckets")
-    except (OSError, ValueError):
-        stored = None
-    if stored is not None and stored != n_buckets:
-        raise RuntimeError(
-            f"near-dup {what} at {table_dir} is bucketed with "
-            f"n_buckets={stored}; reopening it with "
-            f"n_buckets={n_buckets} would mis-route probes — "
-            f"rebuild the index or keep the original value"
-        )
-
-
-def _publish_version(
-    out: DataFrame,
-    output_dir: str,
-    v_prefix: str,
-    ln_prefix: str,
-    grace: float,
-    meta: dict | None = None,
-    partition_by: str | None = None,
-    copy_forward: tuple[str, list] | None = None,
-) -> None:
-    """Crash-atomic publish: write a fresh version dir, then flip the
-    published SYMLINK in one rename — there is no window with no live
-    table (a two-rename directory swap has one: a crash between renames
-    strands the data in a trash dir). Superseded versions and crashed-
-    attempt strandings carrying this output's prefix go through the
-    shared mark-then-reap with a grace period, so a reader that
-    resolved the old target mid-scan survives the flip (VERDICT r6 #5);
-    stray tmp links are unlinked immediately (single-writer-per-output
-    contract: any ln-prefixed entry left after our flip is ours and
-    dead).
-
-    ``meta`` (optional) is persisted as ``_meta.json`` INSIDE the
-    version dir before the flip — out-of-band state (e.g. the
-    heavy-hitters replay guard's last absorbed batch id) that must
-    survive even when the published TABLE is zero rows (ADVICE r8:
-    deriving the batch id from a row column loses it on an
-    empty-summary trim, weakening the undercount invariant under
-    crash-replay). Underscore-prefixed, so parquet scans of the
-    published dir never see it.
-
-    ``copy_forward`` (requires ``partition_by``) makes the publish
-    O(touched partitions) instead of O(table) — VERDICT r9 next-round
-    #2: ``out`` must then contain ONLY the touched partitions' rows,
-    and every OTHER ``partition_by=...`` directory of the given
-    previous version dir is carried into the new version by HARDLINK
-    (same parent filesystem; zero data copied; the linked inodes
-    survive the old version's grace-reap because unlink only drops a
-    name). On an object-store deployment the hardlink farm becomes a
-    server-side metadata copy — same contract. Crash-atomicity is
-    unchanged: links land in the not-yet-published version dir, and
-    the symlink flip stays the single commit point."""
-    import json
-
-    from mevi_spark.plans.staging import reap_stale
-
-    parent = os.path.dirname(os.path.abspath(output_dir))
-    os.makedirs(parent, exist_ok=True)
-    version = os.path.join(parent, f"{v_prefix}{uuid.uuid4().hex[:8]}")
-    writer = out.write.mode("overwrite")
-    if partition_by is not None:
-        # partition-pruned readers (the near-dup bucket probe) — the
-        # version dir is hive-partitioned so a bucket filter reads only
-        # its directories
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(version)
-    if copy_forward is not None:
-        if partition_by is None:
-            raise ValueError("copy_forward requires partition_by")
-        prev_dir, touched = copy_forward
-        touched_names = {f"{partition_by}={v}" for v in touched}
-        for entry in os.listdir(prev_dir):
-            if not entry.startswith(f"{partition_by}="):
-                continue
-            if entry in touched_names:
-                continue  # rewritten this publish — never carried
-            src = os.path.join(prev_dir, entry)
-            dst = os.path.join(version, entry)
-            os.makedirs(dst, exist_ok=True)
-            for f in os.listdir(src):
-                if f.startswith(("_", ".")):
-                    continue
-                os.link(os.path.join(src, f), os.path.join(dst, f))
-    if partition_by is not None and not any(
-        f.endswith(".parquet") for f in os.listdir(version)
-    ) and not any(
-        e.startswith(f"{partition_by}=") for e in os.listdir(version)
-    ):
-        # ZERO-ROW partitioned write: dynamic-partition writers emit no
-        # schema-bearing files (only _SUCCESS), so a later
-        # read.parquet(dir) dies with UNABLE_TO_INFER_SCHEMA and wedges
-        # the stream on every replay. Publish the empty version
-        # UNpartitioned instead — one empty footer-bearing file, the
-        # partition column preserved as a regular column (same reader
-        # schema; pruning is moot on zero rows; the next non-empty
-        # publish is a fresh version dir, partitioned again).
-        out.write.mode("overwrite").parquet(version)
-    if meta is not None:
-        with open(
-            os.path.join(version, _META_FILE), "w", encoding="utf-8"
-        ) as fh:
-            json.dump(meta, fh)
-    tmp_link = os.path.join(parent, f"{ln_prefix}{uuid.uuid4().hex[:8]}")
-    os.symlink(version, tmp_link)
-    os.rename(tmp_link, output_dir)  # atomic link replacement
-    stale = []
-    for entry in os.listdir(parent):
-        full = os.path.join(parent, entry)
-        if entry.startswith(ln_prefix):
-            try:
-                os.unlink(full)
-            except OSError:
-                pass
-        elif entry.startswith(v_prefix) and full != version:
-            stale.append(full)
-    reap_stale(stale, grace=grace)
-
-
 def incremental_topk(
     stream_df: DataFrame,
     queries: DataFrame,
@@ -293,10 +123,11 @@ def incremental_topk(
     Per micro-batch: score the batch's docs against the (bounded, eval-
     sized) broadcast query set, take the batch-local per-query top-k,
     merge it with the maintained result set, re-top-k, and publish by
-    atomically flipping a version symlink — readers always see a
-    complete, current result table and there is never a moment with no
-    live table, even across a crash mid-publish. Exact by the running-top-k invariant the blocked batch
-    kernel (``exact_topk_join``) relies on: any doc in the global top-k
+    atomically flipping a version symlink (:class:`VersionedTable`) —
+    readers always see a complete, current result table and there is
+    never a moment with no live table, even across a crash mid-publish.
+    Exact by the running-top-k invariant the blocked batch kernel
+    (``exact_topk_join``) relies on: any doc in the global top-k
     is in its own batch's local top-k, so ``topk(pool ∪ topk(batch))``
     converges to the batch-engine answer regardless of arrival order or
     batching. State is the k×|queries| result table itself — no state
@@ -312,11 +143,9 @@ def incremental_topk(
     q = queries.select(
         F.col(query_id).alias("_qid"), F.col(query_vec).alias("_qv")
     )
-    v_prefix, ln_prefix = _link_prefixes(output_dir, "topk")
+    table = VersionedTable(output_dir, "topk")
 
     def sink(batch: DataFrame, _batch_id: int) -> None:
-        spark = batch.sparkSession
-        _migrate_legacy_dir(output_dir, v_prefix, ln_prefix)
         scored = (
             batch.select(id_col, vec_col)
             .crossJoin(F.broadcast(q))
@@ -327,13 +156,13 @@ def incremental_topk(
             )
         )
         local = topk_per_group(scored, [query_id], "score", k, [id_col])
-        if os.path.exists(os.path.join(output_dir, "_SUCCESS")):
-            cur = spark.read.parquet(output_dir).select(
-                query_id, id_col, "score"
+        merged = local.select(query_id, id_col, "score")
+        if table.published():
+            merged = (
+                table.read(batch.sparkSession)
+                .select(query_id, id_col, "score")
+                .unionByName(merged)
             )
-            merged = cur.unionByName(local.select(query_id, id_col, "score"))
-        else:
-            merged = local.select(query_id, id_col, "score")
         # replay-idempotent: a restarted batch re-merges the same local
         # top-k; without the dedup its duplicate (query, doc) rows would
         # occupy two ranks and evict legitimate docs (scores are
@@ -343,9 +172,7 @@ def incremental_topk(
         # the batch's offsets commit only after this sink returns, so a
         # crash anywhere here replays the batch against the still-live
         # old version — and the merge is replay-idempotent
-        _publish_version(
-            out, output_dir, v_prefix, ln_prefix, _publish_grace()
-        )
+        table.publish(out)
 
     return _drain_batches(stream_df, checkpoint_dir, sink)
 
@@ -380,7 +207,7 @@ def incremental_merge(
     """
     from mevi_spark.sources.upsert import apply_changes
 
-    v_prefix, ln_prefix = _link_prefixes(output_dir, "merge")
+    table = VersionedTable(output_dir, "merge")
 
     b0 = base.select(
         "*",
@@ -389,16 +216,7 @@ def incremental_merge(
     )
 
     def sink(batch: DataFrame, _batch_id: int) -> None:
-        spark = batch.sparkSession
-        _migrate_legacy_dir(output_dir, v_prefix, ln_prefix)
-        if os.path.exists(os.path.join(output_dir, "_SUCCESS")):
-            cur = spark.read.parquet(output_dir)
-            if op_col not in cur.columns:
-                # state published by a pre-tombstone deployment: its
-                # survivors are all live rows — upgrade in place
-                cur = cur.withColumn(op_col, F.lit("U"))
-        else:
-            cur = b0
+        cur = table.read(batch.sparkSession) if table.published() else b0
         out = apply_changes(
             cur,
             batch,
@@ -410,9 +228,7 @@ def incremental_merge(
             keep_deletes=True,
             base_op_col=op_col,
         )
-        _publish_version(
-            out, output_dir, v_prefix, ln_prefix, _publish_grace()
-        )
+        table.publish(out)
 
     return _drain_batches(change_stream, checkpoint_dir, sink)
 
@@ -506,22 +322,18 @@ def incremental_neardup(
     n_buckets)``) and the docs index (bucketed by ``pmod(
     hash64(doc_id), n_buckets)``) rewrite ONLY the buckets the batch
     touches; every untouched bucket directory is carried into the new
-    version by hardlink (``_publish_version(copy_forward=...)``), so
-    per-batch publish I/O is batch-proportional while the crash-atomic
+    version by hardlink (:meth:`VersionedTable.publish`'s ``touched``),
+    so per-batch publish I/O is batch-proportional while the crash-atomic
     version/symlink contract is unchanged. Touched band buckets
     include the buckets of a re-ingested doc's OLD band keys —
     recomputed from its old signature, fetched bucket-pruned from the
     docs index — because its stale band rows must be dropped wherever
     they live, or a probe could collide on a signature the doc no
-    longer has. A legacy docs index (published before doc-bucketing)
-    migrates with one full rewrite on its first post-upgrade batch.
-    Honest residual cost: the verified-PAIR table still publishes
+    longer has. Honest residual cost: the verified-PAIR table still publishes
     whole — it is output-sized (qualifying near-dup pairs), not
     corpus-sized, and bucketing it would buy little; revisit if a
     pathological corpus makes |pairs| ~ |docs|.
     """
-    import json
-
     from mevi_spark.operators.dedup import (
         banded_keys,
         jaccard_verify,
@@ -529,17 +341,16 @@ def incremental_neardup(
         minhash_frame,
     )
 
-    idx_dir = os.path.join(output_dir, "index")
-    bands_dir = os.path.join(output_dir, "bands")
-    pairs_dir = os.path.join(output_dir, "pairs")
-    vi, li = _link_prefixes(idx_dir, "ndidx")
-    vb, lb = _link_prefixes(bands_dir, "ndband")
-    vp, lp = _link_prefixes(pairs_dir, "ndpair")
+    idx_t = VersionedTable(
+        os.path.join(output_dir, "index"), "ndidx", "_dbkt", n_buckets
+    )
+    bands_t = VersionedTable(
+        os.path.join(output_dir, "bands"), "ndband", "_bkt", n_buckets
+    )
+    pairs_t = VersionedTable(os.path.join(output_dir, "pairs"), "ndpair")
 
     def sink(batch: DataFrame, _batch_id: int) -> None:
         spark = batch.sparkSession
-        _migrate_legacy_dir(idx_dir, vi, li)
-        _migrate_legacy_dir(pairs_dir, vp, lp)
         from pyspark.sql import Window
 
         # intra-batch duplicate doc_ids resolve deterministically
@@ -560,21 +371,12 @@ def incremental_neardup(
             .withColumn("_dbkt", doc_bucket_expr(n_buckets))
             .localCheckpoint(eager=True)
         )  # 3 consumers; hash text once
-        idx_legacy = False
-        idx_exists = os.path.exists(os.path.join(idx_dir, "_SUCCESS"))
-        if idx_exists:
-            idx = spark.read.parquet(idx_dir)
-            if "_dbkt" not in idx.columns:
-                # index published before doc-bucketing: derive the
-                # column now; this batch pays ONE full rewrite to
-                # migrate the layout
-                idx_legacy = True
-                idx = idx.withColumn("_dbkt", doc_bucket_expr(n_buckets))
-            else:
-                _check_bucket_meta(idx_dir, n_buckets, "docs index")
-        else:
-            idx_legacy = True  # nothing to copy forward from
-            idx = spark.createDataFrame([], new.schema)
+        idx_exists = idx_t.published()
+        idx = (
+            idx_t.read(spark)
+            if idx_exists
+            else spark.createDataFrame([], new.schema)
+        )
         # same empty-shingle exclusion as the batch pipeline: the
         # all-sentinel signature is one hot band key shared by every
         # stub doc, and the verify rejects those pairs anyway
@@ -584,20 +386,7 @@ def incremental_neardup(
         ).withColumn("_bkt", band_bucket_expr(n_buckets)).localCheckpoint(
             eager=True
         )  # probe + bucket-list + band-table merge: band the batch once
-        ib = None
-        bands_published = False
-        if os.path.exists(os.path.join(bands_dir, "_SUCCESS")):
-            _check_bucket_meta(bands_dir, n_buckets, "band table")
-            ib = spark.read.parquet(bands_dir)
-            bands_published = True
-        elif os.path.exists(os.path.join(idx_dir, "_SUCCESS")):
-            # legacy index published before the band table existed:
-            # rebuild bands from the docs index ONCE (the old per-batch
-            # re-banding, now paid a single time at migration)
-            ib = banded_keys(
-                idx.filter(F.size("shingles") > 0),
-                "doc_id", "sig", bands, sig_len=num_hashes,
-            ).withColumn("_bkt", band_bucket_expr(n_buckets))
+        ib = bands_t.read(spark) if bands_t.published() else None
         bkts = [r[0] for r in nb.select("_bkt").distinct().collect()]
         if ib is not None:
             probe_src = (
@@ -637,8 +426,8 @@ def incremental_neardup(
             .unionByName(new.select("doc_id", "shingles"))
         )
         verified = jaccard_verify(cands, shingled, threshold)
-        if os.path.exists(os.path.join(pairs_dir, "_SUCCESS")):
-            old = spark.read.parquet(pairs_dir)
+        if pairs_t.published():
+            old = pairs_t.read(spark)
             # a re-ingested doc's OLD-text pairs are stale state just
             # like its old band/index rows: drop every old pair that
             # touches a batch id — this batch's own probe re-verifies
@@ -657,7 +446,7 @@ def incremental_neardup(
             )
         else:
             pairs = verified
-        _publish_version(pairs, pairs_dir, vp, lp, _publish_grace())
+        pairs_t.publish(pairs)
         # a re-ingested doc_id must DETERMINISTICALLY keep the newest
         # signature (dropDuplicates keeps an arbitrary row): drop the
         # old index rows for this batch's ids, then add the new ones —
@@ -667,11 +456,8 @@ def incremental_neardup(
         batch_ids = F.broadcast(new.select("doc_id"))
         # a re-ingested doc's OLD band rows live in the buckets of its
         # OLD signature's keys — recompute them (bucket-pruned idx
-        # fetch when the index is doc-bucketed; a one-time full read
-        # on a legacy index, which must ALSO sweep or its first
-        # post-upgrade batch leaks stale rows) so their buckets
-        # rewrite too and the stale rows actually drop. Collected
-        # BEFORE any publish flips a symlink.
+        # fetch) so their buckets rewrite too and the stale rows
+        # actually drop. Collected BEFORE any publish flips a symlink.
         if ib is not None and idx_exists:
             old_rows = idx.filter(F.col("_dbkt").isin(dbkts)).join(
                 batch_ids, "doc_id"
@@ -694,58 +480,206 @@ def incremental_neardup(
         # and re-unioned). Flipping idx first would make the replay
         # derive "old" buckets from the NEW signature and strand the
         # genuinely old band rows in copy-forwarded buckets forever.
-        anti_ids = F.broadcast(new.select(F.col("doc_id").alias("_id")))
-        if ib is None:
-            _publish_version(
-                nb, bands_dir, vb, lb, _publish_grace(),
-                meta={"n_buckets": int(n_buckets)}, partition_by="_bkt",
-            )
-        elif not bands_published:
-            # one-time legacy migration: bands rebuilt from the docs
-            # index — publish the whole table once
-            merged_bands = ib.join(anti_ids, "_id", "left_anti").unionByName(
-                nb
-            )
-            _publish_version(
-                merged_bands, bands_dir, vb, lb, _publish_grace(),
-                meta={"n_buckets": int(n_buckets)}, partition_by="_bkt",
-            )
-        else:
-            touched = sorted(set(bkts) | set(old_bkts))
+        touched = sorted(set(bkts) | set(old_bkts))
+        merged_bands = nb
+        if ib is not None:
+            anti_ids = F.broadcast(new.select(F.col("doc_id").alias("_id")))
             merged_bands = (
                 ib.filter(F.col("_bkt").isin(touched))
                 .join(anti_ids, "_id", "left_anti")
                 .unionByName(nb)
             )
-            _publish_version(
-                merged_bands, bands_dir, vb, lb, _publish_grace(),
-                meta={"n_buckets": int(n_buckets)}, partition_by="_bkt",
-                copy_forward=(os.path.realpath(bands_dir), touched),
-            )
-        if idx_legacy:
-            merged_idx = idx.join(batch_ids, "doc_id", "left_anti").unionByName(
-                new
-            )
-            idx_cf = None
-        else:
-            merged_idx = (
-                idx.filter(F.col("_dbkt").isin(dbkts))
-                .join(batch_ids, "doc_id", "left_anti")
-                .unionByName(new)
-            )
-            idx_cf = (os.path.realpath(idx_dir), dbkts)
-        _publish_version(
-            merged_idx,
-            idx_dir,
-            vi,
-            li,
-            _publish_grace(),
-            meta={"n_buckets": int(n_buckets)},
-            partition_by="_dbkt",
-            copy_forward=idx_cf,
+        bands_t.publish(merged_bands, touched=touched)
+        idx_t.publish(
+            idx.filter(F.col("_dbkt").isin(dbkts))
+            .join(batch_ids, "doc_id", "left_anti")
+            .unionByName(new),
+            touched=dbkts,
         )
 
     return _drain_batches(stream_df, checkpoint_dir, sink)
+
+
+def _publish_grace() -> float:
+    """Seconds a superseded published version lingers after being MARKED
+    stale, so a reader that resolved the old target mid-scan finishes
+    (VERDICT r6 #5). Published results are artifact-sized, so a few
+    graced copies are cheap. ``SPARK_GRAFT_PUBLISH_GRACE`` governs every
+    :class:`VersionedTable` publish and :class:`PartialStore` fold."""
+    return float(os.environ.get("SPARK_GRAFT_PUBLISH_GRACE", "60"))
+
+
+class VersionedTable:
+    """One symlink-published table — the only owner of the publish-path
+    format behind every non-partial maintainer (top-k, CDC merge, heavy
+    hitters, near-dup's index/bands/pairs, SemDeDup's scored/ids, the
+    chunk index and components' labels/ids).
+
+    * Crash-atomic publish: each :meth:`publish` writes a fresh
+      ``.{kind}-v-{basename}-<hex>`` version dir beside ``output_dir``,
+      then flips ``output_dir`` — a SYMLINK — onto it in one rename of
+      a ``.{kind}-ln-{basename}-<hex>`` temp link. There is no window
+      with no live table (a two-rename directory swap has one), and a
+      crash before the flip leaves the previous version live. The
+      prefixes carry the output's basename, so two tables under one
+      parent never reap each other's versions (ADVICE r6).
+    * Graced reap: superseded versions and crashed attempts' orphans go
+      through the shared mark-then-reap (``plans/staging.py::
+      reap_stale``) with :func:`_publish_grace` seconds of grace, so a
+      reader that resolved the old target mid-scan survives the flip
+      (VERDICT r6 #5); stray temp links are unlinked at once (one
+      writer per table: any ln-prefixed entry left after our flip is
+      ours and dead).
+    * ``_meta.json`` sidecar INSIDE the version dir, written before the
+      flip: out-of-band state that must survive a zero-row table (the
+      heavy-hitters replay guard's last absorbed batch id — ADVICE r8)
+      and, on a table bucketed by ``partition_by``, the ``n_buckets``
+      it was built with. :meth:`read` and :meth:`meta` refuse a
+      bucketed table reopened with another ``n_buckets`` — its rows'
+      bucket assignment would silently mis-route probes and pruning —
+      and any published table without a readable sidecar.
+    * Bucket copy-forward (VERDICT r9 next-round #2):
+      ``publish(df, touched=...)`` takes only the touched buckets' rows,
+      and every other ``partition_by=`` dir of the live version is
+      carried into the new version by HARDLINK (zero data copied; the
+      linked inodes survive the old version's reap because unlink only
+      drops a name). Per-batch publish I/O is batch-proportional, and
+      the flip stays the single commit point. On an object store the
+      hardlink farm becomes a server-side metadata copy.
+    """
+
+    _META_FILE = "_meta.json"  # underscore-prefixed: parquet scans skip it
+
+    def __init__(
+        self,
+        output_dir: str,
+        kind: str,
+        partition_by: str | None = None,
+        n_buckets: int | None = None,
+    ):
+        self.output_dir = output_dir
+        self.kind = kind
+        self.partition_by = partition_by
+        self.n_buckets = None if n_buckets is None else int(n_buckets)
+        path = os.path.abspath(output_dir)
+        self._parent = os.path.dirname(path)
+        base = os.path.basename(path)
+        self._v = f".{kind}-v-{base}-"
+        self._ln = f".{kind}-ln-{base}-"
+
+    def published(self) -> bool:
+        """Whether a version has been published."""
+        return os.path.exists(os.path.join(self.output_dir, "_SUCCESS"))
+
+    def meta(self) -> dict:
+        """The live version's sidecar (``{}`` before the first publish),
+        after the bucket guard."""
+        import json
+
+        if not self.published():
+            return {}
+        where = f"{self.kind} table at {self.output_dir}"
+        path = os.path.join(self.output_dir, self._META_FILE)
+        try:
+            with open(path, encoding="utf-8") as fh:
+                meta = json.load(fh)
+        except (OSError, ValueError) as e:
+            raise RuntimeError(
+                f"{where} has no readable {self._META_FILE} sidecar "
+                f"({e}) — rebuild the table"
+            ) from e
+        stored = meta.get("n_buckets")
+        if self.n_buckets is not None and stored != self.n_buckets:
+            raise RuntimeError(
+                f"{where} is bucketed with n_buckets={stored}; reopening "
+                f"it with n_buckets={self.n_buckets} would mis-route "
+                f"probes — rebuild the table or keep the original value"
+            )
+        return meta
+
+    def read(self, spark) -> DataFrame:
+        """The live table (through the link), after the bucket guard."""
+        if self.n_buckets is not None:
+            self.meta()
+        return spark.read.parquet(self.output_dir)
+
+    def publish(
+        self,
+        df: DataFrame,
+        touched: list | None = None,
+        meta: dict | None = None,
+    ) -> None:
+        """Write ``df`` as a new version and flip the link onto it.
+
+        With ``touched``, ``df`` holds only those ``partition_by``
+        buckets' rows and every other bucket dir of the live version
+        carries forward; before the first publish nothing exists to
+        carry, and ``df`` is the whole table. ``meta`` lands in the
+        sidecar, after ``n_buckets`` on a bucketed table."""
+        import json
+
+        from mevi_spark.plans.staging import reap_stale
+
+        pb = self.partition_by
+        prev = None
+        if touched is not None and self.published():
+            if pb is None:
+                raise ValueError("touched requires partition_by")
+            self.meta()  # never carry buckets across an n_buckets change
+            prev = os.path.realpath(self.output_dir)
+        os.makedirs(self._parent, exist_ok=True)
+        version = os.path.join(
+            self._parent, f"{self._v}{uuid.uuid4().hex[:8]}"
+        )
+        writer = df.write.mode("overwrite")
+        if pb is not None:
+            # hive-partitioned, so a bucket filter reads only its dirs
+            writer = writer.partitionBy(pb)
+        writer.parquet(version)
+        if prev is not None:
+            rewritten = {f"{pb}={v}" for v in touched}
+            for entry in os.listdir(prev):
+                if not entry.startswith(f"{pb}=") or entry in rewritten:
+                    continue
+                src = os.path.join(prev, entry)
+                dst = os.path.join(version, entry)
+                os.makedirs(dst, exist_ok=True)
+                for f in os.listdir(src):
+                    if not f.startswith(("_", ".")):
+                        os.link(os.path.join(src, f), os.path.join(dst, f))
+        if pb is not None and not any(
+            e.endswith(".parquet") or e.startswith(f"{pb}=")
+            for e in os.listdir(version)
+        ):
+            # ZERO-ROW partitioned write: dynamic-partition writers emit
+            # no schema-bearing files (only _SUCCESS), so a later
+            # read.parquet(dir) dies with UNABLE_TO_INFER_SCHEMA and
+            # wedges the stream on every replay. Publish the empty
+            # version UNpartitioned instead — one empty footer-bearing
+            # file, the partition column kept as a regular column (same
+            # reader schema; pruning is moot on zero rows; the next
+            # non-empty publish is a fresh version dir, partitioned).
+            df.write.mode("overwrite").parquet(version)
+        if self.n_buckets is not None:
+            meta = {"n_buckets": self.n_buckets, **(meta or {})}
+        if meta is not None:
+            path = os.path.join(version, self._META_FILE)
+            with open(path, "w", encoding="utf-8") as fh:
+                json.dump(meta, fh)
+        tmp = os.path.join(self._parent, f"{self._ln}{uuid.uuid4().hex[:8]}")
+        os.symlink(version, tmp)
+        os.rename(tmp, self.output_dir)  # atomic link replacement
+        stale = []
+        for entry in os.listdir(self._parent):
+            full = os.path.join(self._parent, entry)
+            if entry.startswith(self._ln):
+                try:
+                    os.unlink(full)
+                except OSError:
+                    pass
+            elif entry.startswith(self._v) and full != version:
+                stale.append(full)
+        reap_stale(stale, grace=_publish_grace())
 
 
 _BASE_LINK = "base"
@@ -1266,30 +1200,18 @@ def incremental_heavy_hitters(
     and a crash-replay of that batch would then re-merge counts the
     trim already absorbed, breaking the stored ≤ true undercount
     invariant (ADVICE r8). ``last_bid`` is still emitted as a column
-    for debuggability and legacy-state compatibility.
+    for debuggability.
     """
-    import json
-
-    v_prefix, ln_prefix = _link_prefixes(output_dir, "hh")
+    table = VersionedTable(output_dir, "hh")
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
         cur = None
-        if os.path.exists(os.path.join(output_dir, "_SUCCESS")):
-            cur = spark.read.parquet(output_dir)
-            last = None
-            meta_path = os.path.join(output_dir, _META_FILE)
-            try:
-                with open(meta_path, encoding="utf-8") as fh:
-                    last = json.load(fh).get("last_bid")
-            except (OSError, ValueError):
-                # legacy state published before the sidecar existed:
-                # fall back to the row column (None on zero rows — the
-                # exact gap the sidecar closes going forward)
-                last = cur.agg(F.max("last_bid")).first()[0]
-            if last is not None and last == batch_id:
+        if table.published():
+            cur = table.read(batch.sparkSession)
+            last = table.meta()["last_bid"]
+            if last == batch_id:
                 return  # replayed batch: state already includes it
-            if last is not None and last > batch_id:
+            if last > batch_id:
                 # a fresh checkpoint restarts batch ids at 0; silently
                 # skipping until they catch up would LOSE every batch —
                 # an output cannot be reused with a different checkpoint
@@ -1318,14 +1240,7 @@ def incremental_heavy_hitters(
                 col, (F.col("cnt") - F.lit(cutoff)).alias("cnt")
             ).filter(F.col("cnt") > 0)
         out = merged.withColumn("last_bid", F.lit(batch_id).cast("long"))
-        _publish_version(
-            out,
-            output_dir,
-            v_prefix,
-            ln_prefix,
-            _publish_grace(),
-            meta={"last_bid": int(batch_id)},
-        )
+        table.publish(out, meta={"last_bid": int(batch_id)})
 
     return _drain_batches(stream_df, checkpoint_dir, sink)
 
@@ -1421,9 +1336,9 @@ def incremental_semdedup(
        drained state equals the one-shot operator over the full corpus
        (pinned by test);
     4. publish both tables: touched buckets rewritten, untouched
-       bucket dirs hardlink-forward (``_publish_version``'s
-       ``copy_forward`` — the crash-atomic flip contract of every
-       other maintained index here). Bucket-mates of untouched
+       bucket dirs hardlink-forward (:meth:`VersionedTable.publish`'s
+       ``touched`` — the crash-atomic flip contract of every other
+       maintained index here). Bucket-mates of untouched
        clusters republish unchanged (the rewrite unit is the bucket;
        ``n_buckets`` trades publish size against partition count).
 
@@ -1433,10 +1348,12 @@ def incremental_semdedup(
     from mevi_spark.operators.rq import assign_nearest, centroid_entries
 
     entries = centroid_entries(centroids)
-    scored_dir = os.path.join(output_dir, "scored")
-    ids_dir = os.path.join(output_dir, "ids")
-    vs, ls = _link_prefixes(scored_dir, "sdscore")
-    vi, li = _link_prefixes(ids_dir, "sdids")
+    scored_t = VersionedTable(
+        os.path.join(output_dir, "scored"), "sdscore", "_kbkt", n_buckets
+    )
+    ids_t = VersionedTable(
+        os.path.join(output_dir, "ids"), "sdids", "_dbkt", n_buckets
+    )
 
     def _tournament(scored: DataFrame) -> DataFrame:
         """Within-cluster keep/prune on a (bounded: touched clusters ∪
@@ -1458,8 +1375,6 @@ def incremental_semdedup(
         from pyspark.sql import Window
 
         spark = batch.sparkSession
-        _migrate_legacy_dir(scored_dir, vs, ls)
-        _migrate_legacy_dir(ids_dir, vi, li)
         # intra-batch duplicate ids resolve DETERMINISTICALLY (max
         # vector-hash wins — dropDuplicates keeps an arbitrary row,
         # which would break replay-idempotence when the duplicates
@@ -1508,22 +1423,18 @@ def incremental_semdedup(
         keys = new.select("code", "_dbkt", kb).distinct().collect()
         touched = {(r.code, r._kbkt) for r in keys}
         dbkts = sorted({r._dbkt for r in keys})
-        published = os.path.exists(os.path.join(scored_dir, "_SUCCESS"))
-        # the ids table is guarded by ITS OWN _SUCCESS: a crash between
-        # the first batch's scored publish and ids publish would
-        # otherwise wedge every replay on PATH_NOT_FOUND. When scored
-        # exists but ids is one publish behind (crash between the two
-        # on a later batch), ids still holds the PRE-batch state —
-        # exactly the old codes the sweep needs, so the replay stays
-        # correct; this is also why scored publishes BEFORE ids.
-        ids_exists = os.path.exists(os.path.join(ids_dir, "_SUCCESS"))
-        ids_tbl = None
-        if published:
-            _check_bucket_meta(scored_dir, n_buckets, "semantic index")
-        if published and ids_exists:
+        # each table is guarded by ITS OWN publish: a crash between the
+        # first batch's scored publish and ids publish leaves ids
+        # unpublished, and the replay rebuilds it from the batch. When
+        # ids is one publish behind on a later batch, it still holds
+        # the PRE-batch state — exactly the old codes the sweep needs,
+        # so the replay stays correct; this is also why scored
+        # publishes BEFORE ids.
+        merged_ids = new.select("_id", "code", "_dbkt")
+        if ids_t.published():
             # OLD codes of re-ingested ids (id-bucket-pruned lookup;
             # collected BEFORE any publish flips a symlink)
-            ids_tbl = spark.read.parquet(ids_dir)
+            ids_tbl = ids_t.read(spark)
             touched |= {
                 (r.code, r._kbkt)
                 for r in ids_tbl.filter(F.col("_dbkt").isin(dbkts))
@@ -1532,10 +1443,15 @@ def incremental_semdedup(
                 .distinct()
                 .collect()
             }
+            merged_ids = (
+                ids_tbl.filter(F.col("_dbkt").isin(dbkts))
+                .join(batch_ids, "_id", "left_anti")
+                .unionByName(merged_ids)
+            )
         touched_codes = sorted({c for c, _ in touched})
         kbkts = sorted({b for _, b in touched})
-        if published:
-            idx = spark.read.parquet(scored_dir)
+        if scored_t.published():
+            idx = scored_t.read(spark)
             in_touched = F.col("code").isin(touched_codes)
             pool = (
                 idx.filter(F.col("_kbkt").isin(kbkts))
@@ -1555,36 +1471,12 @@ def incremental_semdedup(
                 .withColumn("_kbkt", code_bucket_expr(n_buckets))
                 .unionByName(bystanders)
             )
-            cf_scored = (os.path.realpath(scored_dir), kbkts)
-            if ids_tbl is not None:
-                merged_ids = (
-                    ids_tbl.filter(F.col("_dbkt").isin(dbkts))
-                    .join(batch_ids, "_id", "left_anti")
-                    .unionByName(new.select("_id", "code", "_dbkt"))
-                )
-                cf_ids = (os.path.realpath(ids_dir), dbkts)
-            else:
-                # first-batch crash replay: scored exists, ids never
-                # published — rebuild ids from this batch alone
-                merged_ids = new.select("_id", "code", "_dbkt")
-                cf_ids = None
         else:
             out = _tournament(
                 new.select("_id", "code", "_v", "_cc")
             ).withColumn("_kbkt", code_bucket_expr(n_buckets))
-            cf_scored = None
-            merged_ids = new.select("_id", "code", "_dbkt")
-            cf_ids = None
-        _publish_version(
-            out, scored_dir, vs, ls, _publish_grace(),
-            meta={"n_buckets": int(n_buckets)}, partition_by="_kbkt",
-            copy_forward=cf_scored,
-        )
-        _publish_version(
-            merged_ids, ids_dir, vi, li, _publish_grace(),
-            meta={"n_buckets": int(n_buckets)}, partition_by="_dbkt",
-            copy_forward=cf_ids,
-        )
+        scored_t.publish(out, touched=kbkts)
+        ids_t.publish(merged_ids, touched=dbkts)
 
     return _drain_batches(stream_df, checkpoint_dir, sink)
 
@@ -1620,8 +1512,8 @@ def append_chunk_kept(
        hash buckets (partition-pruned — batch-proportional reads);
        a chunk already in the index keeps its existing owner;
     3. publish: the surviving new winners' buckets rewrite, untouched
-       bucket dirs hardlink forward (the shared ``copy_forward``
-       crash-atomic flip).
+       bucket dirs hardlink forward (the shared
+       :class:`VersionedTable` crash-atomic flip).
 
     Convergence: when batches arrive doc-id-ascending (the packer
     discipline), first-arrival == global (doc_id, idx) minimum, so the
@@ -1648,11 +1540,10 @@ def append_chunk_kept(
         .withColumn("_hbkt", chunk_bucket_expr(n_buckets))
         .localCheckpoint(eager=True)  # probe + bucket-list + publish
     )
-    v_prefix, ln_prefix = _link_prefixes(state_dir, "chidx")
-    _migrate_legacy_dir(state_dir, v_prefix, ln_prefix)
-    if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-        _check_bucket_meta(state_dir, n_buckets, "chunk index")
-        idx = spark.read.parquet(state_dir)
+    table = VersionedTable(state_dir, "chidx", "_hbkt", n_buckets)
+    merged, touched = winners, None
+    if table.published():
+        idx = table.read(spark)
         bkts = [r[0] for r in winners.select("_hbkt").distinct().collect()]
         fresh = winners.join(
             idx.filter(F.col("_hbkt").isin(bkts)).select("_h"),
@@ -1663,14 +1554,7 @@ def append_chunk_kept(
             r[0] for r in fresh.select("_hbkt").distinct().collect()
         )
         merged = idx.filter(F.col("_hbkt").isin(touched)).unionByName(fresh)
-        cf = (os.path.realpath(state_dir), touched)
-    else:
-        merged, cf = winners, None
-    _publish_version(
-        merged, state_dir, v_prefix, ln_prefix, _publish_grace(),
-        meta={"n_buckets": int(n_buckets)}, partition_by="_hbkt",
-        copy_forward=cf,
-    )
+    table.publish(merged, touched=touched)
 
 
 def incremental_chunk_dedup(
@@ -1762,14 +1646,12 @@ def apply_components_batch(
     on ``ids``. A spurious id match (fresh checkpoint over old state)
     only switches the fetch source between two tables that agree.
     """
-    import json
-
-    labels_dir = os.path.join(state_dir, "labels")
-    ids_dir = os.path.join(state_dir, "ids")
-    vl, ll = _link_prefixes(labels_dir, "ccl")
-    vi, li = _link_prefixes(ids_dir, "cci")
-    _migrate_legacy_dir(labels_dir, vl, ll)
-    _migrate_legacy_dir(ids_dir, vi, li)
+    labels_t = VersionedTable(
+        os.path.join(state_dir, "labels"), "ccl", "_cbkt", n_buckets
+    )
+    ids_t = VersionedTable(
+        os.path.join(state_dir, "ids"), "cci", "_dbkt", n_buckets
+    )
 
     e = (
         edges.select(
@@ -1786,22 +1668,11 @@ def apply_components_batch(
         .withColumn("_dbkt", id_bucket_expr(n_buckets))
         .localCheckpoint(eager=True)
     )
-    labels_pub = os.path.exists(os.path.join(labels_dir, "_SUCCESS"))
-    ids_pub = os.path.exists(os.path.join(ids_dir, "_SUCCESS"))
-    replay = False
-    if labels_pub:
-        _check_bucket_meta(labels_dir, n_buckets, "components labels")
-        try:
-            with open(
-                os.path.join(labels_dir, _META_FILE), encoding="utf-8"
-            ) as fh:
-                replay = json.load(fh).get("batch_id") == batch_id
-        except (OSError, ValueError):
-            replay = False
+    lbl = labels_t.read(spark) if labels_t.published() else None
+    replay = labels_t.meta().get("batch_id") == batch_id
     ids_tbl = None
-    if ids_pub:
-        _check_bucket_meta(ids_dir, n_buckets, "components ids")
-        ids_tbl = spark.read.parquet(ids_dir)
+    if ids_t.published():
+        ids_tbl = ids_t.read(spark)
         dbkts = [r[0] for r in eps.select("_dbkt").distinct().collect()]
         roots = eps.join(
             ids_tbl.filter(F.col("_dbkt").isin(dbkts)).select(
@@ -1854,7 +1725,7 @@ def apply_components_batch(
     if losers:
         if replay and ids_tbl is not None:
             src = ids_tbl.select("_id", "component")  # rare: see docstring
-        elif labels_pub:
+        elif lbl is not None:
             lf = spark.createDataFrame(
                 [(v,) for v in losers], "component long"
             )
@@ -1867,8 +1738,7 @@ def apply_components_batch(
                 .collect()
             ]
             src = (
-                spark.read.parquet(labels_dir)
-                .filter(F.col("_cbkt").isin(lbkts))
+                lbl.filter(F.col("_cbkt").isin(lbkts))
                 .select("_id", "component")
             )
         else:
@@ -1890,9 +1760,9 @@ def apply_components_batch(
         .localCheckpoint(eager=True)
     )
 
-    meta = {"n_buckets": int(n_buckets), "batch_id": int(batch_id)}
-    if labels_pub:
-        lbl = spark.read.parquet(labels_dir)
+    cbkts = None
+    out_labels = w.select("_id", "component", "_cbkt")
+    if lbl is not None:
         cbkts = {r[0] for r in w.select("_cbkt").distinct().collect()}
         if losers:
             lf = spark.createDataFrame(
@@ -1916,16 +1786,13 @@ def apply_components_batch(
             # dead component label behind
             pool = pool.filter(~F.col("component").isin(losers))
         out_labels = pool.select("_id", "component", "_cbkt").unionByName(
-            w.select("_id", "component", "_cbkt")
+            out_labels
         )
-        cf_l = (os.path.realpath(labels_dir), cbkts)
-    else:
-        out_labels = w.select("_id", "component", "_cbkt")
-        cf_l = None
-    _publish_version(
-        out_labels, labels_dir, vl, ll, _publish_grace(),
-        meta=meta, partition_by="_cbkt", copy_forward=cf_l,
+    labels_t.publish(
+        out_labels, touched=cbkts, meta={"batch_id": int(batch_id)}
     )
+    wdbkts = None
+    out_ids = w.select("_id", "component", "_dbkt")
     if ids_tbl is not None:
         wdbkts = sorted(
             {r[0] for r in w.select("_dbkt").distinct().collect()}
@@ -1934,17 +1801,9 @@ def apply_components_batch(
             ids_tbl.filter(F.col("_dbkt").isin(wdbkts))
             .join(w.select("_id"), "_id", "left_anti")
             .select("_id", "component", "_dbkt")
-            .unionByName(w.select("_id", "component", "_dbkt"))
+            .unionByName(out_ids)
         )
-        cf_i = (os.path.realpath(ids_dir), wdbkts)
-    else:
-        out_ids = w.select("_id", "component", "_dbkt")
-        cf_i = None
-    _publish_version(
-        out_ids, ids_dir, vi, li, _publish_grace(),
-        meta={"n_buckets": int(n_buckets)}, partition_by="_dbkt",
-        copy_forward=cf_i,
-    )
+    ids_t.publish(out_ids, touched=wdbkts)
 
 
 def incremental_components(

@@ -374,3 +374,53 @@ def test_incremental_topk_superseded_version_grace(spark, sf_dir, monkeypatch):
         stream, queries, f"{base}/out", f"{base}/ck", k=5
     ).awaitTermination()
     assert not os.path.exists(v1), "graced dir should reap once expired"
+
+
+def test_incremental_merge_replays_identically_and_tombstones_hold(spark):
+    """The maintained CDC table (a) republishes an identical table on a
+    full replay of every slice from a fresh checkpoint — versions and
+    tombstones persist, so re-merging absorbed rows changes nothing —
+    and (b) keeps a deleted key deleted when a lower-version upsert for
+    it arrives in a later slice."""
+    import shutil
+    import tempfile as _tf
+
+    from mevi_spark.streaming import incremental_merge
+    from mevi_spark.streaming.incremental import stream_parquet_source
+
+    base = _tf.mkdtemp(prefix="mevi_t_imerge_")
+    table = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "k long, v string"
+    )
+    schema = "k long, v string, _op string, _version long"
+    slices = [
+        [(2, "b2", "U", 2), (4, "d", "U", 2)],
+        [(2, None, "D", 5), (3, "c3", "U", 3)],
+        # arrives after the v5 tombstone with a LOWER version
+        [(2, "b-late", "U", 4), (1, "a1", "U", 1)],
+    ]
+    try:
+        for i, rows in enumerate(slices):
+            sl = spark.createDataFrame(rows, schema)
+            sl.coalesce(1).write.parquet(f"{base}/in/s{i:02d}")
+
+        def drain(ckpt):
+            stream = stream_parquet_source(spark, f"{base}/in/s*", sl.schema)
+            incremental_merge(
+                stream, table, ["k"], f"{base}/out", f"{base}/{ckpt}"
+            ).awaitTermination()
+            return sorted(
+                (r.k, r.v, r._version, r._op)
+                for r in spark.read.parquet(f"{base}/out").collect()
+            )
+
+        first = drain("ckpt")
+        assert first == [
+            (1, "a1", 1, "U"),
+            (2, None, 5, "D"),  # the tombstone outlives the late upsert
+            (3, "c3", 3, "U"),
+            (4, "d", 2, "U"),
+        ]
+        assert drain("fresh_ckpt") == first
+    finally:
+        shutil.rmtree(base, ignore_errors=True)

@@ -547,6 +547,55 @@ def test_incremental_heavy_hitters_complete_and_replay_safe(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
+def test_incremental_heavy_hitters_fresh_checkpoint_raises(spark):
+    """Counter merges are not idempotent, so the summary's sidecar
+    records the last absorbed batch id. A fresh checkpoint restarts
+    batch ids at 0; reusing the output with it must fail loudly instead
+    of skipping every batch until the ids catch up."""
+    import shutil
+
+    from mevi_spark.streaming import incremental_heavy_hitters
+    from mevi_spark.streaming.incremental import (
+        VersionedTable,
+        stream_parquet_source,
+    )
+
+    base = tempfile.mkdtemp(prefix="mevi_hh_ckpt_")
+    df = spark.createDataFrame(
+        [(i, f"t{i % 5}") for i in range(30)], "i long, term string"
+    )
+    try:
+        for s in range(3):
+            df.filter(F.col("i") % 3 == s).coalesce(1).write.parquet(
+                f"{base}/in/s{s:02d}"
+            )
+
+        def run(ckpt):
+            stream = stream_parquet_source(
+                spark, f"{base}/in/s*", df.schema, max_files_per_trigger=1
+            )
+            incremental_heavy_hitters(
+                stream.select("term"), f"{base}/out", f"{base}/{ckpt}", 3,
+                col="term",
+            ).awaitTermination()
+
+        def state():
+            return sorted(
+                tuple(r) for r in spark.read.parquet(f"{base}/out").collect()
+            )
+
+        run("ckpt")
+        assert VersionedTable(f"{base}/out", "hh").meta() == {"last_bid": 2}
+        before = state()
+        with pytest.raises(
+            Exception, match="absorbed batch 2 but the stream is at batch 0"
+        ):
+            run("fresh_ckpt")
+        assert state() == before
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_rollup_partials_single_resolution(spark):
     """A one-entry resolutions dict is a legal use of the documented
     parameter — it must produce a constant-label rollup, not crash on
@@ -1236,14 +1285,14 @@ def test_neardup_crash_between_bands_and_idx_publish_replays_clean(
     )
     b2 = spark.createDataFrame([(5, new_text)], "doc_id long, text string")
     base = tempfile.mkdtemp(prefix="mevi_test_ndcrash_")
-    real_publish = inc._publish_version
+    real_publish = inc.VersionedTable.publish
     crash = {"armed": False}
 
-    def crashing_publish(out, output_dir, *a, **kw):
-        if crash["armed"] and output_dir.endswith("/index"):
+    def crashing_publish(table, df, *a, **kw):
+        if crash["armed"] and table.output_dir.endswith("/index"):
             crash["armed"] = False
             raise RuntimeError("injected crash before idx publish")
-        return real_publish(out, output_dir, *a, **kw)
+        return real_publish(table, df, *a, **kw)
 
     try:
 
@@ -1262,7 +1311,7 @@ def test_neardup_crash_between_bands_and_idx_publish_replays_clean(
         b1.coalesce(1).write.mode("overwrite").parquet(f"{base}/in/s00")
         drain()
         b2.coalesce(1).write.mode("overwrite").parquet(f"{base}/in/s01")
-        monkeypatch.setattr(inc, "_publish_version", crashing_publish)
+        monkeypatch.setattr(inc.VersionedTable, "publish", crashing_publish)
         crash["armed"] = True
         import pyspark.errors
 
@@ -1293,6 +1342,201 @@ def test_neardup_crash_between_bands_and_idx_publish_replays_clean(
             F.col("doc_id") == 5
         ).collect()
         assert len(idx) == 1
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_versioned_table_crash_before_flip_keeps_previous_state(
+    spark, monkeypatch
+):
+    """A publish that dies after writing its version dir but before the
+    symlink flip changes no read; the next publish marks the orphan
+    ``.stale_since`` with the version it supersedes; every name keeps
+    the ``.{kind}-v-{basename}-`` / ``.{kind}-ln-{basename}-`` format."""
+    import re
+    import shutil
+
+    from mevi_spark.plans.staging import _STALE_MARK
+    from mevi_spark.streaming.incremental import VersionedTable
+
+    monkeypatch.setenv("SPARK_GRAFT_PUBLISH_GRACE", "3600")
+    root = tempfile.mkdtemp(prefix="mevi_test_vt_")
+    schema = "x long, _b int"
+    try:
+        table = VersionedTable(f"{root}/tbl", "demo", "_b", n_buckets=2)
+        assert not table.published() and table.meta() == {}
+        # first publish: nothing to carry forward, the frame is the table
+        table.publish(
+            spark.createDataFrame([(1, 0), (2, 1)], schema), touched=[0]
+        )
+        assert table.published()
+        live = os.path.realpath(f"{root}/tbl")
+        before = sorted(tuple(r) for r in table.read(spark).collect())
+        assert before == [(1, 0), (2, 1)]
+        orphans = []
+
+        def crash(src, dst):
+            orphans.append(src)
+            raise OSError("crash before the flip")
+
+        batch = spark.createDataFrame([(3, 0)], schema)
+        with monkeypatch.context() as m:
+            m.setattr(os, "symlink", crash)
+            with pytest.raises(OSError, match="crash before the flip"):
+                table.publish(batch, touched=[0])
+        (orphan,) = orphans
+        assert os.path.isdir(orphan) and orphan != live
+        assert os.path.realpath(f"{root}/tbl") == live
+        assert sorted(tuple(r) for r in table.read(spark).collect()) == before
+        assert table.meta() == {"n_buckets": 2}
+        version_name = re.compile(r"\.demo-v-tbl-[0-9a-f]{8}")
+        assert version_name.fullmatch(os.path.basename(orphan))
+        assert version_name.fullmatch(os.path.basename(live))
+        # the next publish rewrites bucket 0, hardlinks bucket 1 forward
+        # and marks both the orphan and the superseded version
+        table.publish(batch, touched=[0])
+        assert version_name.fullmatch(
+            os.path.basename(os.path.realpath(f"{root}/tbl"))
+        )
+        assert os.path.exists(os.path.join(orphan, _STALE_MARK))
+        assert os.path.exists(os.path.join(live, _STALE_MARK))
+        assert sorted(tuple(r) for r in table.read(spark).collect()) == [
+            (2, 1),
+            (3, 0),
+        ]
+        assert not [e for e in os.listdir(root) if e.startswith(".demo-ln-")]
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _neardup_guard_case(spark, base):
+    from mevi_spark.streaming.incremental import (
+        incremental_neardup,
+        stream_parquet_source,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e f g h"), (2, "a b c d e f g x")],
+        "doc_id long, text string",
+    )
+    df.coalesce(1).write.parquet(f"{base}/in/s00")
+    runs = iter(range(100))
+
+    def ingest(n_buckets):
+        # a fresh checkpoint replays the slice, so the sink runs again
+        incremental_neardup(
+            stream_parquet_source(spark, f"{base}/in/s*", df.schema),
+            f"{base}/out", f"{base}/ckpt{next(runs)}",
+            num_hashes=12, bands=4, threshold=0.5, n_buckets=n_buckets,
+        ).awaitTermination()
+
+    return ingest, [f"{base}/out/index", f"{base}/out/bands"]
+
+
+def _semdedup_guard_case(spark, base):
+    from mevi_spark.streaming.incremental import (
+        incremental_semdedup,
+        stream_parquet_source,
+    )
+
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+        "code long, centroid array<double>",
+    )
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.1]), (2, [0.1, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    df.coalesce(1).write.parquet(f"{base}/in/s00")
+    runs = iter(range(100))
+
+    def ingest(n_buckets):
+        incremental_semdedup(
+            stream_parquet_source(spark, f"{base}/in/s*", df.schema),
+            cents, f"{base}/out", f"{base}/ckpt{next(runs)}",
+            n_buckets=n_buckets,
+        ).awaitTermination()
+
+    return ingest, [f"{base}/out/scored", f"{base}/out/ids"]
+
+
+def _chunk_guard_case(spark, base):
+    from mevi_spark.streaming.incremental import append_chunk_kept
+
+    docs = spark.createDataFrame(
+        [(1, " ".join(f"a{i}" for i in range(16)))],
+        "doc_id long, text string",
+    )
+
+    def ingest(n_buckets):
+        append_chunk_kept(
+            spark, f"{base}/chunks", docs, w_words=8, n_buckets=n_buckets
+        )
+
+    return ingest, [f"{base}/chunks"]
+
+
+def _components_guard_case(spark, base):
+    from mevi_spark.streaming.incremental import apply_components_batch
+
+    edges = spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long")
+    batch_ids = iter(range(100))
+
+    def ingest(n_buckets):
+        apply_components_batch(
+            spark, f"{base}/cc", edges, next(batch_ids), n_buckets=n_buckets
+        )
+
+    return ingest, [f"{base}/cc/labels", f"{base}/cc/ids"]
+
+
+_GUARD_CASES = {
+    "neardup": _neardup_guard_case,
+    "semdedup": _semdedup_guard_case,
+    "chunk": _chunk_guard_case,
+    "components": _components_guard_case,
+}
+
+
+@pytest.mark.parametrize("family", sorted(_GUARD_CASES))
+def test_bucketed_table_guard_names_the_table(spark, family):
+    """Every bucketed maintained table refuses a reopen with another
+    ``n_buckets`` — its rows' bucket assignment would mis-route probes
+    — and a published version whose ``_meta.json`` sidecar is gone.
+    Each table of the family is tampered with alone, so the error must
+    name that table, not the first one the maintainer happens to open."""
+    import json
+    import re
+    import shutil
+
+    base = tempfile.mkdtemp(prefix=f"mevi_test_guard_{family}_")
+    try:
+        ingest, tables = _GUARD_CASES[family](spark, base)
+        ingest(8)
+        with pytest.raises(Exception, match="reopening it with n_buckets=4"):
+            ingest(4)
+        for t in tables:
+            meta_path = os.path.join(os.path.realpath(t), "_meta.json")
+            with open(meta_path, encoding="utf-8") as fh:
+                saved = fh.read()
+            meta = json.loads(saved)
+            assert meta["n_buckets"] == 8
+            with open(meta_path, "w", encoding="utf-8") as fh:
+                json.dump({**meta, "n_buckets": 5}, fh)
+            with pytest.raises(
+                Exception,
+                match=rf"table at {re.escape(t)} is bucketed with n_buckets=5",
+            ):
+                ingest(8)
+            os.remove(meta_path)
+            with pytest.raises(
+                Exception,
+                match=rf"table at {re.escape(t)} has no readable _meta\.json",
+            ):
+                ingest(8)
+            with open(meta_path, "w", encoding="utf-8") as fh:
+                fh.write(saved)
+        ingest(8)  # restored sidecars reopen cleanly
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
