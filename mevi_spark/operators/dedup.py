@@ -93,24 +93,33 @@ def banded_keys(
     from mevi_spark.functions.vector import sql_ident
 
     n = sig_len if sig_len is not None else sigs.select(F.size(sig_col)).first()[0]
-    if n % bands:
+    return sigs.selectExpr(
+        f"{sql_ident(id_col)} AS _id",
+        f"explode({band_structs_sql(sig_col, bands, n)}) AS bk",
+    ).select("_id", "bk.band", "bk.key")
+
+
+def band_structs_sql(sig_col: str, bands: int, sig_len: int) -> str:
+    """SQL text of one signature's bands as
+    ``array(named_struct('band', b, 'key', csv), ...)`` — the one
+    definition of a band key, exploded by :func:`banded_keys` and
+    hashed in place by the incremental maintainer's bucket set."""
+    from mevi_spark.functions.vector import sql_ident
+
+    if sig_len % bands:
         raise ValueError(
-            f"signature length {n} not divisible by bands={bands}: the "
-            f"trailing {n % bands} slots would silently join no band "
-            f"(ann.lsh_topk_join raises on the same condition)"
+            f"signature length {sig_len} not divisible by bands={bands}: "
+            f"the trailing {sig_len % bands} slots would silently join no "
+            f"band (ann.lsh_topk_join raises on the same condition)"
         )
-    rpb = n // bands
+    rpb = sig_len // bands
     sc = sql_ident(sig_col)
-    bands_sql = ", ".join(
+    return "array(" + ", ".join(
         f"named_struct('band', {b}, 'key',"
         f" concat_ws(',', transform(slice({sc}, {b * rpb + 1}, {rpb}),"
         f" x -> CAST(x AS STRING))))"
         for b in range(bands)
-    )
-    return sigs.selectExpr(
-        f"{sql_ident(id_col)} AS _id",
-        f"explode(array({bands_sql})) AS bk",
-    ).select("_id", "bk.band", "bk.key")
+    ) + ")"
 
 
 def lsh_candidate_pairs(
@@ -255,14 +264,8 @@ def minhash_frame(
     ``num_hashes`` slots via double hashing. The unit both the batch
     pipeline (:func:`dedup_minhash`) and the incremental index
     maintainer (``streaming/incremental.py::incremental_neardup``)
-    compute per document exactly once."""
-    from mevi_spark.sources.io import spread_small_scan
-
-    # the signature stage is per-row md5 over every shingle — the one
-    # place a single-row-group input serializes the whole corpus onto
-    # one core (measured 4× at sf0.1); identity when the scan already
-    # plans wide
-    df = spread_small_scan(df.sparkSession, df)
+    compute per document exactly once. The frame keeps ``df``'s
+    partitioning; :func:`dedup_minhash` spreads a narrow scan first."""
     shingled = shingle_frame(df, text_col, id_col, shingle_n)
     # Kirsch-Mitzenmacher double hashing: h1 = first 14 hex chars of the
     # shingle's md5 (56 bits), h2 = next 14 forced odd, slot i = min of
@@ -316,7 +319,13 @@ def dedup_minhash(
     caller's own action), and ``clear_session_caches`` still frees the
     blocks deterministically in long-lived sessions."""
     from mevi_spark.operators.cache import defer_unpersist
+    from mevi_spark.sources.io import spread_small_scan
 
+    # the signature stage is per-row md5 over every shingle — the one
+    # place a single-row-group input serializes the whole corpus onto
+    # one core (measured 4× at sf0.1); identity when the scan already
+    # plans wide
+    df = spread_small_scan(df.sparkSession, df)
     base = minhash_frame(df, text_col, id_col, num_hashes, shingle_n).persist()
     # empty-shingle docs (< shingle_n tokens) all share the all-sentinel
     # signature: banding them would make ONE band key quadratic in

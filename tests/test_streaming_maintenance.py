@@ -1541,6 +1541,204 @@ def test_bucketed_table_guard_names_the_table(spark, family):
         shutil.rmtree(base, ignore_errors=True)
 
 
+def _data_files(d):
+    return [f for f in os.listdir(d) if not f.startswith(("_", "."))]
+
+
+def _job_ids(spark, group, fn):
+    """``fn()``'s result and the ids of the Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("idle", "idle")
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("family", sorted(_GUARD_CASES))
+def test_versioned_table_one_file_per_bucket_and_recorded_schema(
+    spark, family
+):
+    """Every bucketed maintained table: each bucket dir of a published
+    version holds exactly one data file (the write clusters rows by
+    bucket first), and ``read`` returns the schema a plain
+    ``spark.read.parquet`` infers — names, order and types — from the
+    schema its publish recorded, without starting a Spark job. A
+    version whose sidecar has no recorded schema still reads."""
+    import json
+    import shutil
+
+    from mevi_spark.streaming.incremental import VersionedTable
+
+    base = tempfile.mkdtemp(prefix=f"mevi_test_vtfile_{family}_")
+    try:
+        ingest, tables = _GUARD_CASES[family](spark, base)
+        ingest(8)
+        ingest(8)  # a second publish: touched buckets rewrite, rest link
+        for t in tables:
+            real = os.path.realpath(t)
+            bucket_dirs = [
+                os.path.join(real, e) for e in os.listdir(real) if "=" in e
+            ]
+            assert bucket_dirs, t
+            for d in bucket_dirs:
+                assert len(_data_files(d)) == 1, (d, _data_files(d))
+            table = VersionedTable(t, "any", n_buckets=8)
+            got, jobs = _job_ids(
+                spark, f"vt-read-{family}", lambda: table.read(spark).schema
+            )
+            assert jobs == [], (t, jobs)
+            assert got == spark.read.parquet(t).schema, t
+            # a sidecar from before the schema was recorded
+            path = os.path.join(real, "_meta.json")
+            with open(path, encoding="utf-8") as fh:
+                meta = json.load(fh)
+            assert "schema" in meta and "schema" not in table.meta()
+            with open(path, "w", encoding="utf-8") as fh:
+                json.dump({k: v for k, v in meta.items() if k != "schema"}, fh)
+            assert table.read(spark).schema == got
+            assert sorted(map(tuple, table.read(spark).collect())) == sorted(
+                map(tuple, spark.read.parquet(t).collect())
+            )
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_versioned_table_zero_row_fallback_schema(spark):
+    """A zero-row publish of a bucketed table falls back to one
+    unpartitioned file; its recorded schema keeps the frame's own
+    column order, which is what the reader infers there, and the next
+    non-empty publish records the partitioned order again — one file
+    per bucket even from a frame spread over eight partitions."""
+    import shutil
+
+    from mevi_spark.streaming.incremental import VersionedTable
+
+    root = tempfile.mkdtemp(prefix="mevi_test_vt0_")
+    schema = "_b int, x long, tag string"
+    try:
+        table = VersionedTable(f"{root}/tbl", "demo", "_b", n_buckets=2)
+        table.publish(spark.createDataFrame([], schema))
+        real = os.path.realpath(f"{root}/tbl")
+        assert not [e for e in os.listdir(real) if "=" in e]
+        got, jobs = _job_ids(spark, "vt0", lambda: table.read(spark).schema)
+        assert jobs == []
+        assert got == spark.read.parquet(f"{root}/tbl").schema
+        assert got.names == ["_b", "x", "tag"]
+        wide = spark.range(40).repartition(8).selectExpr(
+            "CAST(id % 2 AS INT) AS _b", "id AS x", "CAST(id AS STRING) AS tag"
+        )
+        table.publish(wide)
+        real = os.path.realpath(f"{root}/tbl")
+        for b in (0, 1):
+            assert len(_data_files(os.path.join(real, f"_b={b}"))) == 1
+        got = table.read(spark)
+        assert got.schema == spark.read.parquet(f"{root}/tbl").schema
+        assert got.schema.names == ["x", "tag", "_b"]
+        assert sorted(map(tuple, got.collect())) == sorted(
+            (i, str(i), i % 2) for i in range(40)
+        )
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_neardup_keyed_pass_boundaries_match_batch(spark):
+    """The keyed candidate pass keeps the batch operators' cuts exactly:
+    a pair with Jaccard exactly τ is kept and the next one below is
+    dropped, batch-internal and across batches; a pair ON the
+    size-ratio bound (|B| = τ·|A|) is kept and one just past it is
+    dropped; and a re-ingested doc with new text drops its stale pairs
+    and band rows. After every drain the pair set equals
+    ``dedup_minhash`` over the corpus as it stands."""
+    import shutil
+
+    from mevi_spark.operators.dedup import (
+        banded_keys,
+        dedup_minhash,
+        lsh_candidate_pairs,
+        minhash_frame,
+    )
+    from mevi_spark.streaming.incremental import incremental_neardup
+
+    def words(p, n, extra=()):
+        return " ".join([f"{p}w{i}" for i in range(n)] + list(extra))
+
+    mh = {"num_hashes": 12, "bands": 12, "threshold": 0.5}
+    # 6 shingles each, 4 shared: J = 4/8 = τ; 3 shared: J = 3/9 < τ
+    docs = {
+        1: words("a", 8), 2: words("a", 6, ["ax0", "ax1"]),
+        3: words("b", 8), 4: words("b", 5, ["bx0", "bx1", "bx2"]),
+        # B ⊂ A with |B| = τ·|A| (J = ratio = τ), and one shingle more
+        5: words("c", 14), 6: words("c", 8),
+        7: words("d", 15), 8: words("d", 8),
+        # batch-internal twin of the J = τ pair
+        11: words("e", 8), 12: words("e", 6, ["ex0", "ex1"]),
+    }
+    schema = "doc_id long, text string"
+    batches = [
+        [(i, docs[i]) for i in (1, 3, 5, 7)],
+        [(i, docs[i]) for i in (2, 4, 6, 8, 11, 12)],
+        [(1, words("z", 10))],  # doc 1 re-ingested with new text
+    ]
+
+    def batch_pairs(rows):
+        df = spark.createDataFrame(rows, schema)
+        return {
+            (r.id_a, r.id_b): r.jaccard
+            for r in dedup_minhash(df, **mh).collect()
+        }
+
+    full = [(i, docs[i]) for i in sorted(docs)]
+    want = batch_pairs(full)
+    assert want[(1, 2)] == want[(11, 12)] == want[(5, 6)] == 0.5
+    assert not {(3, 4), (7, 8)} & set(want)
+    # premise: the dropped pairs are candidates, cut only by the verify
+    sigs = minhash_frame(spark.createDataFrame(full, schema), "text", "doc_id", 12, 3)
+    cands = {
+        tuple(r) for r in lsh_candidate_pairs(sigs, bands=12, sig_len=12).collect()
+    }
+    assert {(3, 4), (7, 8), (1, 2), (5, 6), (11, 12)} <= cands
+
+    base = tempfile.mkdtemp(prefix="mevi_test_ndkp_")
+    corpus = {}
+    try:
+        for j, rows in enumerate(batches):
+            spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+                f"{base}/in/s{j:02d}"
+            )
+            incremental_neardup(
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(f"{base}/in/s*"),
+                f"{base}/out", f"{base}/ckpt", n_buckets=8, **mh,
+            ).awaitTermination()
+            corpus.update(dict(rows))
+            got = {
+                (r.id_a, r.id_b): r.jaccard
+                for r in spark.read.parquet(f"{base}/out/pairs").collect()
+            }
+            assert got == batch_pairs(sorted(corpus.items())), j
+        assert (1, 2) not in got and (11, 12) in got
+        new_keys = {
+            (r.band, r.key)
+            for r in banded_keys(
+                minhash_frame(
+                    spark.createDataFrame(batches[2], schema), "text", "doc_id", 12, 3
+                ),
+                bands=12, sig_len=12,
+            ).collect()
+        }
+        assert {
+            (r.band, r.key)
+            for r in spark.read.parquet(f"{base}/out/bands")
+            .filter(F.col("_id") == 1)
+            .collect()
+        } == new_keys
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_chunk_kept_incremental_first_owner_wins_and_copy_forward(spark):
     """Exact-substring index under ingest: a chunk's first-arrival
     owner survives later repeats; only fresh chunks' buckets rewrite
