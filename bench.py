@@ -33,6 +33,10 @@ Two passes, both reported (VERDICT r6 #3):
 ``value`` stays the cold total so round-over-round deltas in
 BENCH_r{N}.json compare the same protocol; ``warm_total`` /
 ``queries_warm`` carry the steady-state numbers.
+``codegen_compiles`` holds ``{"cold": n, "warm": n}``: the generated
+classes each pass compiled (Spark's ``CodegenMetrics``); the warm pass
+reuses every class the warm-up and the cold pass compiled, so its
+count is 0.
 """
 
 from __future__ import annotations
@@ -148,11 +152,17 @@ def setup_session():
     # Each distinct plan shape pays ~1-3 s of whole-stage-codegen
     # compile + JIT on its first execution in a JVM (measured r5); the
     # generated classes are cached by source, which depends on the plan
-    # shape, not the data. Running every headline query once at the
-    # tiny SF compiles each family's shapes, forks the Python-worker
-    # pool, and primes Arrow — the sf0.1 timed loop then measures
-    # execution. On a long-lived cluster this is the steady state;
-    # single-shot compile cost is a cold-start artifact of toy scale.
+    # shape, not the data. A pass over the headline set needs about 300
+    # classes, so they stay cached only because get_spark sizes the
+    # class cache to 1000 entries: under Spark's default of 100 each
+    # pass evicted and recompiled about 280 of them, and this warm-up
+    # bought no codegen at all. ``codegen_compiles`` in the output line
+    # counts the classes each timed pass compiled. Running every
+    # headline query once at the tiny SF compiles each family's shapes,
+    # forks the Python-worker pool, and primes Arrow — the sf0.1 timed
+    # loop then measures execution. On a long-lived cluster this is the
+    # steady state; single-shot compile cost is a cold-start artifact of
+    # toy scale.
     # sf0.01 (not sf0.001) as the default warm-up SF: codegen compiles
     # per shape either way, but tiered JIT only promotes the generated
     # loops to C2 with enough row iterations — at 500-row warmups the
@@ -209,11 +219,16 @@ def main() -> None:
         sf = sf_dir
 
     from mevi_spark.plans.retrieval import clear_session_caches
+    from mevi_spark.session import codegen_compiles
 
-    cold = run_pass(spark, qs, sf_dir)
-    clear_session_caches(spark)
-    warm = run_pass(spark, qs, sf_dir)
-    clear_session_caches(spark)
+    compiles = {}
+    timings = {}
+    for name in ("cold", "warm"):
+        before = codegen_compiles(spark)
+        timings[name] = run_pass(spark, qs, sf_dir)
+        clear_session_caches(spark)
+        compiles[name] = codegen_compiles(spark) - before
+    cold, warm = timings["cold"], timings["warm"]
 
     cold_total = round(sum(cold.values()), 3)
     warm_total = round(sum(warm.values()), 3)
@@ -226,6 +241,7 @@ def main() -> None:
                 "queries": cold,
                 "warm_total": warm_total,
                 "queries_warm": warm,
+                "codegen_compiles": compiles,
                 "sf": sf,
             }
         )

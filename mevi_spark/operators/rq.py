@@ -35,6 +35,8 @@ array folds the DuckDB oracle uses, so assignments match bit-for-bit.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, functions as F
 
 from mevi_spark.functions.vector import (
@@ -173,11 +175,60 @@ def entries_from_rows(rows) -> list[tuple[int, list[float], float]]:
     return entries
 
 
+# collected entries per codebook frame object whose rows cannot change;
+# the values hold no reference back to the frame, so a dropped frame
+# drops its entry
+_ENTRIES_BY_FRAME: "weakref.WeakKeyDictionary[DataFrame, list]" = (
+    weakref.WeakKeyDictionary()
+)
+# RDD classes whose partitions are data held by the driver or a
+# checkpoint, never re-read from an outside source
+_FIXED_RDDS = {"ParallelCollectionRDD", "LocalCheckpointRDD", "ReliableCheckpointRDD"}
+
+
+def _fixed_rows(df: DataFrame) -> bool:
+    """True when every collect of ``df`` returns the same rows: a
+    deterministic plan over data held in the plan itself (local rows,
+    ``range``) or in an RDD that reads no outside source. A plan over
+    files, tables or an RDD with a file input is not fixed — its rows
+    change when the files do. Reads plan and RDD metadata; starts no
+    job."""
+    plan = df._jdf.queryExecution().analyzed()
+    if not plan.deterministic():
+        return False
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        name = leaf.getClass().getSimpleName()
+        if name == "LogicalRDD":
+            stack = [leaf.rdd()]
+            while stack:
+                rdd = stack.pop()
+                deps = rdd.dependencies()
+                if deps.size() == 0:
+                    if rdd.getClass().getSimpleName() not in _FIXED_RDDS:
+                        return False
+                stack.extend(deps.apply(j).rdd() for j in range(deps.size()))
+        elif name not in ("LocalRelation", "Range", "OneRowRelation"):
+            return False
+    return True
+
+
 def centroid_entries(centroids: DataFrame) -> list[tuple[int, list[float], float]]:
     """Collect a K-row codebook to ``[(code, centroid, ‖c‖²)]`` sorted by
     code — the literal artifact behind the ``expr`` assignment path
-    (fold semantics in :func:`entries_from_rows`)."""
-    return entries_from_rows(centroids.select("code", "centroid").collect())
+    (fold semantics in :func:`entries_from_rows`).
+
+    A frame whose rows cannot change (:func:`_fixed_rows`) is collected
+    once per frame object: a maintainer handed the same codebook frame
+    on every call (``incremental_semdedup`` per drain) starts no job
+    after the first. Every other frame is collected on every call."""
+    entries = _ENTRIES_BY_FRAME.get(centroids)
+    if entries is None:
+        entries = entries_from_rows(centroids.select("code", "centroid").collect())
+        if _fixed_rows(centroids):
+            _ENTRIES_BY_FRAME[centroids] = entries
+    return entries
 
 
 def assign_nearest(

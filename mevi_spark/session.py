@@ -32,6 +32,23 @@ def get_spark(
     ``spark-submit --master``, ``$MASTER``, or an existing session), so
     the same code runs unchanged under a real cluster manager; absent
     both, it falls back to ``local[cpus]``.
+
+    Generated-class cache: ``spark.sql.codegen.cache.maxEntries`` is
+    1000, where Spark's default is 100. Spark keys each compiled
+    whole-stage-codegen class by its source and evicts the least
+    recently used one. One retrieval request (top-k, beam,
+    coarse-to-fine, fusion, eval) needs about 120 classes and one
+    ``bench.py`` pass over the headline queries about 300. At 100
+    entries most classes were evicted before their next use, so each
+    repeated request recompiled 84 classes with Janino and handed the
+    JIT new code again, and each bench pass about 280. 1000 holds the
+    bench working set with 3x headroom. The
+    tier-1 test suite, the widest mix one process runs, compiles 3,647
+    distinct classes (4,179 compiles at 1000 entries, so about 530
+    recompiles); a long-lived session serves far fewer shapes, and
+    sizing the cache to the suite would keep thousands of dead classes
+    alive. It is a static conf: it takes effect only when
+    this call creates the context, and ``spark.conf.set`` on it raises.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -75,9 +92,18 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("MEVI_SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes compiled so far in this JVM: Spark's
+    ``CodegenMetrics`` compilation-time histogram gains one sample per
+    Janino compile, i.e. per miss of the generated-class cache."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -96,14 +96,50 @@ def spread_small_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     not). Use it only where the per-row expression work dominates the
     stage.
 
-    Scale guard: the check reads the PLANNED split count (no job). At
-    production scale the file listing exceeds parallelism, the branch
-    is not taken, and no exchange enters the plan.
+    Scale guard: the check reads the PLANNED split count
+    (:func:`planned_partitions`: no job, no codegen). At production
+    scale the file listing exceeds parallelism, the branch is not
+    taken, and no exchange enters the plan.
     """
     width = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < width:
+    n = planned_partitions(df)
+    if n is None:
+        # a shape the plan walk does not model: under AQE this runs
+        # the input's shuffle stages to learn their coalesced width
+        n = df.rdd.getNumPartitions()
+    if n < width:
         return df.repartition(width)
     return df
+
+
+def planned_partitions(df: DataFrame) -> int | None:
+    """The partition count ``df.rdd`` would report, read from the
+    physical plan without building the RDD (which, under AQE, runs
+    every shuffle stage of the input, and always compiles its
+    generated code). Modelled: file scans (their planned splits),
+    projections and filters over them, unions of those (the sum), and
+    a repartition to an explicit count (AQE never coalesces it).
+    ``None`` for any other shape."""
+
+    def count(node, in_union: bool) -> int | None:
+        name = node.getClass().getSimpleName()
+        if name == "FileSourceScanExec":
+            return node.inputRDD().getNumPartitions()
+        if name in ("ProjectExec", "FilterExec"):
+            return count(node.child(), in_union)
+        if name == "UnionExec":
+            kids = node.children()
+            parts = [count(kids.apply(i), True) for i in range(kids.size())]
+            return None if None in parts else sum(parts)
+        if (
+            name == "ShuffleExchangeExec"
+            and not in_union
+            and node.shuffleOrigin().toString() == "REPARTITION_BY_NUM"
+        ):
+            return node.outputPartitioning().numPartitions()
+        return None
+
+    return count(df._jdf.queryExecution().sparkPlan(), False)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -39,3 +39,6 @@ def test_bench_harness_runs_and_emits_contract_json():
 
     assert set(out["queries"]) == set(HEADLINE)
     assert all(v >= 0 for v in out["queries"].values())
+    # the warm pass reuses every generated class the cold pass compiled
+    assert set(out["codegen_compiles"]) == {"cold", "warm"}
+    assert out["codegen_compiles"]["warm"] == 0

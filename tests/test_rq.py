@@ -3,6 +3,8 @@ fixture (planted label clusters, FIXTURES.md)."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -252,3 +254,72 @@ def test_assign_topr_ranks_by_distance_and_nests(spark, sf_dir):
         want = sorted(codes, key=lambda c: (d[c], c))[:3]
         assert [c for _rk, c in sorted(got3[vid])] == want, vid
         assert sorted(got2[vid]) == sorted(got3[vid])[:2], vid
+
+
+def _jobs_of(spark, group, fn):
+    """``fn()``'s result and the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("idle", "idle")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_centroid_entries_collects_a_fixed_codebook_once(spark):
+    """A codebook frame over local rows is collected once per frame
+    object: the second call starts no Spark job and returns the same
+    entries. A new frame with other rows is collected anew."""
+    from mevi_spark.operators.rq import centroid_entries
+
+    rows = [(1, [0.5, 2.0]), (0, [1.0, -1.0])]
+    cents = spark.createDataFrame(rows, "code long, centroid array<double>")
+    first, n_first = _jobs_of(spark, "cb-fixed-1", lambda: centroid_entries(cents))
+    again, n_again = _jobs_of(spark, "cb-fixed-2", lambda: centroid_entries(cents))
+    assert first == [(0, [1.0, -1.0], 2.0), (1, [0.5, 2.0], 4.25)]
+    assert n_first > 0 and n_again == 0
+    assert again == first
+    other = spark.createDataFrame(
+        [(0, [3.0, 0.0])], "code long, centroid array<double>"
+    )
+    assert centroid_entries(other) == [(0, [3.0, 0.0], 9.0)]
+    # a derived frame over the same local rows is fixed too
+    derived = cents.filter(F.col("code") == 0)
+    centroid_entries(derived)
+    _, n_derived = _jobs_of(spark, "cb-fixed-3", lambda: centroid_entries(derived))
+    assert n_derived == 0
+
+
+def test_centroid_entries_rereads_a_file_backed_codebook(spark, tmp_path):
+    """A codebook frame over files is collected on every call: after its
+    file is rewritten in place, the same frame object returns the new
+    rows, never the entries of its first collect."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mevi_spark.operators.rq import centroid_entries
+
+    path = tmp_path / "codebook"
+    path.mkdir()
+    part = str(path / "part-0.parquet")
+
+    def write(vec):
+        table = pa.table(
+            {"code": pa.array([0], pa.int64()),
+             "centroid": pa.array([vec], pa.list_(pa.float64()))}
+        )
+        pq.write_table(
+            table, part, compression="NONE", use_dictionary=False,
+            write_statistics=False,
+        )
+        return os.path.getsize(part)
+
+    size = write([1.0, 2.0])
+    cents = spark.read.parquet(str(path))
+    assert centroid_entries(cents) == [(0, [1.0, 2.0], 5.0)]
+    # same byte size, so the frame's cached listing still matches
+    assert write([3.0, 0.5]) == size
+    got, n_jobs = _jobs_of(spark, "cb-file", lambda: centroid_entries(cents))
+    assert n_jobs > 0
+    assert got == [(0, [3.0, 0.5], 9.25)]

@@ -114,3 +114,43 @@ def test_salted_ops_accept_unhashable_payloads(spark):
         ).collect()
     }
     assert got == {(0, 34), (1, 33), (2, 33)}
+
+
+def test_spread_small_scan_reads_planned_width_without_a_job(spark, sf_dir):
+    """The spread check reads the partition count ``df.rdd`` would
+    report from the plan, for every shape the pipeline passes it (a
+    scan, a projected or filtered scan, a union of those, a
+    repartition to a count), and starts no Spark job, even under AQE
+    on an input that ends in a shuffle. Its decision is unchanged."""
+    from mevi_spark.sources.io import planned_partitions, spread_small_scan
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    narrow = docs.select("doc_id", "text").filter(F.col("doc_id") % 7 == 0)
+    union = docs.select("doc_id", "text").unionByName(narrow)
+    shapes = {
+        "scan": docs,
+        "narrow": narrow,
+        "union": union,
+        "repartition": union.repartition(3),
+        "spread": spread_small_scan(spark, union),
+    }
+    width = spark.sparkContext.defaultParallelism
+    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    sc = spark.sparkContext
+    try:
+        for name, df in shapes.items():
+            group = f"spread-check-{name}"
+            sc.setJobGroup(group, group)
+            try:
+                planned = planned_partitions(df)
+                out = spread_small_scan(spark, df)
+            finally:
+                sc.setJobGroup("idle", "idle")
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+            assert planned == df.rdd.getNumPartitions(), name
+            assert (out is df) == (planned >= width), name
+        # a shape the walk does not model falls back to the RDD
+        assert planned_partitions(docs.groupBy("source").count()) is None
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
